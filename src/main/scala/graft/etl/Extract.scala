@@ -1,116 +1,41 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StringType
 
-import graft.functions.Functions.{fuzzyLookup, normalizeName}
+import graft.functions.Functions.fuzzyLookup
 import graft.ops.Relational.ensureColumn
 
 /** Sheet-shaped CSV extraction (SURVEY.md §2.1 S2–S6 + §2.2 N1–N7):
   * positional header rows, hostile-header normalization, ragged rows,
   * empty-cell → null.
   *
-  * Scale note: sheet-like inputs are small by nature (human-edited),
-  * so the header row is fetched driver-side; the data rows remain a
-  * distributed plan. Big data enters the engine via parquet
-  * (graft.tables.Tables), not here.
+  * Scale note: sheet-like inputs are small by nature (human-edited).
+  * The `graft.sheet` source reads the header row on the driver at
+  * planning time and scans the data rows once, in a single partition;
+  * no Spark job runs until a consumer forces the frame. Big data enters
+  * the engine via parquet (graft.tables.Tables), not here.
   */
 object Extract {
 
-  /** Quote-aware split of one CSV line — used only to size the schema
-    * from the HEADER line driver-side (values still flow through
-    * Spark's CSV parser). Shared with the `graft.sheet` DSv2 source.
-    */
-  private[etl] def splitCsvLine(line: String): Seq[String] =
-    graft.sources.SheetCsv.splitLine(line)
-
   /** S5/S2–S4: read a CSV whose header is at 1-based row `headerRow`
     * (reference sheets: row 2 / 3 / 6 — etl/extract.py:172-180,
-    * 222-230, 271-279); all columns string-typed, empty cells null.
-    * Headers are trimmed (N4), empty headers become `col_{i}` and
-    * duplicates get a `_N` suffix (N5, etl/extract.py:49-62); fully
-    * empty rows are dropped (W4, etl/extract.py:98-100).
-    *
-    * The column count comes from the HEADER row, not the first file
-    * row: a pre-header title row shorter than the header (e.g. "TITLE"
-    * with no trailing commas) must not truncate the data columns —
-    * pandas `read_csv(header=N)` sizes from the header row too.
+    * 222-230, 271-279) through the `graft.sheet` source: columns sized
+    * and named from the header row (N4 trim, N5 unique-ify, empty
+    * header → `col_{i}`; etl/extract.py:49-62), ragged rows null-padded,
+    * empty cells null, fully empty rows dropped (W4,
+    * etl/extract.py:98-100).
     *
     * `inferNumeric` (F13, etl/extract.py:82-93): opt-in per-column type
     * inference — a column whose non-null values all match `-?\d+` is
-    * cast LONG; all matching int-or-decimal → DOUBLE; else stays string.
+    * LONG; all matching int-or-decimal → DOUBLE; else stays string.
     */
   def readSheet(spark: SparkSession, path: String, headerRow: Int,
-                inferNumeric: Boolean = false): DataFrame = {
-    // ONE text scan provides both the header and the data rows.
-    // Spark's CSV reader silently drops truly blank lines, so indexing
-    // CSV-parsed rows by a text-scan line number desynchronizes the two
-    // whenever a pre-header filler line is EMPTY (not ',,,,'): each
-    // blank line before the header would silently swallow one data row.
-    // Parsing the text lines with the same splitter the graft.sheet
-    // source uses keeps one line numbering and one CSV dialect across
-    // both ingestion paths. zipWithIndex preserves file/split order —
-    // the positional contract "row N is the header" only exists there.
-    val lines = spark.read.text(path).rdd
-      .map(_.getString(0)).zipWithIndex()
-    val headerLine = lines
-      .filter(_._2 == headerRow - 1)
-      .map(_._1)
-      .collect()
-      .headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"$path has fewer than $headerRow rows — no header row"))
-    val headerCells = splitCsvLine(headerLine)
-    // the column count comes from the HEADER row: shorter rows (title
-    // rows, ragged data) null-pad, wider rows truncate
-    val n = headerCells.length
-
-    // N4 trim + N5 unique-ify + empty header → col_{i}
-    val names = graft.sources.SheetCsv.uniqueNames(headerCells)
-
-    val schema = StructType(names.map(StructField(_, StringType, nullable = true)))
-    val dataRows = lines
-      .filter(_._2 >= headerRow)
-      .map { case (line, _) =>
-        val cells = splitCsvLine(line)
-        // empty cell (quoted or not) → null: Spark CSV's nullValue=""
-        // default (F14), same rule as the graft.sheet source
-        Row.fromSeq((0 until n).map(i =>
-          if (i >= cells.length || cells(i).isEmpty) null else cells(i)))
-      }
-    val df = spark.createDataFrame(dataRows, schema)
-    // W4: drop rows where every cell is null (CSV already maps empty
-    // unquoted cells to null — F14)
-    val sheet = df.na.drop("all")
-    if (inferNumeric) inferNumericColumns(sheet) else sheet
-  }
-
-  /** F13 ingest-time numeric inference (etl/transform counterpart:
-    * etl/extract.py:82-93). One aggregate pass over the sheet computes
-    * per-column non-null / int-shaped / decimal-shaped counts; the
-    * single result row is collected driver-side (sheet-scale by
-    * contract — big data enters via parquet).
-    */
-  private[etl] def inferNumericColumns(df: DataFrame): DataFrame = {
-    if (df.columns.isEmpty) return df
-    // shape regexes + decision rule shared with the graft.sheet source
-    // (graft.sources.SheetCsv) so the two ingestion paths cannot drift
-    val aggs = df.columns.zipWithIndex.flatMap { case (c, i) => Seq(
-      count(col(c)).as(s"n_$i"),
-      count(when(col(c).rlike(graft.sources.SheetCsv.IntRe), 1)).as(s"i_$i"),
-      count(when(col(c).rlike(graft.sources.SheetCsv.DecRe), 1)).as(s"d_$i")) }
-    val r = df.agg(aggs.head, aggs.tail.toIndexedSeq: _*).collect()(0)
-    val casts = df.columns.zipWithIndex.map { case (c, i) =>
-      graft.sources.SheetCsv.inferredType(r.getAs[Long](s"n_$i"),
-        r.getAs[Long](s"i_$i"), r.getAs[Long](s"d_$i")) match {
-        case LongType   => col(c).cast(LongType).as(c)
-        case DoubleType => col(c).cast(DoubleType).as(c)
-        case _          => col(c)
-      }
-    }
-    df.select(casts.toIndexedSeq: _*)
-  }
+                inferNumeric: Boolean = false): DataFrame =
+    spark.read.format("graft.sheet")
+      .option("headerRow", headerRow)
+      .option("inferNumeric", inferNumeric)
+      .load(path)
 
   /** N2/N3 canonical rename (etl/extract.py:136-155): fuzzy-match the
     * known hostile header variants onto canonical names.

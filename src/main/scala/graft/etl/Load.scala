@@ -2,7 +2,9 @@ package graft.etl
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.util.Try
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Relational.{antiJoin, dedupKeepLast, dedupKeepLastPositional, requireNonNull, semiJoin}
@@ -167,8 +169,13 @@ object Load {
     * can move the line (0 disables the fast path entirely).
     */
   private val localReadMaxBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_LOCAL_READ_MAX_BYTES",
-      (8L * 1024 * 1024).toString).toLong
+    parseLocalReadMaxBytes(sys.env.get("SPARK_GRAFT_LOCAL_READ_MAX_BYTES"))
+
+  /** A malformed override falls back to the 8 MiB default instead of
+    * failing `Load`'s initialization (and with it every warehouse verb).
+    */
+  private[graft] def parseLocalReadMaxBytes(raw: Option[String]): Long =
+    raw.flatMap(v => Try(v.trim.toLong).toOption).getOrElse(8L * 1024 * 1024)
 
   def readTable(spark: SparkSession, dir: String): Option[DataFrame] = {
     recoverSwapGated(spark, dir)
@@ -200,22 +207,25 @@ object Load {
     // merging (etl/load.py:50-55). Without this, a batch carrying
     // duplicate PKs would seed the warehouse with duplicate rows on the
     // bootstrap write, and later merges would pick a nondeterministic
-    // winner among them (__prio ties). NOTE: "last" is positional
+    // winner among them. Both rules ride ONE window (one shuffle):
+    // incoming rows (__prio 1) beat existing ones (__prio 0), and among
+    // incoming rows the last one wins. NOTE: "last" is positional
     // (monotonically_increasing_id), meaningful only for frames whose
     // physical row order carries arrival order — fresh file scans, a
     // foreachBatch micro-batch. For a post-shuffle frame the winner
     // among intra-batch duplicates is partitioning-dependent; such
     // callers should pre-dedupe with an explicit ordering column via
     // dedupKeepLast before calling upsert.
-    val incoming = dedupKeepLastPositional(df, Seq(pk)).withColumn("__prio", lit(1))
-    val merged = readTable(spark, dir) match {
+    val incoming = df.withColumn("__prio", lit(1))
+      .withColumn("__idx", monotonically_increasing_id())
+    val candidates = readTable(spark, dir) match {
       case Some(existing) =>
-        dedupKeepLast(
-          existing.withColumn("__prio", lit(0)).unionByName(incoming),
-          Seq(pk), Seq(col("__prio")))
-          .drop("__prio")
-      case None => incoming.drop("__prio")
+        existing.withColumn("__prio", lit(0)).withColumn("__idx", lit(0L))
+          .unionByName(incoming)
+      case None => incoming
     }
+    val merged = dedupKeepLast(candidates, Seq(pk),
+      Seq(col("__prio"), col("__idx"))).drop("__prio", "__idx")
     swapIn(spark, merged, dir)
   }
 
@@ -620,31 +630,29 @@ object Load {
     * daily-incremental tables: each run appends into its own day
     * directories and a day-equality query prunes to one directory
     * instead of scanning the table.
+    *
+    * Reads `df` once for the duplicate-PK probe (when `pk` is set) and
+    * once for the write; returns the number of rows written.
     */
   def insert(spark: SparkSession, df: DataFrame, dir: String,
              pk: Option[String] = None,
              partitionDay: Option[String] = None): Long = {
-    // the incoming plan is consumed up to three times (dup probe, count,
-    // write) — persist so the upstream transforms run once. If the
-    // CALLER already persisted (wider fan-out than ours), leave their
-    // cache alone: an unconditional unpersist here would evict it.
-    val alreadyCached =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val cached = if (alreadyCached) df else df.persist()
-    try {
-      for (key <- pk; existing <- readTable(spark, dir)) {
-        val dups = semiJoin(cached.select(col(key)), existing, Seq(key)).count()
-        if (dups > 0) throw new IllegalStateException(
-          s"insert into $dir aborted: $dups incoming rows duplicate existing PK $key")
-      }
-      val n = cached.count()
-      partitionDay match {
-        case Some(c) => cached.withColumn("day", col(c))
-          .write.mode("append").partitionBy("day").parquet(dir)
-        case None => cached.write.mode("append").parquet(dir)
-      }
-      n
-    } finally if (!alreadyCached) cached.unpersist()
+    for (key <- pk; existing <- readTable(spark, dir)) {
+      val dups = semiJoin(df.select(col(key)), existing, Seq(key)).count()
+      if (dups > 0) throw new IllegalStateException(
+        s"insert into $dir aborted: $dups incoming rows duplicate existing PK $key")
+    }
+    // the row count rides the write itself (Observation) — no count job
+    // and no cache of the batch; a caller whose batch has a wider
+    // fan-out than probe + write persists it upstream
+    val obs = new Observation()
+    val observed = df.observe(obs, count(lit(1)).as("rows"))
+    partitionDay match {
+      case Some(c) => observed.withColumn("day", col(c))
+        .write.mode("append").partitionBy("day").parquet(dir)
+      case None => observed.write.mode("append").parquet(dir)
+    }
+    obs.get("rows").asInstanceOf[Long]
   }
 
   /** W3 required-non-null split: quarantine rows with nulls in required

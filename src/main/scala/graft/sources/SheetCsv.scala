@@ -3,10 +3,10 @@ package graft.sources
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType,
   StringType}
 
-/** Line-level CSV helpers shared by `graft.etl.Extract` (DataFrame
-  * path) and the `graft.sheet` DataSourceV2. Sheets are line-oriented
-  * by the positional-header contract ("the header IS row N"), so
-  * records never span lines.
+/** Line-level CSV helpers of the `graft.sheet` DataSourceV2 (which
+  * `graft.etl.Extract.readSheet` reads through). Sheets are
+  * line-oriented by the positional-header contract ("the header IS
+  * row N"), so records never span lines.
   */
 object SheetCsv {
 
@@ -67,9 +67,8 @@ object SheetCsv {
     }
   }
 
-  /** F13 numeric-inference shapes (reference etl/extract.py:82-93) —
-    * the single source of truth for both `Extract.inferNumericColumns`
-    * and the `graft.sheet` source's schema inference.
+  /** F13 numeric-inference shapes (reference etl/extract.py:82-93)
+    * used by the `graft.sheet` source's schema inference.
     */
   val IntRe = "^-?\\d+$"
   val DecRe = "^-?\\d+\\.\\d+$"

@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     .option("inferNumeric", true)      // F13 typing; default false
   *     .load("/path/export.csv")
   *
-  * Semantics match `Extract.readSheet`: schema sized and named from
+  * `Extract.readSheet` is this source. Schema sized and named from
   * the HEADER row (trim, empty → col_{i}, duplicates suffixed), empty
   * cells read as null whether quoted or not (matching Spark CSV's
   * nullValue="" default — pinned by SheetSourceSpec's quoted-empty
@@ -96,8 +96,7 @@ object SheetDataSource {
   /** Driver-side: read the header line for names/width; with
     * `inferNumeric` (F13, reference etl/extract.py:82-93) also scan the
     * data rows — sheets are small by contract — and type columns by
-    * `SheetCsv.inferredType` (the same rules as
-    * `Extract.inferNumericColumns`).
+    * `SheetCsv.inferredType`.
     */
   private[sources] def schemaFor(options: CaseInsensitiveStringMap): StructType = {
     val path = new Path(pathOf(options))

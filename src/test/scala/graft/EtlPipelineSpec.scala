@@ -132,6 +132,65 @@ class EtlPipelineSpec extends SparkSpec {
     assert(expected > 0 && oneDay.count() == expected)
   }
 
+  test("zero valid enrolments: regular pagos skip the J2 semi-join") {
+    // the reference's skip-if-empty quirk (etl/pipeline.py:194): a day
+    // whose matriculas all fail W2/J4 passes its regular payments on
+    // unfiltered — only the J5 FK check against the warehouse applies
+    val r = Files.createTempDirectory("graft_etl_nomat").toString
+    val mat = Files.readString(Paths.get(s"$FixtureDir/raw_matriculas.csv"))
+      .split("\n").toSeq
+      .filterNot(_.contains(",M-001,")) // 11/8 keeps only M-002 (non-P), M-004 (orphan)
+    write(s"$r/raw_matriculas.csv", mat)
+    write(s"$r/raw_pagos.csv", Seq(
+      "PAGOS REGULARES,,,,,", ",,,,,", ",,,,,", ",,,,,", ",,,,,",
+      "Marca temporal,Código de matrícula,Monto de Pago,Método de Pago,fecha de pago,Encargado de Registro",
+      "11/8/2026 09:10:00,M-003,70.00,BCP,11/8/2026,B. Ramos",
+      "11/8/2026 10:30:00,M-009,50.00,BANCO DE CHILE,11/8/2026,B. Ramos",
+      "10/8/2026 09:00:00,M-001,99.00,BCP,10/8/2026,B. Ramos"))
+    val paths = fixtures(r).copy(
+      rawMatriculas = s"$r/raw_matriculas.csv", rawPagos = s"$r/raw_pagos.csv")
+    val day1 = Pipeline.run(spark, paths, LocalDate.of(2026, 8, 10))
+    assert(day1.matriculas == 1 && day1.pagos == 1) // M-003; J2 drops M-001
+    val day2 = Pipeline.run(spark, paths, LocalDate.of(2026, 8, 11))
+    assert(day2.matriculas == 0)
+    // J2 skipped: M-003's payment (enrolled the day before) lands; the
+    // orphan M-009 is quarantined by J5 instead of dropped by J2
+    assert(day2.pagos == 1)
+    val landed = spark.read.parquet(s"$r/warehouse/pagos")
+      .filter(col("day") === "2026-08-11").collect()
+    assert(landed.map(p => (p.getAs[String]("codigo_matricula"),
+      p.getAs[Double]("monto_pago"))).toSeq == Seq(("M-003", 70.0)))
+    val fkQ = spark.read.option("header", "true").csv(s"$r/quarantine/pagos_fk")
+      .collect().map(_.getAs[String]("codigo_matricula")).toSeq
+    assert(fkQ == Seq("M-009"))
+  }
+
+  test("an aborted run releases every frame it persisted") {
+    // re-running a loaded day trips insert's duplicate-PK guard midway
+    // through the run; the frames persisted before it must not leak
+    val r = Files.createTempDirectory("graft_etl_abort").toString
+    Pipeline.run(spark, fixtures(r), LocalDate.of(2026, 8, 11))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalStateException] {
+      Pipeline.run(spark, fixtures(r), LocalDate.of(2026, 8, 11))
+    }
+    assert(e.getMessage.contains("duplicate existing PK"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
+
+  test("upsert: the last of two incoming rows beats the existing row on a shared PK") {
+    val dir = Files.createTempDirectory("graft_upsert_3way").toString
+    Load.upsert(spark, spark.createDataFrame(Seq(("K1", "existing"),
+      ("K2", "kept"))).toDF("pk", "v"), s"$dir/t", "pk")
+    val batch = spark.createDataFrame(Seq(("K1", "first"), ("K3", "new"),
+      ("K1", "second"))).toDF("pk", "v")
+    assert(Load.upsert(spark, batch, s"$dir/t", "pk") == 3)
+    val got = spark.read.parquet(s"$dir/t").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == Map("K1" -> "second", "K2" -> "kept", "K3" -> "new"))
+  }
+
   test("upsert: incoming batch with duplicate PKs is deduped keep-last") {
     // reference load() dedupes the incoming frame before merging
     // (etl/load.py:50-55) — both the bootstrap write and later merges

@@ -33,6 +33,24 @@ class LoadSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 3)
   }
 
+  test("insert of an empty batch writes no rows and returns 0") {
+    val dir = tmp("ins_empty")
+    assert(Load.insert(spark, Seq(("k1", 1)).toDF("pk", "v"), dir,
+      pk = Some("pk")) == 1)
+    val empty = Seq.empty[(String, Int)].toDF("pk", "v")
+    assert(Load.insert(spark, empty, dir, pk = Some("pk")) == 0)
+    assert(spark.read.parquet(dir).count() == 1)
+  }
+
+  test("a malformed local-read size override falls back to the default") {
+    val default = 8L * 1024 * 1024
+    assert(Load.parseLocalReadMaxBytes(None) == default)
+    assert(Load.parseLocalReadMaxBytes(Some("8MB")) == default)
+    assert(Load.parseLocalReadMaxBytes(Some("")) == default)
+    assert(Load.parseLocalReadMaxBytes(Some(" 1024 ")) == 1024L)
+    assert(Load.parseLocalReadMaxBytes(Some("0")) == 0L)
+  }
+
   test("upsert bootstraps an absent table and is idempotent") {
     val dir = tmp("ups")
     val a = Seq(("k1", "v1"), ("k2", "v2")).toDF("pk", "v")

@@ -1,11 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.etl.Extract
-
-/** The graft.sheet DataSourceV2 against Extract.readSheet (same
-  * semantics, same fixtures) and its column-pruning pushdown.
+/** The graft.sheet DataSourceV2 (which `Extract.readSheet` reads
+  * through): pinned reads of the checked-in sheet fixtures, line-ending
+  * and pre-header variants, header naming, and column-pruning
+  * pushdown. The q45/q66 DuckDB oracles are the independent reference.
   */
 class SheetSourceSpec extends SparkSpec {
 
@@ -14,15 +17,107 @@ class SheetSourceSpec extends SparkSpec {
     ("raw_cursos.csv", 2), ("raw_estudiantes.csv", 2),
     ("raw_matriculas.csv", 3), ("raw_pagos.csv", 6))
 
-  test("source matches Extract.readSheet on every fixture") {
+  private val CursosCols = Seq("CÓDIGO_C", "NOMBRE_C", "I1",
+    "FECHA DE INICIO", "FECHA DE TERMINO", "PROFESOR", "HORARIOS")
+  private val EstudiantesCols = Seq("CODIGO_E", "NOMBRES_E", "APELLIDOS_E",
+    "CORREO_E", "NUMERO_E", "GÉNERO_E", "RED DE CONTACTO_E",
+    "GRADO DE INSTRUCCIÓN_E")
+  private val MatriculasCols = Seq("Marca temporal", "Código de matrícula",
+    "Cursos de matrícula", "num cursos", "Fecha de pago de la primera cuota",
+    "Condición del alumno", "Código de estudiante FINAL", "Monto de Pago",
+    "Primera Cuota", "Método de Pago", "Moneda", "Encargado de Registro")
+  private val PagosCols = Seq("Marca temporal", "Código de matrícula",
+    "Monto de Pago", "Método de Pago", "fecha de pago",
+    "Encargado de Registro")
+
+  /** Expected read of a fixture: column names, the columns
+    * `inferNumeric` types (all others string), row count, and the
+    * order-free checksum `sum(xxhash64(row))`. Recorded from the
+    * text-scan reader that preceded this source; CRLF and
+    * blank-line-prefixed copies of each fixture recorded the same.
+    */
+  private case class Pinned(cols: Seq[String], typed: Map[String, String],
+                            rows: Long, checksum: BigDecimal)
+
+  private val pins: Map[(String, Boolean), Pinned] = Map(
+    ("raw_cursos.csv", false) ->
+      Pinned(CursosCols, Map.empty, 3, BigDecimal("4416256487597943366")),
+    ("raw_cursos.csv", true) ->
+      Pinned(CursosCols, Map("I1" -> "bigint"), 3,
+        BigDecimal("-10614285838229838096")),
+    ("raw_estudiantes.csv", false) ->
+      Pinned(EstudiantesCols, Map.empty, 3,
+        BigDecimal("-11686115995900208852")),
+    ("raw_estudiantes.csv", true) ->
+      Pinned(EstudiantesCols, Map.empty, 3,
+        BigDecimal("-11686115995900208852")),
+    ("raw_matriculas.csv", false) ->
+      Pinned(MatriculasCols, Map.empty, 5, BigDecimal("5451464863840061354")),
+    ("raw_matriculas.csv", true) ->
+      Pinned(MatriculasCols,
+        Map("num cursos" -> "bigint", "Primera Cuota" -> "double"), 5,
+        BigDecimal("4945429875022768061")),
+    ("raw_pagos.csv", false) ->
+      Pinned(PagosCols, Map.empty, 5, BigDecimal("-5554425835094702021")),
+    ("raw_pagos.csv", true) ->
+      Pinned(PagosCols, Map("Monto de Pago" -> "double"), 5,
+        BigDecimal("13439250806321711309")))
+
+  private def sheet(path: String, headerRow: Int, infer: Boolean): DataFrame =
+    spark.read.format("graft.sheet").option("headerRow", headerRow)
+      .option("inferNumeric", infer).load(path)
+
+  private def assertPinned(df: DataFrame, pin: Pinned, what: String): Unit = {
+    val schema = df.schema.fields.map(f => f.name -> f.dataType.simpleString)
+    assert(schema.toSeq ==
+      pin.cols.map(c => c -> pin.typed.getOrElse(c, "string")), s"$what schema")
+    val r = df.agg(count(lit(1)),
+      sum(xxhash64(df.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
+        .cast("decimal(38,0)"))).collect()(0)
+    assert(r.getLong(0) == pin.rows, s"$what row count")
+    assert(BigDecimal(r.getDecimal(1)) == pin.checksum, s"$what checksum")
+  }
+
+  /** Every fixture × inferNumeric, with the file's text rewritten by
+    * `variant` (and the header row moved by `shift`).
+    */
+  private def checkFixtures(infer: Boolean, tag: String, shift: Int)
+                           (variant: String => String): Unit = {
+    val dir = Files.createTempDirectory(s"sheet_$tag")
     headerRows.foreach { case (f, h) =>
-      val viaSource = spark.read.format("graft.sheet")
-        .option("headerRow", h).load(s"$fixtures/$f")
-      val viaExtract = Extract.readSheet(spark, s"$fixtures/$f", h)
-      assert(viaSource.schema == viaExtract.schema, s"$f schema")
-      assert(viaSource.exceptAll(viaExtract).isEmpty &&
-        viaExtract.exceptAll(viaSource).isEmpty, s"$f rows")
+      val text = Files.readString(Paths.get(s"$fixtures/$f"))
+      val p = dir.resolve(f)
+      Files.writeString(p, variant(text))
+      assertPinned(sheet(p.toString, h + shift, infer), pins((f, infer)),
+        s"$tag $f inferNumeric=$infer")
     }
+  }
+
+  test("every fixture reads to its pinned schema, row count and checksum") {
+    headerRows.foreach { case (f, h) =>
+      assertPinned(sheet(s"$fixtures/$f", h, infer = false),
+        pins((f, false)), f)
+      // Extract.readSheet is the same source behind a call
+      assertPinned(graft.etl.Extract.readSheet(spark, s"$fixtures/$f", h),
+        pins((f, false)), s"readSheet $f")
+    }
+  }
+
+  test("inferNumeric fixtures read to their pinned schema, row count and checksum") {
+    headerRows.foreach { case (f, h) =>
+      assertPinned(sheet(s"$fixtures/$f", h, infer = true),
+        pins((f, true)), f)
+    }
+  }
+
+  test("CRLF line endings read exactly like LF") {
+    for (infer <- Seq(false, true))
+      checkFixtures(infer, "crlf", shift = 0)(_.replace("\n", "\r\n"))
+  }
+
+  test("a blank line before the header moves only the header row") {
+    for (infer <- Seq(false, true))
+      checkFixtures(infer, "blank", shift = 1)("\n" + _)
   }
 
   test("header row sizes the schema even after a short title row") {
@@ -59,19 +154,6 @@ class SheetSourceSpec extends SparkSpec {
       Seq("P101", "P101", "P102"))
   }
 
-  test("inferNumeric types columns like readSheet(inferNumeric=true)") {
-    headerRows.foreach { case (f, h) =>
-      val viaSource = spark.read.format("graft.sheet")
-        .option("headerRow", h).option("inferNumeric", true)
-        .load(s"$fixtures/$f")
-      val viaExtract = Extract.readSheet(spark, s"$fixtures/$f", h,
-        inferNumeric = true)
-      assert(viaSource.schema == viaExtract.schema, s"$f schema")
-      assert(viaSource.exceptAll(viaExtract).isEmpty &&
-        viaExtract.exceptAll(viaSource).isEmpty, s"$f rows")
-    }
-  }
-
   test("quoted empty cells match the Spark CSV reader's semantics") {
     val dir = java.nio.file.Files.createTempDirectory("sheet_src3")
     val p = dir.resolve("quoted.csv")
@@ -80,11 +162,14 @@ class SheetSourceSpec extends SparkSpec {
     java.nio.file.Files.writeString(p,
       "a,b\n\"\",\"\"\n,\ny,\"\"\n")
     val viaSource = spark.read.format("graft.sheet").load(p.toString)
-    val viaExtract = Extract.readSheet(spark, p.toString, 1)
-    assert(viaSource.schema == viaExtract.schema)
-    assert(viaSource.exceptAll(viaExtract).isEmpty &&
-      viaExtract.exceptAll(viaSource).isEmpty,
-      s"source=${viaSource.collect().toSeq} extract=${viaExtract.collect().toSeq}")
+    // Spark's CSV reader nulls quoted and unquoted empties alike; the
+    // sheet contract then drops the fully empty rows (W4)
+    val viaCsv = spark.read.option("header", "true").csv(p.toString)
+      .na.drop("all")
+    assert(viaSource.schema == viaCsv.schema)
+    val expected = Seq(org.apache.spark.sql.Row("y", null))
+    assert(viaSource.collect().toSeq == expected)
+    assert(viaCsv.collect().toSeq == expected)
   }
 
   test("inferNumeric LONG overflow falls back to null like a cast") {
