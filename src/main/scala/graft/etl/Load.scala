@@ -444,13 +444,6 @@ object Load {
     })
   }
 
-  /** Deterministic bucket id for [[upsertBucketed]]'s layout: a PK
-    * always lands in the same bucket, so PK-merge within touched
-    * buckets is globally correct.
-    */
-  private def bucketOf(pk: Column, buckets: Int): Column =
-    pmod(xxhash64(pk), lit(buckets.toLong)).cast("int")
-
   /** Marker file recording the bucket count a table was laid out with:
     * a merge computing bucket ids under a DIFFERENT count would scope
     * to the wrong directories and duplicate PKs. Underscore-prefixed so
@@ -483,20 +476,9 @@ object Load {
     * when the table doesn't exist yet.
     */
   def upsertBucketed(spark: SparkSession, df: DataFrame, dir: String,
-                     pk: String, buckets: Int): Long = {
-    require(buckets > 0, "buckets must be positive")
-    if (tableExists(spark, dir)) checkBucketLayout(spark, dir, buckets)
-    val incoming = dedupKeepLastPositional(df, Seq(pk))
-      .withColumn("__bucket", bucketOf(col(pk), buckets))
-    scopedMerge(spark, incoming, dir, "__bucket", {
-      case (Some(ex), inc) =>
-        dedupKeepLast(
-          ex.withColumn("__prio", lit(0))
-            .unionByName(inc.withColumn("__prio", lit(1))),
-          Seq(pk), Seq(col("__prio"))).drop("__prio")
-      case (None, inc) => inc
-    }, bootstrapFiles = Map(BucketMarker -> buckets.toString))
-  }
+                     pk: String, buckets: Int): Long =
+    upsertKeyBucketed(spark, df, dir, pk = Seq(pk), keyCols = Seq(pk),
+      buckets)
 
   /** [[upsertBucketed]] generalized to a LOOKUP-KEY bucket layout: rows
     * land in `__bucket = xxhash64(keyCols) mod buckets` while merge
@@ -548,7 +530,7 @@ object Load {
     validateCdcOps(changes, opCol)
     if (tableExists(spark, dir)) checkBucketLayout(spark, dir, buckets)
     val lastPerKey = dedupKeepLastPositional(changes, Seq(pk))
-      .withColumn("__bucket", bucketOf(col(pk), buckets))
+      .withColumn("__bucket", keyBucket(Seq(col(pk)), buckets))
     scopedMerge(spark, lastPerKey, dir, "__bucket", { (exOpt, inc) =>
       val upserts = inc.filter(lower(col(opCol)) =!= "d").drop(opCol)
       exOpt match {

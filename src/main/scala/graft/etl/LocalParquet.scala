@@ -96,27 +96,6 @@ private[graft] object LocalParquet {
     }.sum
   }
 
-  /** Per-`partCol=`-subdirectory footer row counts of a partitioned
-    * tree — the driver-side form of
-    * `spark.read.parquet(tree).groupBy(partCol).count()`. Matching
-    * that aggregate, values with zero rows are omitted.
-    */
-  def partitionRowCounts(spark: SparkSession, tree: String,
-                         partCol: String): Seq[(Long, Long)] = {
-    val p = new Path(tree)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(s"$partCol="))
-      .map { st =>
-        (st.getPath.getName.stripPrefix(s"$partCol=").toLong,
-          rowCount(spark, st.getPath.toString))
-      }
-      .filter(_._2 > 0L)
-      .sortBy(_._1)
-  }
-
   // ---- schema subset ---------------------------------------------------
 
   /** Spark type of a parquet field within the supported subset, or

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.etl.{Load, WriterLease}
+import graft.ops.SegmentCompaction.live
 
 /** Incremental PQ/ADC index warehouse — the vector-side member of the
   * incremental warehouse family (corpus `CorpusIngest`, signature
@@ -27,7 +28,8 @@ import graft.etl.{Load, WriterLease}
   * last_batch — the exactly-once replay guard, swapped LAST — and
   * del_epoch, the [[delete]] commit point), `tombstones/epoch=E/`
   * (vec_id of logically deleted vectors; every read anti-joins
-  * epochs ≤ the committed del_epoch).
+  * epochs ≤ the committed del_epoch — the [[SegmentCompaction]]
+  * ledger).
   *
   * Scale: encode is a broadcast-centroid join plus two fused
   * expressions (PqCodes, PqReconNorm) — zero shuffles; the write
@@ -70,6 +72,13 @@ object AdcIngest {
       Pq.collectCodebook(cb), meta)
   }
 
+  /** The index generation tree: vec_id-keyed tombstones; rewrites
+    * cluster rows by coarse cluster so probe-routed reads touch
+    * contiguous runs.
+    */
+  private[ops] def tree(dir: String) = SegmentCompaction.Tree(dir, "index",
+    "vec_id", cluster = Seq("cluster_id"), sort = Seq("cluster_id", "vec_id"))
+
   private def writeGeneration(df: DataFrame, dir: String,
                               batchId: Long): Unit =
     df.withColumn("batch", lit(batchId))
@@ -77,33 +86,24 @@ object AdcIngest {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch").parquet(s"$dir/index")
 
-  /** Read-path crash heal, GATED on writer-lease liveness
-    * ([[graft.etl.WriterLease.liveHolder]] — the InvertedIndex
-    * .healForRead rationale): remnants under a LIVE lease are a
-    * writer's in-flight state, not a crash; a read path "healing"
-    * them could restore a directory the writer is mid-rename on
-    * (retrain's root swap, a purge's generation swap) or delete its
-    * staging. Covers the warehouse ROOT (a crashed [[retrain]]'s
-    * whole-root swap) and the index tree. Writers never use this:
-    * their heals run unconditionally INSIDE their own lease.
+  /** Read-path crash heal, GATED on writer-lease liveness (the
+    * [[SegmentCompaction.healForRead]] rationale): the warehouse ROOT
+    * (a crashed [[retrain]]'s whole-root swap), then the index tree.
+    * Writers never use this: their heals run unconditionally INSIDE
+    * their own lease.
     */
   private def healForRead(spark: SparkSession, dir: String): Unit =
     if (!WriterLease.liveHolder(spark, dir)) {
       Load.recoverSwap(spark, dir)
-      Load.recoverSwap(spark, s"$dir/index")
       SegmentCompaction.recover(spark, s"$dir/index")
     }
 
   /** Writer-side entry heal — unconditional, called INSIDE the held
     * lease: the root swap remnant first (a crashed retrain), then the
-    * index-tree remnants.
+    * index tree and its sibling tables.
     */
   private def healForWrite(spark: SparkSession, dir: String): Unit = {
     Load.recoverSwap(spark, dir)
-    // sibling-table swap remnants (codebooks, centroids, meta, …):
-    // readTable's heals are liveness-gated and therefore suppressed
-    // under THIS writer's own live lease — heal them here, inside it
-    Load.recoverTreeSwaps(spark, dir)
     // a publish that crashed between its swap and its marker delete
     // leaves the stage's _PUBLISH_AFTER in the live root — sweep it
     val strayMk = new org.apache.hadoop.fs.Path(dir, "_PUBLISH_AFTER")
@@ -113,8 +113,7 @@ object AdcIngest {
     // one still inside its window blocks mutations loudly (reads are
     // unaffected either way)
     publishRetrainGate(spark, dir)
-    Load.recoverSwap(spark, s"$dir/index")
-    SegmentCompaction.recover(spark, s"$dir/index")
+    SegmentCompaction.heal(spark, tree(dir))
   }
 
   private def retrainPendingPath(dir: String) =
@@ -240,20 +239,6 @@ object AdcIngest {
     ()
   }
 
-  /** Anti-join `df` out of the live tombstone set, or `df` untouched
-    * when the warehouse holds no deletes (delete-free indexes keep
-    * their exact pre-delete plans). Only epochs ≤ the COMMITTED
-    * del_epoch serve — a crashed [[delete]]'s half-landed epoch is
-    * inert. The tombstone side is |deletes|-bounded → broadcast.
-    */
-  private def liveVecs(spark: SparkSession, dir: String, epoch: Long)
-                      (df: DataFrame): DataFrame =
-    if (epoch <= 0L) df
-    else df.join(
-      broadcast(spark.read.parquet(s"$dir/tombstones")
-        .filter(col("epoch") <= epoch).select(col("vec_id"))),
-      Seq("vec_id"), "left_anti")
-
   /** Bootstrap the warehouse from the initial corpus (fully wipes
     * `dir` — generation zero): trains + persists k coarse centroids
     * and m×ks PQ codebooks, then lands the encode of ALL of `vecs` as
@@ -348,29 +333,17 @@ object AdcIngest {
     }
   }
 
-  /** Roll the index back to generation `toBatch`: reset the high-water
-    * mark, then delete every `batch > toBatch` generation — the vector
-    * twin of `CorpusIngest.rollback`, the recovery lever when a bad
-    * batch landed (and the fixture lever that lets a gate re-run the
-    * ingest lifecycle against a frozen bootstrap).
-    *
-    * Crash ordering: meta lands FIRST. A crash between the two steps
-    * then leaves generation dirs ABOVE the high-water mark — inert
-    * remnants that [[index]]/[[segmentCount]] filter out, the next
-    * [[rollback]] deletes on entry, and a later [[append]] of the same
-    * id dynamic-overwrites — never a meta that claims generations the
-    * tree no longer fully holds (the old delete-first order could
-    * crash into exactly that, and the strict contiguity check then
-    * misdiagnosed the half-finished rollback as a merged tree).
-    *
-    * Compaction awareness: under the [[SegmentCompaction]] coverage
-    * invariant (live dir I holds original batches [I, next live id −
-    * 1]), a rollback cut is legal iff it falls on a generation
-    * boundary — `toBatch + 1` must itself be a live dir (or the cut is
-    * a no-op at the high-water mark). A cut INSIDE a merged tree is
-    * refused: its files interleave rows from batches on both sides of
-    * the cut, so deletion-by-generation would be silent data
-    * corruption; rebuild from bootstrap instead.
+  /** Roll the index back to generation `toBatch` — the recovery lever
+    * when a bad batch landed, and the fixture lever that lets a gate
+    * re-run the ingest lifecycle against a frozen bootstrap — through
+    * the shared [[SegmentCompaction.rollback]] cut: the meta row lands
+    * FIRST, then every `batch > toBatch` generation goes. A crash
+    * between the two leaves generation dirs ABOVE the high-water mark
+    * — inert remnants that [[index]]/[[segmentCount]] filter out, the
+    * next [[rollback]] deletes on entry, and a later [[append]] of the
+    * same id dynamic-overwrites. A cut INSIDE a tree merged by
+    * compaction is refused (its files interleave rows from both sides
+    * of the cut); rebuild from bootstrap instead.
     */
   def rollback(spark: SparkSession, dir: String, toBatch: Long,
                retainMs: Long = 0L): Unit = {
@@ -390,123 +363,59 @@ object AdcIngest {
     require(last >= toBatch,
       s"AdcIngest.rollback: a concurrent rollback already cut below " +
         s"batch $toBatch (high-water mark now $last)")
-    // an unpublished retained merge may cover generations this cut
-    // deletes — discard (source gens still live) before restructuring
-    SegmentCompaction.discardPending(spark, s"$dir/index")
-    val p = new org.apache.hadoop.fs.Path(s"$dir/index")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def delete(b: Long): Unit = { fs.delete(
-      new org.apache.hadoop.fs.Path(s"$dir/index/batch=$b"), true); () }
-    val ids = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).toSet
-    // heal: dirs above the high-water mark are remnants of a prior
-    // rollback that crashed after its meta write — delete before
-    // validating coverage
-    ids.filter(_ > last).foreach(delete)
-    val live = ids.filter(_ <= last)
-    require(toBatch == last || live.contains(toBatch + 1),
-      s"AdcIngest.rollback: generation ${toBatch + 1} has been merged " +
-        "into an earlier tree by compaction — its files hold rows from " +
-        s"batches <= $toBatch too, so rolling back to $toBatch would " +
-        "corrupt them; rebuild from bootstrap instead")
-    // tombstones SURVIVE a rollback — it rewinds the INGEST stream,
-    // not the delete requests (a re-appended batch re-enters minus its
-    // tombstoned vectors, exactly the never-rolled-back state). The
-    // re-encode floor clamps to the cut: generations appended AFTER
-    // this rollback live under the current models, so cuts at or above
-    // the new floor stay exact
-    WriterLease.check(spark, lease)
-    writeMeta(spark, dir, toBatch, epochR, modelEpR,
-      math.min(floorR, toBatch))
-    val cut = live.filter(_ > toBatch).toSeq.sorted
-    if (retainMs > 0L)
-      // SNAPSHOT-RETAINED rollback (the InvertedIndex.rollback
-      // contract): the cut generations stay physically in place
-      // behind the committed high-water mark — in-flight readers'
-      // pinned files untouched — on a deferred-deletion schedule
-      // executed by later lease-holding maintenance or [[vacuum]]
-      SegmentCompaction.retire(spark, s"$dir/index", cut,
-        System.currentTimeMillis() + retainMs)
-    else cut.foreach(delete)
-    ()
+    // the re-encode floor clamps to the cut: generations appended
+    // AFTER this rollback live under the current models, so cuts at or
+    // above the new floor stay exact
+    SegmentCompaction.rollback(spark, tree(dir), last, toBatch, retainMs) {
+      WriterLease.check(spark, lease)
+      writeMeta(spark, dir, toBatch, epochR, modelEpR,
+        math.min(floorR, toBatch))
+    }
     }
   }
 
-  /** Tombstone-delete vectors by id — the takedown/opt-out lever, the
-    * vector twin of `InvertedIndex.delete` (an embedding derived from
-    * deleted content must leave the serving index NOW, not at the next
-    * re-bootstrap). Logical deletion: the ids land as an `epoch=E`
-    * generation under `tombstones/`; [[index]] and [[readAsOf]]
-    * anti-join them out (broadcast — the set is |deletes|-bounded), so
-    * every served search behaves as if the vectors were never
-    * ingested; physical bytes are reclaimed when compaction next
-    * rewrites the rows' generations ([[compact]]/[[tieredCompact]]
-    * purge). ADC search carries no corpus-level statistics, so unlike
-    * the text twin there are no globals to adjust — the anti-join IS
-    * the whole semantic change.
+  /** Tombstone-delete vectors by id — the takedown/opt-out lever (an
+    * embedding derived from deleted content must leave the serving
+    * index NOW, not at the next re-bootstrap). Logical deletion: the
+    * ids land as an `epoch=E` generation under `tombstones/`;
+    * [[index]] and [[readAsOf]] anti-join them out, so every served
+    * search behaves as if the vectors were never ingested; physical
+    * bytes are reclaimed when compaction next rewrites the rows'
+    * generations. ADC search carries no corpus-level statistics, so
+    * there are no globals to adjust — the anti-join IS the whole
+    * semantic change.
     *
-    * Exactly-once, crash-safe: ids are validated against the served
-    * index (one compressed-scan semi-join — `ids` must be
-    * delete-request-sized, it broadcasts; unknown or already-deleted
-    * ids count zero), land as epoch `del_epoch + 1`, and the meta row
-    * — advancing `del_epoch` in ONE swap — commits LAST. A crash in
-    * between leaves an epoch dir above the committed mark: inert,
-    * healed on the next delete's entry. Returns the number of newly
-    * deleted vectors.
+    * Exactly-once, crash-safe ([[SegmentCompaction.tombstone]]): ids
+    * are validated against the served index (one compressed-scan
+    * semi-join — `ids` must be delete-request-sized, it broadcasts;
+    * unknown or already-deleted ids count zero), land as epoch
+    * `del_epoch + 1`, and the meta row commits LAST. Returns the
+    * number of newly deleted vectors.
     */
   def delete(spark: SparkSession, dir: String, ids: DataFrame): Long =
    WriterLease.withLease(spark, dir, "adc.delete") { lease =>
-    import spark.implicits._
     healForWrite(spark, dir)
     val (last, e0, modelEpD, floorD) = readMeta(spark, dir)
       .getOrElse((-1L, 0L, 0L, 0L))
     require(last >= 0, s"AdcIngest.delete: no warehouse at $dir")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // heal: epoch dirs above the committed del_epoch are a prior
-    // crashed delete's remnants (the meta row is the commit point)
-    val tPath = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    if (fs.exists(tPath))
-      fs.listStatus(tPath).map(_.getPath).filter { q =>
-        val nm = q.getName
-        nm.startsWith("epoch=") && nm.stripPrefix("epoch=").toLong > e0
-      }.foreach(q => { fs.delete(q, true); () })
-    // materialized ONCE (eager local checkpoint): the count and the
-    // epoch write must see the SAME rows — a nondeterministic `ids`
-    // could otherwise hand each action a different victim set and the
-    // returned count would disagree with the committed ledger
-    // (InvertedIndex.delete's contract, same rationale)
-    val victims = liveVecs(spark, dir, e0)(
-      spark.read.parquet(s"$dir/index")
-        .filter(col("batch") <= last).select(col("vec_id")))
-      .join(broadcast(ids.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_semi")
-      .localCheckpoint()
-    val n = victims.count()
-    if (n == 0L) 0L
-    else {
-      // the new epoch writes directly to its OWN dir (never an
-      // overwrite of the tombstones root a reader may hold open; the
-      // entry heal removed any crashed epoch dir > e0, so
-      // errorifexists is exact)
-      victims.write.mode("errorifexists")
-        .parquet(s"$dir/tombstones/epoch=${e0 + 1}")
-      WriterLease.check(spark, lease)
+    SegmentCompaction.tombstone(spark, tree(dir), lease, e0,
+      live(spark, tree(dir), e0)(
+        spark.read.parquet(s"$dir/index")
+          .filter(col("batch") <= last).select(col("vec_id")))
+        .join(broadcast(ids.select(col("vec_id")).distinct()),
+          Seq("vec_id"), "left_semi"))(v => (v.count(), ())) { _ =>
       writeMeta(spark, dir, last, e0 + 1, modelEpD, floorD)
-      n
     }
   }
 
   /** TIME-TRAVEL READ: the compressed index exactly as of generation
-    * `batch` — the vector twin of `CorpusIngest.readAsOf` (the
-    * reproducible-serving snapshot: re-run an audit or an evaluation
+    * `batch` (the reproducible-serving snapshot: re-run an audit or an evaluation
     * against the index as it stood after fold I, O(1) via partition
     * pruning). Under tiered merges an as-of cut is only exact when it
     * falls on a surviving generation boundary — a merged dir holds a
     * contiguous RUN of batches under its lowest id, so a cut inside
-    * the run would silently include newer rows; the same coverage
-    * check as [[rollback]] refuses it loudly.
+    * the run would silently include newer rows; the coverage check
+    * ([[SegmentCompaction.onBoundary]]) refuses it loudly.
     */
   def readAsOf(spark: SparkSession, dir: String, batch: Long): DataFrame = {
     require(batch >= 0, "as-of generations start at 0 (the bootstrap)")
@@ -526,12 +435,7 @@ object AdcIngest {
         s"$modelEp retrain (re-encoded through " +
         s"$floor) — its original encoding no longer exists; snapshot " +
         "before retraining")
-    val p = new org.apache.hadoop.fs.Path(s"$dir/index")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).filter(_ <= last).toSet
-    require(batch == last || live.contains(batch + 1),
+    require(SegmentCompaction.onBoundary(spark, s"$dir/index", last, batch),
       s"AdcIngest.readAsOf: generation ${batch + 1} has been merged " +
         "into an earlier tree by compaction — an as-of cut inside the " +
         "merged run would include newer rows; snapshot before " +
@@ -539,7 +443,7 @@ object AdcIngest {
     // deletes are NOT time-traveled: an as-of read rewinds the INGEST
     // stream, but a takedown applies to every serving read, historical
     // replays included — that is what a deletion request means
-    servedCols(liveVecs(spark, dir, del)(
+    servedCols(live(spark, tree(dir), del)(
       spark.read.parquet(s"$dir/index")
         .filter(col("batch") <= batch)))
   }
@@ -567,28 +471,20 @@ object AdcIngest {
     // vectors never serve either (broadcast anti-join, see [[delete]]).
     val (last, del, _, _) = readMeta(spark, dir)
       .getOrElse((-1L, 0L, 0L, 0L))
-    servedCols(liveVecs(spark, dir, del)(
+    servedCols(live(spark, tree(dir), del)(
       spark.read.parquet(s"$dir/index")
         .filter(col("batch") <= last)))
   }
 
   /** Number of `batch=` generations in the index tree — the
-    * [[compact]] trigger (the vector twin of
-    * `InvertedIndex.segmentCount`): every search opens O(generations)
-    * file groups, so an append-heavy index decays toward one file set
-    * per batch. One driver-side listStatus, no Spark job.
+    * [[compact]] trigger: every search opens O(generations) file
+    * groups, so an append-heavy index decays toward one file set per
+    * batch. One driver-side listStatus, no Spark job.
     */
   def segmentCount(spark: SparkSession, dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/index")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     healForRead(spark, dir)
-    if (!fs.exists(p)) 0
-    else {
-      val last = lastBatch(spark, dir)
-      fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .count(_.stripPrefix("batch=").toLong <= last)
-    }
+    val last = lastBatch(spark, dir)
+    SegmentCompaction.generations(spark, s"$dir/index").count(_ <= last)
   }
 
   /** Collapse every generation into a single `batch=0` tree — a PURE
@@ -598,44 +494,21 @@ object AdcIngest {
     * Crash-safe via the warehouse two-rename swap; the meta row —
     * including the exactly-once `last_batch` high-water mark — is
     * untouched, so replay protection and the next append id survive.
+    * `retainMs > 0` commits the rewrite as a hidden pending
+    * ([[SegmentCompaction.compact]]).
     */
   def compact(spark: SparkSession, dir: String,
               retainMs: Long = 0L): Unit =
    WriterLease.withLease(spark, dir, "adc.compact") { lease =>
-    val indexDir = s"$dir/index"
     // heal a crashed tiered merge before the full rewrite reads the
-    // tree (aside'd generations would otherwise drop silently); an
-    // unpublished retained merge is derived data of gens this rewrite
-    // covers — discard rather than race its eventual publish
+    // tree (aside'd generations would otherwise drop silently)
     healForWrite(spark, dir)
-    SegmentCompaction.discardPending(spark, indexDir)
     val (last, delC, _, _) = readMeta(spark, dir)
       .getOrElse((-1L, 0L, 0L, 0L))
-    val live = SegmentCompaction.genSizes(spark, indexDir)
-      .map(_._1).filter(_ <= last)
-    // retainMs > 0: commit the full rewrite as a HIDDEN pending over
-    // ALL live generations (the tieredCompact protocol) — the current
-    // tree keeps serving byte-untouched until publish
-    val staging = if (retainMs > 0L) s"$indexDir.__tiered_staging"
-      else s"$indexDir.__staging"
-    spark.read.parquet(indexDir)
-      .filter(col("batch") <= last) // remnants die here
-      // PURGE: tombstoned rows drop from the rewrite (the tombstone
-      // rows stay — they keep delete replays no-ops; the read filter
-      // is idempotent on purged rows)
-      .transform(liveVecs(spark, dir, delC))
-      .drop("batch").withColumn("batch", lit(0L))
-      .repartition(col("cluster_id"))
-      .sortWithinPartitions(col("cluster_id"), col("vec_id"))
-      .write.mode("overwrite").partitionBy("batch").parquet(staging)
-    WriterLease.check(spark, lease)
-    if (retainMs > 0L)
-      SegmentCompaction.commit(spark, indexDir, live, retainMs)
-    else Load.atomicSwap(spark, staging, indexDir)
+    SegmentCompaction.compact(spark, tree(dir), lease, last, delC, retainMs)
   }
 
-  /** The compaction POLICY hook (vector twin of
-    * `InvertedIndex.compactIfNeeded`): compact when the tree holds
+  /** The compaction POLICY hook: compact when the tree holds
     * more than `maxSegments` generations, else no-op. Idempotent under
     * streaming replays; a crash mid-compaction heals through
     * [[segmentCount]]'s recoverSwap on the next call.
@@ -647,55 +520,26 @@ object AdcIngest {
     else false
   }
 
-  /** Size-tiered compaction — `InvertedIndex.tieredCompact`'s vector
-    * twin (policy, coverage invariant and crash protocol in
-    * [[SegmentCompaction]]): merge the unsettled tail of generations
-    * into one generation at the tail's lowest batch id when at least
-    * `minMerge` candidates exist, leaving large settled trees — above
-    * all the bootstrap — untouched on disk. A pure physical move
-    * (disjoint vec_ids per the [[append]] contract), cluster-clustered
-    * within files like [[compact]]; meta and its exactly-once
-    * `last_batch` are untouched, and because merges collapse a
-    * CONTIGUOUS run into its lowest id, [[rollback]] stays decidable
-    * from the dir listing (cuts on surviving boundaries allowed, cuts
-    * inside a merged tree refused). Returns the merged batch ids
-    * (empty = policy did not fire).
+  /** Size-tiered compaction ([[SegmentCompaction.tieredCompact]]):
+    * merge the unsettled tail of generations into one generation at
+    * the tail's lowest batch id when at least `minMerge` candidates
+    * exist, leaving large settled trees — above all the bootstrap —
+    * untouched on disk. A pure physical move (disjoint vec_ids per the
+    * [[append]] contract), cluster-clustered within files like
+    * [[compact]]; meta and its exactly-once `last_batch` are
+    * untouched, and because merges collapse a CONTIGUOUS run into its
+    * lowest id, [[rollback]] stays decidable from the dir listing.
+    * Returns the merged batch ids (empty = policy did not fire).
     */
   def tieredCompact(spark: SparkSession, dir: String, ratio: Double = 4.0,
                     minMerge: Int = 2,
                     retainMs: Long = 0L): Seq[Long] =
    WriterLease.withLease(spark, dir, "adc.tieredCompact") { lease =>
-    val indexDir = s"$dir/index"
     healForWrite(spark, dir)
-    // publish a due retained merge (writer-side, under the lease);
-    // back off while one is still inside its window. A retained
-    // rollback's deferred deletions execute here too once due.
-    SegmentCompaction.publishDue(spark, indexDir)
     val (last, delT, _, _) = readMeta(spark, dir)
       .getOrElse((-1L, 0L, 0L, 0L))
-    SegmentCompaction.retireDue(spark, indexDir, last)
-    val ids =
-      if (SegmentCompaction.pending(spark, indexDir).nonEmpty) Seq.empty
-      else SegmentCompaction.mergeSet(
-        SegmentCompaction.genSizes(spark, indexDir).filter(_._1 <= last),
-        ratio, minMerge)
-    if (ids.isEmpty) Seq.empty
-    else {
-      val lo = ids.min
-      spark.read.parquet(indexDir)
-        .filter(col("batch").isin(ids: _*))
-        // purge tombstoned rows falling inside the merged run (settled
-        // generations keep theirs until they eventually merge)
-        .transform(liveVecs(spark, dir, delT))
-        .drop("batch").withColumn("batch", lit(lo))
-        .repartition(col("cluster_id"))
-        .sortWithinPartitions(col("cluster_id"), col("vec_id"))
-        .write.mode("overwrite").partitionBy("batch")
-        .parquet(s"$indexDir.__tiered_staging")
-      WriterLease.check(spark, lease)
-      SegmentCompaction.commit(spark, indexDir, ids, retainMs)
-      ids
-    }
+    SegmentCompaction.tieredCompact(spark, tree(dir), lease, last, delT,
+      ratio, minMerge, retainMs)
   }
 
   /** RETRAIN the frozen models from the CURRENT live vectors and
@@ -761,7 +605,7 @@ object AdcIngest {
     fs.delete(new org.apache.hadoop.fs.Path(stage), true) // stale staging
     // live generation membership from the served index — each vector
     // re-encodes into the generation it originally landed in
-    val membership = liveVecs(spark, dir, e0)(
+    val membership = live(spark, tree(dir), e0)(
       spark.read.parquet(s"$dir/index")
         .filter(col("batch") <= last)
         .select(col("vec_id"), col("batch").cast(LongType).as("batch")))
@@ -835,84 +679,34 @@ object AdcIngest {
     } finally joined.unpersist()
   }
 
-  /** TOMBSTONE-DEBT purge — the vector twin of
-    * `InvertedIndex.purgeDebt`: rewrite (only) the generations whose
-    * tombstoned-row fraction has reached `tau`, reclaiming dead bytes
-    * a settled generation would otherwise hold until it happened to
-    * merge. Generation-scoped two-rename swaps, pure physical filter,
-    * serving identical before/after. Returns the purged generation
-    * ids.
+  /** TOMBSTONE-DEBT purge ([[SegmentCompaction.purgeDebt]]): rewrite
+    * only the generations whose tombstoned-row fraction has reached
+    * `tau`, reclaiming dead bytes a settled generation would otherwise
+    * hold until it happened to merge. Generation-scoped two-rename
+    * swaps, pure physical filter, serving identical before/after.
+    * Returns the purged generation ids.
     */
   def purgeDebt(spark: SparkSession, dir: String,
                 tau: Double = 0.5, retainMs: Long = 0L): Seq[Long] =
    WriterLease.withLease(spark, dir, "adc.purgeDebt") { lease =>
-    require(tau > 0.0 && tau <= 1.0, "tau must be in (0, 1]")
-    val indexDir = s"$dir/index"
     healForWrite(spark, dir)
-    // publish DUE retained rewrites; in-window pendings are skipped
-    // below, never discarded (their snapshots outlive this purge)
-    SegmentCompaction.publishDue(spark, indexDir)
     val (last, epoch, _, _) = readMeta(spark, dir)
       .getOrElse((-1L, 0L, 0L, 0L))
     require(last >= 0, s"AdcIngest.purgeDebt: no warehouse at $dir")
-    if (epoch <= 0L) Seq.empty
-    else {
-      val tomb = broadcast(spark.read.parquet(s"$dir/tombstones")
-        .filter(col("epoch") <= epoch).select(col("vec_id")))
-      val debt = spark.read.parquet(indexDir)
-        .filter(col("batch") <= last)
-        .join(tomb, Seq("vec_id"), "left_semi")
-        .groupBy(col("batch").cast(LongType).as("batch"))
-        .count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // pending-covered generations skip (their debt drains at publish)
-      val covered = SegmentCompaction.pendings(spark, indexDir)
-        .flatMap(_.ids).toSet
-      val victims = SegmentCompaction.genSizes(spark, indexDir)
-        .filter(_._1 <= last)
-        .collect { case (b, n)
-          if n > 0 && !covered(b) &&
-            debt.getOrElse(b, 0L).toDouble / n >= tau => b }
-      victims.foreach { b =>
-        val rewritten = liveVecs(spark, dir, epoch)(
-          spark.read.parquet(indexDir).filter(col("batch") === b))
-          .drop("batch")
-          .repartition(col("cluster_id"))
-          .sortWithinPartitions(col("cluster_id"), col("vec_id"))
-        if (retainMs > 0L) {
-          // hidden single-generation pending — the indebted generation
-          // keeps serving until the window passes (views identical:
-          // reads anti-join the tombstones either way)
-          rewritten.write.mode("overwrite")
-            .parquet(s"$indexDir.__tiered_staging/batch=$b")
-          WriterLease.check(spark, lease)
-          SegmentCompaction.commit(spark, indexDir, Seq(b), retainMs)
-        } else {
-          val staging = s"$indexDir.__debt_staging"
-          rewritten.write.mode("overwrite").parquet(staging)
-          WriterLease.check(spark, lease)
-          Load.atomicSwap(spark, staging, s"$indexDir/batch=$b")
-        }
-      }
-      victims
-    }
+    SegmentCompaction.purgeDebt(spark, tree(dir), lease, last, epoch, tau,
+      retainMs)
   }
 
-  /** Force-publish a snapshot-retained tiered merge NOW — the explicit
-    * vacuum verb (see [[tieredCompact]]'s `retainMs`); call when no
-    * reader still holds the pre-merge snapshot. Returns the published
-    * ids (empty = nothing pending).
+  /** Force-publish every snapshot-retained state NOW — a parked
+    * retained [[retrain]], then hidden pending rewrites and a retained
+    * rollback's deferred deletions — the explicit vacuum verb; call
+    * when no reader still holds an older snapshot. Returns the
+    * published and retired generation ids (empty = nothing pending).
     */
   def vacuum(spark: SparkSession, dir: String): Seq[Long] =
     WriterLease.withLease(spark, dir, "adc.vacuum") { _ =>
-      Load.recoverSwap(spark, dir)
-      // vacuum is the explicit "no reader holds a snapshot" verb: a
-      // pending retained retrain publishes NOW, then hidden pendings
-      // and the deferred-deletion schedule drain
       publishRetrainGate(spark, dir, force = true)
-      Load.recoverSwap(spark, s"$dir/index")
-      SegmentCompaction.recover(spark, s"$dir/index")
-      SegmentCompaction.publish(spark, s"$dir/index") ++
-        SegmentCompaction.retireDue(spark, s"$dir/index",
-          lastBatch(spark, dir), force = true)
+      healForWrite(spark, dir)
+      SegmentCompaction.vacuum(spark, tree(dir), lastBatch(spark, dir))
     }
 }

@@ -3,10 +3,10 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.etl.{Load, WriterLease}
 import graft.ops.Relational.eager
+import graft.ops.SegmentCompaction.live
 
 /** Incremental corpus-build warehouse — the INGEST twin of the q162
   * end-to-end flagship. The flagship trains and selects over the whole
@@ -30,8 +30,8 @@ import graft.ops.Relational.eager
   *    and the replay guard. ONE table, swapped atomically, so the
   *    guard and the folds can never disagree.
   *  - `tombstones/epoch=E/` + `delmeta/` (one row: del_epoch) — the
-  *    [[delete]] takedown ledger: logically deleted doc_ids, and the
-  *    commit point readers trust.
+  *    [[delete]] takedown ledger ([[SegmentCompaction]]): logically
+  *    deleted doc_ids, and the commit point readers trust.
   *
   * Ingest stages, each O(batch):
   *  1. in-batch canonical-URL dedup (one window over the BATCH);
@@ -144,11 +144,34 @@ object CorpusIngest {
         expr(s"(tok_before + n_tokens - 1) div $seqLen").as("end_seq"))
   }
 
+  /** The packed-corpus generation tree: doc-keyed tombstones, no
+    * rewrite layout (a purge is a pure row filter) and no merges —
+    * generations are the time-travel and rollback unit.
+    */
+  private[ops] def tree(dir: String) =
+    SegmentCompaction.Tree(dir, "corpus", "doc_id", merges = false)
+
+  /** The debt threshold that makes [[purge]] rewrite every generation
+    * holding any tombstoned row: one dead row out of any possible
+    * generation size is a fraction above it.
+    */
+  private val AnyDebt = Double.MinPositiveValue
+
   private def writeBatch(df: DataFrame, path: String, batchId: Long): Unit =
     df.withColumn("batch", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch").parquet(path)
+
+  /** Run `body` with an [[eager]] that remembers every frame it
+    * persists; all of them are released on the way out, also when a
+    * write or the fence check aborts the verb.
+    */
+  private def withEager[T](body: (DataFrame => DataFrame) => T): T = {
+    val cached = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    try body { df => cached += df; eager(df) }
+    finally cached.foreach(_.unpersist())
+  }
 
   /** The replay high-water mark; -1 when no warehouse exists (or its
     * state table is empty — max over zero rows is null, not a crash).
@@ -204,8 +227,9 @@ object CorpusIngest {
     // driver's pre-tokenized fixtures, byte-compatible.
     Analyzer.save(spark, analyzer, s"$dir/analyzer")
     val mapping = Mojibake.loadMapping(spark, s"$dir/mapping")
-    val keep = eager(dedupByUrl(crawl))
-    val pool0 = eager(toPool(keep, mapping))
+    withEager { kept =>
+    val keep = kept(dedupByUrl(crawl))
+    val pool0 = kept(toPool(keep, mapping))
     // langid (optional): the bootstrap crawl is the LABELED set — its
     // `lang` column trains the multiclass model (persisted + frozen);
     // from here down `lang` means the PREDICTION, for the bootstrap
@@ -222,19 +246,19 @@ object CorpusIngest {
         Load.replaceTable(spark,
           spark.range(1).select(lit(langidMinMargin).as("min_margin")),
           s"$dir/langidcfg")
-        eager(applyLangid(spark, pool0, dir))
+        kept(applyLangid(spark, pool0, dir))
       }
     NaiveBayes.train(spark,
       pool.filter(nbSplit).select(col("text"), nbLabel.as("label")),
       s"$dir/nb", nbVocabCap, analyzer)
-    val gated = eager(NaiveBayes.score(spark, pool, s"$dir/nb")
+    val gated = kept(NaiveBayes.score(spark, pool, s"$dir/nb")
       .filter(col("pred_pos"))
       .select(col("doc_id"), col("source"), col("lang"), col("text"),
         col("margin_micro")))
     Dsir.train(spark, gated.filter(dsirTarget).select(col("text")),
       gated.select(col("text")), s"$dir/dsir", dsirBuckets,
       fast = dsirFast, analyzer = analyzer)
-    val selected = eager(Dsir.selectTop(
+    val selected = kept(Dsir.selectTop(
         Dsir.score(spark, gated, s"$dir/dsir"), "source", "doc_id",
         selectPct)
       .filter(col("is_selected"))
@@ -248,7 +272,7 @@ object CorpusIngest {
       Bpe.wordCounts(selected, analyzer).select(col("word")), ranked)
     val hwm0 = spark.emptyDataFrame
       .select(lit("").as("source"), lit(0L).as("tok_hwm"))
-    val packed = eager(pack(selected, lex, ranked, hwm0, seqLen, analyzer))
+    val packed = kept(pack(selected, lex, ranked, hwm0, seqLen, analyzer))
     writeBatch(packed, s"$dir/corpus", 0L)
     writeBatch(keep.select(col("canon_url")), s"$dir/urls", 0L)
     // per-source admission threshold = min selected lr (what the
@@ -259,13 +283,12 @@ object CorpusIngest {
           sum(col("n_tokens")).as("tok_hwm"))
         .withColumn("last_batch", lit(0L)),
       s"$dir/state")
-    Seq(keep, pool0, pool, gated, selected, packed)
-      .distinct.foreach(_.unpersist())
     require(n > 0,
       s"CorpusIngest.bootstrap: zero documents selected into $dir — " +
         "an empty state table would leave every later ingest without " +
         "thresholds; fix the crawl or the gates and re-bootstrap")
     n
+    }
     }
   }
 
@@ -288,7 +311,7 @@ object CorpusIngest {
     // corpus/ holding just this batch and the next heal would delete
     // __old — every prior generation — while state still claimed they
     // landed
-    heal(spark, dir)
+    SegmentCompaction.heal(spark, tree(dir))
     // writer-side maintenance cadence: a DUE retained purge publishes
     // here (read paths never publish by time)
     SegmentCompaction.publishDue(spark, s"$dir/corpus")
@@ -324,7 +347,8 @@ object CorpusIngest {
 
     // 1–2: in-batch dedup, then seen-set rejection scanning (never
     // shuffling) the stored URL column
-    val keep0 = eager(dedupByUrl(batch))
+    withEager { kept =>
+    val keep0 = kept(dedupByUrl(batch))
     val batchUrls = keep0.select(col("canon_url"))
     // seen set = PRIOR generations only (partition-pruned batch <
     // batchId). Scanning the whole tree would let a replay of batch I
@@ -340,7 +364,7 @@ object CorpusIngest {
       .filter(col("batch") < batchId)
       .join(broadcast(batchUrls), Seq("canon_url"), "left_semi")
       .select(col("canon_url")).distinct()
-    val fresh = eager(
+    val fresh = kept(
       keep0.join(broadcast(seen), Seq("canon_url"), "left_anti"))
 
     // 3–4: extract + repair, langid stamp+gate when the warehouse was
@@ -357,7 +381,7 @@ object CorpusIngest {
 
     // 5: DSIR admission at the bootstrap-frozen per-source threshold
     val thr = broadcast(stateDf.select(col("source"), col("lr_min_micro")))
-    val selected = eager(Dsir.score(spark, gated, s"$dir/dsir")
+    val selected = kept(Dsir.score(spark, gated, s"$dir/dsir")
       .withColumnRenamed("lr_micro", "__lr")
       .join(thr, Seq("source"), "left")
       .filter(col("__lr") >= coalesce(col("lr_min_micro"),
@@ -375,7 +399,7 @@ object CorpusIngest {
     val az = Analyzer.load(spark, s"$dir/analyzer")
     val lex = Bpe.lexicon(Bpe.wordCounts(selected, az).select(col("word")),
       ranked)
-    val packed = eager(pack(selected, lex, ranked,
+    val packed = kept(pack(selected, lex, ranked,
       stateDf.select(col("source"), col("tok_hwm")), seqLen, az))
 
     // per-source batch token sums, collected BEFORE the urls write:
@@ -402,8 +426,8 @@ object CorpusIngest {
     Load.replaceTable(spark,
       folded.toDF("source", "lr_min_micro", "tok_hwm", "last_batch"),
       s"$dir/state")
-    Seq(keep0, fresh, selected, packed).foreach(_.unpersist())
     true
+    }
     }
     }
   }
@@ -429,7 +453,7 @@ object CorpusIngest {
              landedBatch: Long): DataFrame = {
     require(batch.columns.toSeq == CrawlCols,
       s"funnel batch must be $CrawlCols, got ${batch.columns.toSeq}")
-    healForRead(spark, dir)
+    SegmentCompaction.healForRead(spark, tree(dir))
     val mapping = Mojibake.loadMapping(spark, s"$dir/mapping")
     val stateRows: Map[String, Long] =
       Load.readTable(spark, s"$dir/state").getOrElse(
@@ -523,57 +547,14 @@ object CorpusIngest {
     Load.readTable(spark, s"$dir/delmeta")
       .map(_.head().getAs[Long]("del_epoch")).getOrElse(0L)
 
-  /** Anti-join `df` out of the live tombstone set, or `df` untouched
-    * when the warehouse holds no deletes. Only epochs ≤ the COMMITTED
-    * del_epoch serve (a crashed [[delete]]'s half-landed epoch is
-    * inert); the tombstone side is |deletes|-bounded → broadcast.
-    */
-  private def liveRows(spark: SparkSession, dir: String, epoch: Long)
-                      (df: DataFrame): DataFrame =
-    if (epoch <= 0L) df
-    else df.join(
-      broadcast(spark.read.parquet(s"$dir/tombstones")
-        .filter(col("epoch") <= epoch).select(col("doc_id"))),
-      Seq("doc_id"), "left_anti")
-
-  /** Heal a [[purge]] that crashed between atomicSwap's two renames —
-    * called by EVERY corpus-tree entry point (the addBatch/append
-    * hazard): with the tree sitting only in `corpus.__old`, a write
-    * path would otherwise recreate `corpus/` holding just its own
-    * batch, and the NEXT heal — seeing both dirs — would delete
-    * `__old` and with it every prior generation, while the state
-    * table still claimed they landed.
-    */
-  private def heal(spark: SparkSession, dir: String): Unit = {
-    Load.recoverSwap(spark, s"$dir/corpus")
-    // sibling/model-table swap remnants (state, delmeta, nb/counts,
-    // langid/meta, …): readTable's heals are liveness-gated and
-    // therefore suppressed under THIS writer's own live lease, so the
-    // writer entry heals them here, inside the lease
-    Load.recoverTreeSwaps(spark, dir)
-    // generation-scoped purge remnants (hidden pendings, scoped swaps,
-    // staging) heal through the shared SegmentCompaction protocol
-    SegmentCompaction.recover(spark, s"$dir/corpus")
-  }
-
-  /** Read-path heal, GATED on writer-lease liveness (the
-    * InvertedIndex.healForRead rationale): a remnant under a LIVE
-    * lease is a writer's in-flight purge swap, not a crash — a reader
-    * restoring `corpus.__old` mid-swap would make the writer's commit
-    * rename land inside the restored tree. Writers call [[heal]]
-    * unconditionally inside their own lease.
-    */
-  private def healForRead(spark: SparkSession, dir: String): Unit =
-    if (!WriterLease.liveHolder(spark, dir)) heal(spark, dir)
-
   /** The served packed corpus across all generations, minus tombstoned
     * documents — what a training-shard writer consumes.
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    healForRead(spark, dir)
+    SegmentCompaction.healForRead(spark, tree(dir))
     val last = lastBatch(spark, dir)
     require(last >= 0, s"CorpusIngest.read: no warehouse at $dir")
-    liveRows(spark, dir, delEpoch(spark, dir))(
+    live(spark, tree(dir), delEpoch(spark, dir))(
       spark.read.parquet(s"$dir/corpus").filter(col("batch") <= last))
   }
 
@@ -614,44 +595,19 @@ object CorpusIngest {
   def delete(spark: SparkSession, dir: String, ids: DataFrame): Long =
    WriterLease.withLease(spark, dir, "corpus.delete") { lease =>
     import spark.implicits._
-    heal(spark, dir)
+    SegmentCompaction.heal(spark, tree(dir))
     val last = lastBatch(spark, dir)
     require(last >= 0, s"CorpusIngest.delete: no warehouse at $dir")
     val e0 = delEpoch(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // heal: epoch dirs above the committed del_epoch are a prior
-    // crashed delete's remnants (delmeta is the commit point)
-    val tPath = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    if (fs.exists(tPath))
-      fs.listStatus(tPath).map(_.getPath).filter { q =>
-        val nm = q.getName
-        nm.startsWith("epoch=") && nm.stripPrefix("epoch=").toLong > e0
-      }.foreach(q => { fs.delete(q, true); () })
-    // materialized ONCE (eager local checkpoint): the count and the
-    // epoch write must see the SAME rows — a nondeterministic `ids`
-    // could otherwise hand each action a different victim set and the
-    // returned count would disagree with the committed ledger
-    // (InvertedIndex.delete's contract, same rationale)
-    val victims = liveRows(spark, dir, e0)(
-      spark.read.parquet(s"$dir/corpus")
-        .filter(col("batch") <= last).select(col("doc_id")))
-      .join(broadcast(ids.select(col("doc_id")).distinct()),
-        Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    val n = victims.count()
-    if (n == 0L) 0L
-    else {
-      // the new epoch writes directly to its OWN dir (never an
-      // overwrite of the tombstones root a reader may hold open; the
-      // entry heal removed any crashed epoch dir > e0, so
-      // errorifexists is exact)
-      victims.write.mode("errorifexists")
-        .parquet(s"$dir/tombstones/epoch=${e0 + 1}")
-      WriterLease.check(spark, lease)
+    SegmentCompaction.tombstone(spark, tree(dir), lease, e0,
+      live(spark, tree(dir), e0)(
+        spark.read.parquet(s"$dir/corpus")
+          .filter(col("batch") <= last).select(col("doc_id")))
+        .join(broadcast(ids.select(col("doc_id")).distinct()),
+          Seq("doc_id"), "left_semi"))(v => (v.count(), ())) { _ =>
       Load.replaceTable(spark, Seq(e0 + 1).toDF("del_epoch"),
         s"$dir/delmeta")
-      n
+      ()
     }
   }
 
@@ -659,72 +615,37 @@ object CorpusIngest {
     * only generations actually holding tombstoned rows rewrite (each
     * through its own two-rename swap); untouched generations' files
     * are never opened or moved, so purge cost scales with the
-    * indebted generations, not the corpus (the InvertedIndex.purgeDebt
-    * discipline, with tau = any-debt). Generation layout and every
-    * surviving row's packing offsets are untouched (a dropped document
-    * leaves a HOLE in the token stream — see [[delete]] — so the
-    * rewrite is a pure row filter, never a repack). The tombstone
-    * ledger is retained (it keeps delete replays no-ops; the read
-    * filter is idempotent on purged rows). Returns the purged
-    * generation ids.
+    * indebted generations, not the corpus
+    * ([[SegmentCompaction.purgeDebt]] at any debt). Generation layout
+    * and every surviving row's packing offsets are untouched (a
+    * dropped document leaves a HOLE in the token stream — see
+    * [[delete]] — so the rewrite is a pure row filter, never a
+    * repack). The tombstone ledger is
+    * retained (it keeps delete replays no-ops; the read filter is
+    * idempotent on purged rows). Returns the purged generation ids.
     *
     * `retainMs > 0` — SNAPSHOT-RETAINED purge: each indebted
-    * generation's rewrite commits as a HIDDEN pending (the
-    * SegmentCompaction protocol); the generations keep serving
-    * byte-untouched (reads anti-join the tombstones either way — the
-    * views are identical) until a later lease-holding maintenance
-    * call or [[vacuum]] publishes after the window.
+    * generation's rewrite commits as a HIDDEN pending; the generations
+    * keep serving byte-untouched (reads anti-join the tombstones either
+    * way — the views are identical) until a later lease-holding
+    * maintenance call or [[vacuum]] publishes after the window.
     */
   def purge(spark: SparkSession, dir: String,
             retainMs: Long = 0L): Seq[Long] =
    WriterLease.withLease(spark, dir, "corpus.purge") { lease =>
-    val corpusDir = s"$dir/corpus"
-    heal(spark, dir)
-    // publish DUE retained rewrites; in-window pendings are skipped
-    // below, never discarded (their snapshots outlive this purge)
-    SegmentCompaction.publishDue(spark, corpusDir)
-    val last = lastBatch(spark, dir)
-    val epoch = delEpoch(spark, dir)
-    if (epoch <= 0L) Seq.empty
-    else {
-      val tomb = broadcast(spark.read.parquet(s"$dir/tombstones")
-        .filter(col("epoch") <= epoch).select(col("doc_id")))
-      val covered = SegmentCompaction.pendings(spark, corpusDir)
-        .flatMap(_.ids).toSet
-      val debtGens = spark.read.parquet(corpusDir)
-        .filter(col("batch") <= last)
-        .join(tomb, Seq("doc_id"), "left_semi")
-        .select(col("batch").cast(LongType).as("batch"))
-        .distinct().collect().map(_.getLong(0))
-        .filterNot(covered).sorted.toSeq
-      debtGens.foreach { b =>
-        val rewritten = liveRows(spark, dir, epoch)(
-          spark.read.parquet(corpusDir).filter(col("batch") === b))
-          .drop("batch")
-        if (retainMs > 0L) {
-          rewritten.write.mode("overwrite")
-            .parquet(s"$corpusDir.__tiered_staging/batch=$b")
-          WriterLease.check(spark, lease)
-          SegmentCompaction.commit(spark, corpusDir, Seq(b), retainMs)
-        } else {
-          val staging = s"$corpusDir.__debt_staging"
-          rewritten.write.mode("overwrite").parquet(staging)
-          WriterLease.check(spark, lease)
-          Load.atomicSwap(spark, staging, s"$corpusDir/batch=$b")
-        }
-      }
-      debtGens
-    }
+    SegmentCompaction.heal(spark, tree(dir))
+    SegmentCompaction.purgeDebt(spark, tree(dir), lease, lastBatch(spark, dir),
+      delEpoch(spark, dir), AnyDebt, retainMs)
   }
 
-  /** Force-publish every snapshot-retained purge NOW — the corpus
-    * twin of `InvertedIndex.vacuum`; call when no reader still holds
-    * a pre-purge snapshot. Returns the published generation ids.
+  /** Force-publish every snapshot-retained purge NOW; call when no
+    * reader still holds a pre-purge snapshot. Returns the published
+    * generation ids.
     */
   def vacuum(spark: SparkSession, dir: String): Seq[Long] =
     WriterLease.withLease(spark, dir, "corpus.vacuum") { _ =>
-      heal(spark, dir)
-      SegmentCompaction.publish(spark, s"$dir/corpus")
+      SegmentCompaction.heal(spark, tree(dir))
+      SegmentCompaction.vacuum(spark, tree(dir), lastBatch(spark, dir))
     }
 
   /** TIME-TRAVEL READ: the packed corpus exactly as of generation
@@ -740,7 +661,7 @@ object CorpusIngest {
     */
   def readAsOf(spark: SparkSession, dir: String, batch: Long): DataFrame = {
     require(batch >= 0, "as-of generations start at 0 (the bootstrap)")
-    healForRead(spark, dir)
+    SegmentCompaction.healForRead(spark, tree(dir))
     val last = lastBatch(spark, dir)
     require(last >= 0, s"CorpusIngest.readAsOf: no warehouse at $dir")
     require(batch <= last,
@@ -748,59 +669,55 @@ object CorpusIngest {
         s"high-water mark $last")
     // deletes are NOT time-traveled: a takedown applies to historical
     // snapshots too — that is what a deletion request means
-    liveRows(spark, dir, delEpoch(spark, dir))(
+    live(spark, tree(dir), delEpoch(spark, dir))(
       spark.read.parquet(s"$dir/corpus").filter(col("batch") <= batch))
   }
 
-  /** Roll the warehouse back to `toBatch`: every `corpus/batch>I` and
-    * `urls/batch>I` subtree is deleted and the state table is rebuilt
-    * from the surviving corpus alone — per-source thresholds re-frozen
-    * from batch 0 (sources first admitted in a surviving later batch
-    * re-record the batch-0 global minimum, exactly what the forward
-    * fold assigned them), token high-water marks re-summed over
-    * batches ≤ I, `last_batch` = I. The rebuild is bit-identical to
-    * having never ingested the dropped batches, so rolled-back ids can
-    * be re-ingested. This is both the bad-batch recovery story and
-    * what makes a fixed-path warehouse re-entrant without re-paying
-    * the bootstrap (roll to 0, ingest again). O(surviving corpus
-    * metadata + one bounded-by-#sources aggregate) — the models and
-    * batch-0 artifacts are never touched.
+  /** Roll the warehouse back to `toBatch` through the shared
+    * [[SegmentCompaction.rollback]] cut: the state table is rebuilt
+    * from the surviving corpus alone and committed first — per-source
+    * thresholds re-frozen from batch 0 (sources first admitted in a
+    * surviving later batch re-record the batch-0 global minimum,
+    * exactly what the forward fold assigned them), token high-water
+    * marks re-summed over batches ≤ I, `last_batch` = I — then every
+    * `corpus/batch>I` and `urls/batch>I` subtree is deleted, along
+    * with any unpublished retained purge (a later heal would otherwise
+    * rename a purged copy of a cut generation back in). The rebuild is
+    * bit-identical to having never ingested the dropped batches, so
+    * rolled-back ids can be re-ingested. This is both the bad-batch
+    * recovery story and what makes a fixed-path warehouse re-entrant
+    * without re-paying the bootstrap (roll to 0, ingest again).
+    * O(surviving corpus metadata + one bounded-by-#sources aggregate)
+    * — the models and batch-0 artifacts are never touched.
     */
   def rollback(spark: SparkSession, dir: String, toBatch: Long): Unit =
    WriterLease.withLease(spark, dir, "corpus.rollback") { lease =>
     require(toBatch >= 0, "cannot roll back past the bootstrap")
-    heal(spark, dir)
-    require(lastBatch(spark, dir) >= toBatch,
+    SegmentCompaction.heal(spark, tree(dir))
+    val last = lastBatch(spark, dir)
+    require(last >= toBatch,
       s"CorpusIngest.rollback: no warehouse at $dir at or above " +
         s"batch $toBatch")
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq("corpus", "urls").foreach { t =>
-      val root = new org.apache.hadoop.fs.Path(s"$dir/$t")
-      val fs = root.getFileSystem(conf)
-      if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("batch=") &&
-            name.stripPrefix("batch=").toLong > toBatch)
-          fs.delete(st.getPath, true)
-      }
+    SegmentCompaction.rollback(spark, tree(dir), last, toBatch, 0L) {
+      import spark.implicits._
+      val agg = spark.read.parquet(s"$dir/corpus")
+        .filter(col("batch") <= toBatch)
+        .groupBy(col("source"))
+        .agg(sum(col("n_tokens")).as("tok_hwm"),
+          min(when(col("batch") === 0, col("lr_micro"))).as("lr0"))
+        .as[(String, Long, Option[Long])].collect()
+      require(agg.nonEmpty,
+        s"CorpusIngest.rollback: no corpus rows at or below batch " +
+          s"$toBatch in $dir")
+      val globalMin = agg.flatMap(_._3).min
+      WriterLease.check(spark, lease)
+      Load.replaceTable(spark,
+        agg.toSeq.sortBy(_._1).map { case (src, hwm, lr0) =>
+          (src, lr0.getOrElse(globalMin), hwm, toBatch)
+        }.toDF("source", "lr_min_micro", "tok_hwm", "last_batch"),
+        s"$dir/state")
+      ()
     }
-    import spark.implicits._
-    val agg = spark.read.parquet(s"$dir/corpus")
-      .filter(col("batch") <= toBatch)
-      .groupBy(col("source"))
-      .agg(sum(col("n_tokens")).as("tok_hwm"),
-        min(when(col("batch") === 0, col("lr_micro"))).as("lr0"))
-      .as[(String, Long, Option[Long])].collect()
-    require(agg.nonEmpty,
-      s"CorpusIngest.rollback: no corpus rows at or below batch " +
-        s"$toBatch in $dir")
-    val globalMin = agg.flatMap(_._3).min
-    WriterLease.check(spark, lease)
-    Load.replaceTable(spark,
-      agg.toSeq.sortBy(_._1).map { case (src, hwm, lr0) =>
-        (src, lr0.getOrElse(globalMin), hwm, toBatch)
-      }.toDF("source", "lr_min_micro", "tok_hwm", "last_batch"),
-      s"$dir/state")
-    ()
+    SegmentCompaction.dropAbove(spark, s"$dir/urls", toBatch)
    }
 }

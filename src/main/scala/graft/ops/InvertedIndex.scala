@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.etl.{Load, WriterLease}
+import graft.ops.SegmentCompaction.{healForRead, live}
 
 /** Persisted inverted index with incremental maintenance + BM25
   * search — the TEXT-index member of the warehouse-index trio
@@ -30,7 +31,7 @@ import graft.etl.{Load, WriterLease}
   *    postings scan, since postings are term-keyed, not doc-keyed).
   *  - `tombstones/epoch=E/` — (doc_id, dl) of logically deleted
   *    documents; every read path anti-joins epochs ≤ the corpus row's
-  *    `del_epoch` (broadcast — the set is |deletes|-bounded).
+  *    `del_epoch` (the [[SegmentCompaction]] ledger).
   *
   * Maintenance contract: batches carry NEW doc_ids (the upstream
   * dedup gate's job) and a monotonically increasing batch id, so
@@ -66,22 +67,12 @@ object InvertedIndex {
 
   def bucketOf(term: Column): Column = pmod(hash(term), lit(Buckets))
 
-  /** Read-path crash heal, GATED on writer-lease liveness
-    * ([[WriterLease.liveHolder]]): swap remnants under a LIVE lease
-    * are a writer's in-flight state, not a crash — a read path
-    * "healing" them could restore a directory the writer is
-    * mid-rename on, or delete the staging it is about to commit
-    * (the reader-races-writer corruption class). A lease silent past
-    * its ttl IS a crash (holders heartbeat), so heals then proceed —
-    * and so does the no-lease case (single-process history, plain
-    * crash remnants). Writers never use this: their heals run
-    * unconditionally INSIDE their own lease.
+  /** The postings generation tree: doc-keyed tombstones; rewrites
+    * cluster each term bucket into its own dir, term-sorted within.
     */
-  private def healForRead(spark: SparkSession, dir: String): Unit =
-    if (!WriterLease.liveHolder(spark, dir)) {
-      Load.recoverSwap(spark, s"$dir/postings")
-      SegmentCompaction.recover(spark, s"$dir/postings")
-    }
+  private[ops] def tree(dir: String) = SegmentCompaction.Tree(dir, "postings",
+    "doc_id", cluster = Seq("bucket"), sort = Seq("term", "doc_id"),
+    parts = Seq("bucket"))
 
   /** (term, doc_id, tf, dl, positions, bucket) of a (doc_id, text)
     * frame — one shuffle (groupBy doc_id×term with map-side combine).
@@ -187,21 +178,6 @@ object InvertedIndex {
     Load.readTable(spark, s"$dir/corpus")
       .map(df => delEpochOf(df.head())).getOrElse(0L)
 
-  /** Anti-join `df` out of the live tombstone set, or `df` untouched
-    * when the index holds no deletes — delete-free indexes keep their
-    * exact pre-delete plans. Only epochs ≤ the COMMITTED `del_epoch`
-    * serve (a crashed [[delete]]'s half-landed epoch is inert); the
-    * tombstone side is |deletes|-bounded, so the anti-join broadcasts
-    * — zero exchanges added on the postings side.
-    */
-  private def liveDocs(spark: SparkSession, dir: String, epoch: Long)
-                      (df: DataFrame): DataFrame =
-    if (epoch <= 0L) df
-    else df.join(
-      broadcast(spark.read.parquet(s"$dir/tombstones")
-        .filter(col("epoch") <= epoch).select(col("doc_id"))),
-      Seq("doc_id"), "left_anti")
-
   /** The corpus high-water mark; -1 when no index exists. */
   def lastBatch(spark: SparkSession, dir: String): Long =
     Load.readTable(spark, s"$dir/corpus")
@@ -274,12 +250,7 @@ object InvertedIndex {
       // recreate postings/ with just this batch and the next
       // recoverSwap would then delete __old — every prior generation —
       // while the corpus row still claimed they landed.
-      Load.recoverSwap(spark, s"$dir/postings")
-      SegmentCompaction.recover(spark, s"$dir/postings")
-      // sibling-table remnants (corpus, …): readTable's heals are
-      // liveness-gated — suppressed under THIS writer's own live
-      // lease — so the writer entry heals them here, inside it
-      Load.recoverTreeSwaps(spark, dir)
+      SegmentCompaction.heal(spark, tree(dir))
       // the batch analyzes under the INDEX's recorded policy — an
       // addBatch analyzing differently from the bootstrap would split
       // one term across two spellings and silently halve its postings
@@ -317,9 +288,9 @@ object InvertedIndex {
       // counter's denominator) apply the SAME tombstone filter the old
       // single-pass aggregate did — and neither re-runs the analyzer
       // (see docRowsFromPostings).
-      val liveIn = liveDocs(spark, dir, epoch)(docs.select(col("doc_id")))
+      val liveIn = live(spark, tree(dir), epoch)(docs.select(col("doc_id")))
       val (bDocs, bSumDl, bZero) = statsFromSidecar(
-        liveDocs(spark, dir, epoch)(
+        live(spark, tree(dir), epoch)(
           spark.read.parquet(s"$dir/docs")
             .filter(col("batch") === batchId)),
         liveIn.count())
@@ -348,52 +319,30 @@ object InvertedIndex {
     * decay gauge. One driver-side listStatus, no Spark job.
     */
   def segmentCount(spark: SparkSession, dir: String): Int = {
-    val p = new Path(s"$dir/postings")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healForRead(spark, dir)
-    if (!fs.exists(p)) 0
-    else {
-      val last = lastBatch(spark, dir)
-      fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .count(_.stripPrefix("batch=").toLong <= last)
-    }
+    healForRead(spark, tree(dir))
+    val last = lastBatch(spark, dir)
+    SegmentCompaction.generations(spark, s"$dir/postings").count(_ <= last)
   }
 
   /** Roll the index back to generation `toBatch` — the bad-batch
-    * recovery lever, completing the rollback story across all three
-    * warehouse index kinds (corpus `CorpusIngest.rollback`, vector
-    * `AdcIngest.rollback`). Same discipline as the vector twin:
-    *
-    *  - the corpus row lands FIRST — rebuilt from the surviving
-    *    postings (each doc lives in exactly ONE generation under the
-    *    [[addBatch]] contract and repeats its dl on every posting row,
-    *    so n_docs/sum_dl re-derive from one (doc_id, dl) dedup + a
-    *    1-row fold over batches ≤ toBatch). A crash between the two
-    *    steps leaves generation dirs ABOVE the high-water mark: inert
-    *    remnants every search path filters out (the `batch ≤
-    *    last_batch` partition guard), the next rollback deletes on
-    *    entry, and a re-[[addBatch]] of the same id dynamic-overwrites.
-    *  - compaction awareness via the [[SegmentCompaction]] coverage
-    *    invariant: a cut is legal iff `toBatch + 1` is itself a live
-    *    generation dir (or the cut is a no-op at the high-water
-    *    mark); a cut INSIDE a merged run is refused — its files
-    *    interleave rows from both sides.
+    * recovery lever, through the shared [[SegmentCompaction.rollback]]
+    * cut (commit row first, coverage-checked, optionally retained).
+    * The corpus row is rebuilt from the surviving postings: each doc
+    * lives in exactly ONE generation under the [[addBatch]] contract
+    * and repeats its dl on every posting row, so n_docs/sum_dl
+    * re-derive from one (doc_id, dl) dedup + a 1-row fold over
+    * batches ≤ toBatch.
     *
     * Rolled-back ids re-ingest bit-identically (postings are a pure
     * function of the batch's documents), which is also what makes a
     * fixed-path index fixture re-entrant without a rebuild.
     *
     * `retainMs > 0` — SNAPSHOT-RETAINED rollback: the cut generations
-    * are not deleted; they stay physically in place (new readers never
-    * see them — every read path filters `batch ≤ last_batch`, and the
-    * corpus row commits the new mark first) on a deferred-deletion
-    * schedule ([[SegmentCompaction.retire]]) executed by a later
-    * lease-holding maintenance call or [[vacuum]] — so an in-flight
-    * reader whose plan pinned the pre-rollback files completes
-    * untouched. A re-[[addBatch]] of a cut id goes live again (the
-    * schedule drops it; the dynamic overwrite is the exactly-once
-    * contract, not a retention hole).
+    * stay physically in place (every read path filters `batch ≤
+    * last_batch`) until a later lease-holding maintenance call or
+    * [[vacuum]] deletes them, so an in-flight reader whose plan pinned
+    * the pre-rollback files completes untouched. A re-[[addBatch]] of
+    * a cut id goes live again.
     */
   def rollback(spark: SparkSession, dir: String, toBatch: Long,
                retainMs: Long = 0L): Unit = {
@@ -404,13 +353,7 @@ object InvertedIndex {
       s"InvertedIndex.rollback: no index at $dir at or above batch " +
         s"$toBatch")
     WriterLease.withLease(spark, dir, "invidx.rollback") { lease =>
-    Load.recoverSwap(spark, s"$dir/postings")
-    SegmentCompaction.recover(spark, s"$dir/postings")
-    Load.recoverTreeSwaps(spark, dir) // sibling tables, under the lease
-    // an unpublished retained merge may cover generations this cut
-    // deletes — discard it (its source gens are still live) before
-    // restructuring, or the eventual publish would resurrect them
-    SegmentCompaction.discardPending(spark, s"$dir/postings")
+    SegmentCompaction.heal(spark, tree(dir))
     // the high-water mark re-derives INSIDE the lease (a concurrent
     // rollback serialized ahead of us may have already cut deeper —
     // its meta must not be overwritten with a stale, higher mark)
@@ -419,65 +362,32 @@ object InvertedIndex {
     require(last >= toBatch,
       s"InvertedIndex.rollback: a concurrent rollback already cut " +
         s"below batch $toBatch (high-water mark now $last)")
-    val p = new Path(s"$dir/postings")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def delete(b: Long): Unit =
-      { fs.delete(new Path(s"$dir/postings/batch=$b"), true); () }
-    val ids = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).toSet
-    // heal: dirs above the high-water mark are a prior crashed
-    // rollback's undeleted remnants OR an earlier retained rollback's
-    // still-scheduled generations — a restructuring writer legally
-    // invalidates those snapshots (delete before validating)
-    ids.filter(_ > last).foreach(delete)
-    val live = ids.filter(_ <= last)
-    require(toBatch == last || live.contains(toBatch + 1),
-      s"InvertedIndex.rollback: generation ${toBatch + 1} has been " +
-        "merged into an earlier tree by compaction — its files hold " +
-        s"rows from batches <= $toBatch too, so rolling back to " +
-        s"$toBatch would corrupt them; rebuild from bootstrap instead")
-    // tombstones SURVIVE a rollback — rollback rewinds the INGEST
-    // stream, not the delete requests: a doc deleted from a surviving
-    // generation stays deleted, and a re-ingested batch re-enters
-    // minus its tombstoned docs (exactly the state had the rollback
-    // never happened). The rebuilt globals must therefore exclude
-    // live tombstoned docs too.
-    val epoch = delEpochOf(cOld)
-    val rebuilt = liveDocs(spark, dir, epoch)(
-      spark.read.parquet(s"$dir/postings")
-        .filter(col("batch") <= toBatch)
-        .groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .withColumn("last_batch", lit(toBatch))
-      .withColumn("del_epoch", lit(epoch))
-      // the zero-token counter is a LIFETIME ingest-quality counter —
-      // it survives the rollback as-is (those documents never reached
-      // the postings, so the rebuild cannot re-derive them)
-      .withColumn("zero_token_docs", lit(zeroTokOf(cOld)))
-    WriterLease.check(spark, lease)
-    Load.replaceTable(spark,
-      withAnalyzerCols(rebuilt, analyzerOf(cOld)), s"$dir/corpus")
-    val cut = live.filter(_ > toBatch).toSeq.sorted
-    if (retainMs > 0L)
-      // deferred deletion: the cut generations stay in place behind
-      // the committed high-water mark until the window passes
-      SegmentCompaction.retire(spark, s"$dir/postings", cut,
-        System.currentTimeMillis() + retainMs)
-    else cut.foreach(delete)
+    SegmentCompaction.rollback(spark, tree(dir), last, toBatch, retainMs) {
+      // tombstones survive the rollback, so the rebuilt globals
+      // exclude live tombstoned docs too
+      val epoch = delEpochOf(cOld)
+      val rebuilt = live(spark, tree(dir), epoch)(
+        spark.read.parquet(s"$dir/postings")
+          .filter(col("batch") <= toBatch)
+          .groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
+        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+        .withColumn("last_batch", lit(toBatch))
+        .withColumn("del_epoch", lit(epoch))
+        // the zero-token counter is a LIFETIME ingest-quality counter —
+        // it survives the rollback as-is (those documents never reached
+        // the postings, so the rebuild cannot re-derive them)
+        .withColumn("zero_token_docs", lit(zeroTokOf(cOld)))
+      WriterLease.check(spark, lease)
+      Load.replaceTable(spark,
+        withAnalyzerCols(rebuilt, analyzerOf(cOld)), s"$dir/corpus")
+    }
     // the docs/ sidecar follows the postings truncation (its dirs are
     // never merged, so every id above the cut goes — remnants above
     // `last` included). Sidecar dirs are read only by delete/rollback
     // (never pinned by a serving plan), so they truncate immediately
     // even under retention; the `batch ≤ last_batch` filter keeps the
     // retained rollback's delete/rollback reads exact regardless.
-    val dPath = new Path(s"$dir/docs")
-    if (fs.exists(dPath))
-      fs.listStatus(dPath).map(_.getPath).filter { q =>
-        val nm = q.getName
-        nm.startsWith("batch=") && nm.stripPrefix("batch=").toLong > toBatch
-      }.foreach(q => { fs.delete(q, true); () })
-    ()
+    SegmentCompaction.dropAbove(spark, s"$dir/docs", toBatch)
     }
   }
 
@@ -511,9 +421,7 @@ object InvertedIndex {
   def delete(spark: SparkSession, dir: String, ids: DataFrame): Long =
    WriterLease.withLease(spark, dir, "invidx.delete") { lease =>
     import spark.implicits._
-    Load.recoverSwap(spark, s"$dir/postings")
-    SegmentCompaction.recover(spark, s"$dir/postings")
-    Load.recoverTreeSwaps(spark, dir) // sibling tables, under the lease
+    SegmentCompaction.heal(spark, tree(dir))
     val c = Load.readTable(spark, s"$dir/corpus").getOrElse(
       sys.error(s"InvertedIndex.delete: no index at $dir")).head()
     val fs = new Path(dir)
@@ -523,43 +431,17 @@ object InvertedIndex {
         "support (no docs/ sidecar for the bootstrap generation) — " +
         "rebuild the index to enable deletes")
     val e0 = delEpochOf(c)
-    // heal: epoch dirs above the committed del_epoch are a prior
-    // crashed delete's remnants (the corpus row is the commit point)
-    val tPath = new Path(s"$dir/tombstones")
-    if (fs.exists(tPath))
-      fs.listStatus(tPath).map(_.getPath).filter { q =>
-        val nm = q.getName
-        nm.startsWith("epoch=") && nm.stripPrefix("epoch=").toLong > e0
-      }.foreach(q => { fs.delete(q, true); () })
-    // materialized ONCE (eager local checkpoint): the globals aggregate
-    // and the epoch write below MUST see the same rows — with a
-    // nondeterministic `ids` (sample/limit-derived), a lazily
-    // recomputed frame could hand each action a different victim set,
-    // permanently desyncing the committed globals from the tombstone
-    // ledger. The checkpoint truncates lineage to the materialized
-    // rows (delete-request-sized), so both actions replay nothing.
-    val victims = liveDocs(spark, dir, e0)(
-      spark.read.parquet(s"$dir/docs")
-        .filter(col("batch") <= c.getAs[Long]("last_batch"))
-        .join(broadcast(ids.select(col("doc_id")).distinct()),
-          Seq("doc_id"), "left_semi"))
-      .select(col("doc_id"), col("dl"))
-      .localCheckpoint()
-    val a = victims.agg(count(lit(1)).as("n"),
-      coalesce(sum(col("dl")), lit(0L)).as("sdl")).head()
-    val (n, sdl) = (a.getLong(0), a.getLong(1))
-    if (n == 0L) 0L
-    else {
-      // the new epoch writes DIRECTLY to its own partition dir (never
-      // an overwrite of the tombstones root the victims plan read from
-      // — the read-own-target hazard Load.swapIn documents, and a mode
-      // that depended on dynamic-overwrite staying configured). The
-      // entry heal above removed any crashed epoch dir > e0, so
-      // errorifexists is exact; readers discover `epoch` from the dir
-      // name, same as the partitionBy layout.
-      victims.write.mode("errorifexists")
-        .parquet(s"$dir/tombstones/epoch=${e0 + 1}")
-      WriterLease.check(spark, lease)
+    SegmentCompaction.tombstone(spark, tree(dir), lease, e0,
+      live(spark, tree(dir), e0)(
+        spark.read.parquet(s"$dir/docs")
+          .filter(col("batch") <= c.getAs[Long]("last_batch"))
+          .join(broadcast(ids.select(col("doc_id")).distinct()),
+            Seq("doc_id"), "left_semi"))
+        .select(col("doc_id"), col("dl"))) { victims =>
+      val a = victims.agg(count(lit(1)).as("n"),
+        coalesce(sum(col("dl")), lit(0L)).as("sdl")).head()
+      (a.getLong(0), (a.getLong(0), a.getLong(1)))
+    } { case (n, sdl) =>
       Load.replaceTable(spark,
         withAnalyzerCols(
           Seq((c.getAs[Long]("n_docs") - n, c.getAs[Long]("sum_dl") - sdl,
@@ -568,7 +450,7 @@ object InvertedIndex {
               "zero_token_docs"),
           analyzerOf(c)),
         s"$dir/corpus")
-      n
+      ()
     }
   }
 
@@ -599,124 +481,34 @@ object InvertedIndex {
   def compact(spark: SparkSession, dir: String,
               retainMs: Long = 0L): Unit =
    WriterLease.withLease(spark, dir, "invidx.compact") { lease =>
-    val postingsDir = s"$dir/postings"
-    Load.recoverSwap(spark, postingsDir)
-    Load.recoverTreeSwaps(spark, dir) // sibling tables, under the lease
-    // a crashed tiered merge must heal BEFORE the full rewrite reads
-    // the tree, or the generations sitting in the aside dir would be
-    // silently dropped from the rewrite; an unpublished retained merge
-    // is pure derived data of the gens this rewrite covers — discard
-    // it rather than race its eventual publish
-    SegmentCompaction.recover(spark, postingsDir)
-    SegmentCompaction.discardPending(spark, postingsDir)
-    val last = lastBatch(spark, dir)
-    val live = SegmentCompaction.genSizes(spark, postingsDir)
-      .map(_._1).filter(_ <= last)
-    val staging = if (retainMs > 0L) s"$postingsDir.__tiered_staging"
-      else s"$postingsDir.__staging"
-    spark.read.parquet(postingsDir)
-      .filter(col("batch") <= last) // remnants die here
-      // PURGE: tombstoned rows are dropped from the rewrite — the
-      // physical reclaim behind [[delete]]'s logical tombstones (the
-      // tombstone rows themselves stay: they keep delete replays
-      // no-ops, and the read-path filter is idempotent on purged rows)
-      .transform(liveDocs(spark, dir, delEpoch(spark, dir)))
-      .drop("batch").withColumn("batch", lit(0L))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("batch", "bucket")
-      .parquet(staging)
-    WriterLease.check(spark, lease)
-    if (retainMs > 0L)
-      SegmentCompaction.commit(spark, postingsDir, live, retainMs)
-    else Load.atomicSwap(spark, staging, postingsDir)
+    // a crashed tiered merge heals BEFORE the full rewrite reads the
+    // tree, or the generations sitting in the aside dir would be
+    // silently dropped from the rewrite
+    SegmentCompaction.heal(spark, tree(dir))
+    SegmentCompaction.compact(spark, tree(dir), lease, lastBatch(spark, dir),
+      delEpoch(spark, dir), retainMs)
   }
 
-  /** TOMBSTONE-DEBT purge: rewrite (only) the generations whose
-    * tombstoned-row fraction has reached `tau`, dropping the dead rows
-    * — the reclaim lever for the case the size-tiered policy never
-    * reaches: a huge SETTLED generation that is 50% deleted would
-    * otherwise hold its dead bytes until it happens to merge
-    * (RocksDB's delete-triggered compaction answers the same problem).
-    * Generation-scoped: each indebted `batch=` dir rewrites through
-    * its own two-rename swap ([[graft.etl.Load.atomicSwap]], healed by
-    * recoverScopedSwaps in every entry heal); generations under the
-    * threshold are never opened — this is exactly NOT a full rewrite.
-    * A pure physical filter (every read path already anti-joins
-    * tombstones), so serving is identical before/after. The debt scan
-    * is one id-column pass + a broadcast semi-join — maintenance
-    * cadence, the same cost as q202's purge_backlog_rows. Returns the
-    * purged generation ids.
+  /** TOMBSTONE-DEBT purge ([[SegmentCompaction.purgeDebt]]): rewrite
+    * only the generations whose tombstoned-row fraction has reached
+    * `tau`, dropping the dead rows; generations under the threshold
+    * are never opened. Serving is identical before and after. Returns
+    * the purged generation ids.
     *
     * `retainMs > 0` — SNAPSHOT-RETAINED purge: each indebted
-    * generation's rewrite commits as its own HIDDEN pending ([[
-    * SegmentCompaction.commit]] with a single-id run); the indebted
-    * generations keep serving byte-untouched (reads anti-join the
-    * tombstones either way — the views are identical) until a later
+    * generation's rewrite commits as its own HIDDEN pending; the
+    * indebted generations keep serving byte-untouched until a later
     * lease-holding maintenance call or [[vacuum]] publishes after the
     * window. Bytes reclaim at publish, not at commit.
     */
   def purgeDebt(spark: SparkSession, dir: String,
                 tau: Double = 0.5, retainMs: Long = 0L): Seq[Long] =
    WriterLease.withLease(spark, dir, "invidx.purgeDebt") { lease =>
-    require(tau > 0.0 && tau <= 1.0, "tau must be in (0, 1]")
-    val postingsDir = s"$dir/postings"
-    Load.recoverSwap(spark, postingsDir)
-    SegmentCompaction.recover(spark, postingsDir)
-    Load.recoverScopedSwaps(spark, postingsDir)
-    Load.recoverTreeSwaps(spark, dir) // sibling tables, under the lease
-    // writer-side maintenance cadence: publish any DUE retained
-    // rewrite first; generations still covered by an in-window
-    // pending are then SKIPPED below (never discarded — their
-    // snapshots outlive this purge, and their debt drains at publish)
-    SegmentCompaction.publishDue(spark, postingsDir)
+    SegmentCompaction.heal(spark, tree(dir))
     val c = Load.readTable(spark, s"$dir/corpus").getOrElse(
       sys.error(s"InvertedIndex.purgeDebt: no index at $dir")).head()
-    val epoch = delEpochOf(c)
-    if (epoch <= 0L) Seq.empty
-    else {
-      val last = c.getAs[Long]("last_batch")
-      val live = spark.read.parquet(postingsDir)
-        .filter(col("batch") <= last)
-      val tomb = broadcast(spark.read.parquet(s"$dir/tombstones")
-        .filter(col("epoch") <= epoch).select(col("doc_id")))
-      val debt = live
-        .join(tomb, Seq("doc_id"), "left_semi")
-        .groupBy(col("batch").cast(LongType).as("batch"))
-        .count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // generations already covered by a committed-but-unpublished
-      // rewrite are skipped, not re-committed (the overlap check would
-      // refuse loudly; their debt drains when that pending publishes)
-      val covered = SegmentCompaction.pendings(spark, postingsDir)
-        .flatMap(_.ids).toSet
-      val victims = SegmentCompaction.genSizes(spark, postingsDir)
-        .filter(_._1 <= last)
-        .collect { case (b, n)
-          if n > 0 && !covered(b) &&
-            debt.getOrElse(b, 0L).toDouble / n >= tau => b }
-      victims.foreach { b =>
-        val rewritten = liveDocs(spark, dir, epoch)(
-          spark.read.parquet(postingsDir).filter(col("batch") === b))
-          .drop("batch")
-          .repartition(col("bucket"))
-          .sortWithinPartitions(col("term"), col("doc_id"))
-        if (retainMs > 0L) {
-          // hidden single-generation pending: the indebted generation
-          // keeps serving until the window passes
-          rewritten.write.mode("overwrite").partitionBy("bucket")
-            .parquet(s"$postingsDir.__tiered_staging/batch=$b")
-          WriterLease.check(spark, lease)
-          SegmentCompaction.commit(spark, postingsDir, Seq(b), retainMs)
-        } else {
-          val staging = s"$postingsDir.__debt_staging"
-          rewritten.write.mode("overwrite").partitionBy("bucket")
-            .parquet(staging)
-          WriterLease.check(spark, lease)
-          Load.atomicSwap(spark, staging, s"$postingsDir/batch=$b")
-        }
-      }
-      victims
-    }
+    SegmentCompaction.purgeDebt(spark, tree(dir), lease,
+      c.getAs[Long]("last_batch"), delEpochOf(c), tau, retainMs)
   }
 
   /** Force-publish every snapshot-retained state NOW — pending
@@ -728,12 +520,8 @@ object InvertedIndex {
     */
   def vacuum(spark: SparkSession, dir: String): Seq[Long] =
     WriterLease.withLease(spark, dir, "invidx.vacuum") { _ =>
-      Load.recoverSwap(spark, s"$dir/postings")
-      SegmentCompaction.recover(spark, s"$dir/postings")
-      Load.recoverTreeSwaps(spark, dir) // sibling tables, under the lease
-      SegmentCompaction.publish(spark, s"$dir/postings") ++
-        SegmentCompaction.retireDue(spark, s"$dir/postings",
-          lastBatch(spark, dir), force = true)
+      SegmentCompaction.heal(spark, tree(dir))
+      SegmentCompaction.vacuum(spark, tree(dir), lastBatch(spark, dir))
     }
 
   /** The compaction POLICY hook a maintenance runner calls after each
@@ -773,40 +561,9 @@ object InvertedIndex {
                     minMerge: Int = 2,
                     retainMs: Long = 0L): Seq[Long] =
    WriterLease.withLease(spark, dir, "invidx.tieredCompact") { lease =>
-    val postingsDir = s"$dir/postings"
-    Load.recoverSwap(spark, postingsDir)
-    SegmentCompaction.recover(spark, postingsDir)
-    Load.recoverTreeSwaps(spark, dir) // sibling tables, under the lease
-    // a prior retained merge whose window has passed publishes now
-    // (writer-side, under the lease); while one is still within its
-    // window, maintenance BACKS OFF — a second merge over the same
-    // tail would race the eventual publish. A retained rollback's
-    // deferred deletions execute here too once due.
-    SegmentCompaction.publishDue(spark, postingsDir)
-    SegmentCompaction.retireDue(spark, postingsDir, lastBatch(spark, dir))
-    val ids =
-      if (SegmentCompaction.pending(spark, postingsDir).nonEmpty) Seq.empty
-      else SegmentCompaction.mergeSet(
-        SegmentCompaction.genSizes(spark, postingsDir)
-          .filter(_._1 <= lastBatch(spark, dir)), ratio, minMerge)
-    if (ids.isEmpty) Seq.empty
-    else {
-      val lo = ids.min
-      spark.read.parquet(postingsDir)
-        .filter(col("batch").isin(ids: _*))
-        // purge tombstoned rows falling inside the merged run (settled
-        // generations keep theirs until they eventually merge — the
-        // byte-identity guarantee is untouched)
-        .transform(liveDocs(spark, dir, delEpoch(spark, dir)))
-        .drop("batch").withColumn("batch", lit(lo))
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("term"), col("doc_id"))
-        .write.mode("overwrite").partitionBy("batch", "bucket")
-        .parquet(s"$postingsDir.__tiered_staging")
-      WriterLease.check(spark, lease)
-      SegmentCompaction.commit(spark, postingsDir, ids, retainMs)
-      ids
-    }
+    SegmentCompaction.heal(spark, tree(dir))
+    SegmentCompaction.tieredCompact(spark, tree(dir), lease,
+      lastBatch(spark, dir), delEpoch(spark, dir), ratio, minMerge, retainMs)
   }
 
   /** Exact phrase lookup over the persisted positional index:
@@ -830,7 +587,7 @@ object InvertedIndex {
     // otherwise serve silently incomplete results against globals
     // that still count the aside'd docs — gated on lease liveness
     // (a live writer's in-flight state is not a crash)
-    healForRead(spark, dir)
+    healForRead(spark, tree(dir))
     import spark.implicits._
     // generations above the high-water mark never serve (a crashed
     // rollback's remnants — the corpus row is the commit point), and
@@ -847,7 +604,7 @@ object InvertedIndex {
     val distinctTerms = qphrase.distinct
     val buckets = distinctTerms.toDF("term").select(bucketOf(col("term")))
       .as[Int].collect().distinct.toSeq
-    val p = liveDocs(spark, dir, delEpochOf(c))(
+    val p = live(spark, tree(dir), delEpochOf(c))(
       spark.read.parquet(s"$dir/postings")
         .filter(col("batch") <= c.getAs[Long]("last_batch") &&
           col("bucket").isin(buckets: _*) &&
@@ -903,7 +660,7 @@ object InvertedIndex {
     // otherwise serve silently incomplete results against globals
     // that still count the aside'd docs — gated on lease liveness
     // (a live writer's in-flight state is not a crash)
-    healForRead(spark, dir)
+    healForRead(spark, tree(dir))
     import spark.implicits._
     val c = Load.readTable(spark, s"$dir/corpus").getOrElse(
       sys.error(s"InvertedIndex.proximitySearch: no corpus at $dir")).head()
@@ -914,7 +671,7 @@ object InvertedIndex {
     val avgdl = sumDl.toDouble / nDocs
     val buckets = qterms.toDF("term").select(bucketOf(col("term")))
       .as[Int].collect().distinct.toSeq
-    val p = liveDocs(spark, dir, delEpochOf(c))(
+    val p = live(spark, tree(dir), delEpochOf(c))(
       spark.read.parquet(s"$dir/postings")
         .filter(col("batch") <= c.getAs[Long]("last_batch") &&
           col("bucket").isin(buckets: _*) &&
@@ -999,7 +756,7 @@ object InvertedIndex {
     // otherwise serve silently incomplete results against globals
     // that still count the aside'd docs — gated on lease liveness
     // (a live writer's in-flight state is not a crash)
-    healForRead(spark, dir)
+    healForRead(spark, tree(dir))
     import spark.implicits._
     val c = Load.readTable(spark, s"$dir/corpus").getOrElse(
       sys.error(s"InvertedIndex.maxScoreSearch: no corpus at $dir")).head()
@@ -1014,7 +771,7 @@ object InvertedIndex {
       // tombstoned docs leave BEFORE the stats pass, so per-term df,
       // upper bounds and the θ seed all see live rows only — exactly
       // the rebuilt-index quantities (pruning stays exact)
-      liveDocs(spark, dir, delEpochOf(c))(
+      live(spark, tree(dir), delEpochOf(c))(
         spark.read.parquet(s"$dir/postings")
           .filter(col("batch") <= c.getAs[Long]("last_batch") &&
             col("bucket").isin(buckets: _*) &&
@@ -1113,7 +870,7 @@ object InvertedIndex {
     // otherwise serve silently incomplete results against globals
     // that still count the aside'd docs — gated on lease liveness
     // (a live writer's in-flight state is not a crash)
-    healForRead(spark, dir)
+    healForRead(spark, tree(dir))
     import spark.implicits._
     val c = Load.readTable(spark, s"$dir/corpus").getOrElse(
       sys.error(s"InvertedIndex.searchBatch: no corpus at $dir")).head()
@@ -1144,7 +901,7 @@ object InvertedIndex {
     val norm = lit(0.25) + lit(0.75) * col("dl") / lit(avgdl)
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("bm25_micro").desc, col("doc_id"))
-    liveDocs(spark, dir, delEpochOf(c))(
+    live(spark, tree(dir), delEpochOf(c))(
       spark.read.parquet(s"$dir/postings")
         .filter(col("batch") <= c.getAs[Long]("last_batch") &&
           col("bucket").isin(buckets: _*) &&
@@ -1198,7 +955,7 @@ object InvertedIndex {
       "a term cannot be MUST and MUST_NOT at once")
     // heal BEFORE reading (the AdcIngest.index contract), gated on
     // lease liveness
-    healForRead(spark, dir)
+    healForRead(spark, tree(dir))
     import spark.implicits._
     val c = Load.readTable(spark, s"$dir/corpus").getOrElse(
       sys.error(s"InvertedIndex.booleanSearch: no corpus at $dir")).head()
@@ -1220,7 +977,7 @@ object InvertedIndex {
     val allTerms = (scoreTermsA ++ mustNotA).distinct
     val buckets = allTerms.toDF("term").select(bucketOf(col("term")))
       .as[Int].collect().distinct.toSeq
-    val p = liveDocs(spark, dir, delEpochOf(c))(
+    val p = live(spark, tree(dir), delEpochOf(c))(
       spark.read.parquet(s"$dir/postings")
         .filter(col("batch") <= c.getAs[Long]("last_batch") &&
           col("bucket").isin(buckets: _*) &&
@@ -1272,7 +1029,7 @@ object InvertedIndex {
     require(must.nonEmpty, "deleteByQuery needs at least one MUST term")
     require(must.intersect(mustNot).isEmpty,
       "a term cannot be MUST and MUST_NOT at once")
-    healForRead(spark, dir)
+    healForRead(spark, tree(dir))
     import spark.implicits._
     val c = Load.readTable(spark, s"$dir/corpus").getOrElse(
       sys.error(s"InvertedIndex.deleteByQuery: no index at $dir")).head()
@@ -1292,7 +1049,7 @@ object InvertedIndex {
     // would re-match here and ride into delete() only to count zero —
     // semantically harmless, but the broadcast match set would grow
     // past its |new matches| bound on repeated overlapping takedowns
-    val p = liveDocs(spark, dir, delEpochOf(c))(
+    val p = live(spark, tree(dir), delEpochOf(c))(
       spark.read.parquet(s"$dir/postings")
         .filter(col("batch") <= c.getAs[Long]("last_batch") &&
           col("bucket").isin(buckets: _*) &&
@@ -1324,7 +1081,7 @@ object InvertedIndex {
     // otherwise serve silently incomplete results against globals
     // that still count the aside'd docs — gated on lease liveness
     // (a live writer's in-flight state is not a crash)
-    healForRead(spark, dir)
+    healForRead(spark, tree(dir))
     import spark.implicits._
     val c = Load.readTable(spark, s"$dir/corpus").getOrElse(
       sys.error(s"InvertedIndex.search: no corpus table at $dir")).head()
@@ -1343,7 +1100,7 @@ object InvertedIndex {
     val idf = (lit(nDocs.toDouble) - col("df") + lit(0.5)) /
       (col("df") + lit(0.5))
     val norm = lit(0.25) + lit(0.75) * col("dl") / lit(avgdl)
-    liveDocs(spark, dir, delEpochOf(c))(
+    live(spark, tree(dir), delEpochOf(c))(
       spark.read.parquet(s"$dir/postings")
         .filter(col("batch") <= c.getAs[Long]("last_batch") &&
           col("bucket").isin(buckets: _*) &&
@@ -1358,9 +1115,9 @@ object InvertedIndex {
       .limit(k)
   }
 
-  /** TIME-TRAVEL SEARCH: BM25 exactly as of generation `batch` — the
-    * text twin of `CorpusIngest.readAsOf`/`AdcIngest.readAsOf`, and
-    * the serving verb a [[graft.ops.Release]] manifest pins. Postings
+  /** TIME-TRAVEL SEARCH: BM25 exactly as of generation `batch` (as
+    * `CorpusIngest.readAsOf`/`AdcIngest.readAsOf` read rows), and the
+    * serving verb a [[graft.ops.Release]] manifest pins. Postings
     * AND the BM25 globals rewind to the ingest stream at batch I: the
     * globals re-derive from the `docs/` sidecar (n_docs-sized — never
     * a postings scan) over batches ≤ I, so historical idf/avgdl are
@@ -1369,15 +1126,16 @@ object InvertedIndex {
     * today's tombstones drop from postings and globals alike (the
     * readAsOf house rule: rewinding the ingest stream never
     * resurrects a takedown). Cuts above the high-water mark or inside
-    * a tiered-merge run are refused loudly (the AdcIngest coverage
-    * rule: a merged dir holds a contiguous run under its lowest id,
-    * so a cut inside it would silently include newer rows).
+    * a tiered-merge run are refused loudly
+    * ([[SegmentCompaction.onBoundary]]: a merged dir holds a
+    * contiguous run under its lowest id, so a cut inside it would
+    * silently include newer rows).
     */
   def searchAsOf(spark: SparkSession, dir: String, terms: Seq[String],
                  k: Int, batch: Long): DataFrame = {
     require(terms.nonEmpty && k > 0)
     require(batch >= 0, "as-of generations start at 0 (the bootstrap)")
-    healForRead(spark, dir)
+    healForRead(spark, tree(dir))
     import spark.implicits._
     val c = Load.readTable(spark, s"$dir/corpus").getOrElse(
       sys.error(s"InvertedIndex.searchAsOf: no corpus table at $dir"))
@@ -1386,12 +1144,7 @@ object InvertedIndex {
     require(batch <= last,
       s"InvertedIndex.searchAsOf: generation $batch is above the " +
         s"high-water mark $last")
-    val p = new Path(s"$dir/postings")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).filter(_ <= last).toSet
-    require(batch == last || live.contains(batch + 1),
+    require(SegmentCompaction.onBoundary(spark, s"$dir/postings", last, batch),
       s"InvertedIndex.searchAsOf: generation ${batch + 1} has been " +
         "merged into an earlier tree by compaction — an as-of cut " +
         "inside the merged run would include newer rows; snapshot " +
@@ -1403,7 +1156,7 @@ object InvertedIndex {
     // as-of globals from the docs/ sidecar minus TODAY's tombstones —
     // one n_docs-bounded aggregate (the sidecar mirrors the corpus
     // row: only documents that produce postings count)
-    val g = liveDocs(spark, dir, del)(
+    val g = live(spark, tree(dir), del)(
       spark.read.parquet(s"$dir/docs").filter(col("batch") <= batch))
       .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s"))
       .head()
@@ -1418,7 +1171,7 @@ object InvertedIndex {
     val idf = (lit(nDocs.toDouble) - col("df") + lit(0.5)) /
       (col("df") + lit(0.5))
     val norm = lit(0.25) + lit(0.75) * col("dl") / lit(avgdl)
-    liveDocs(spark, dir, del)(
+    live(spark, tree(dir), del)(
       spark.read.parquet(s"$dir/postings")
         .filter(col("batch") <= batch &&
           col("bucket").isin(buckets: _*) &&

@@ -1,16 +1,37 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
-/** Size-tiered segment merging for the `batch=I`-partitioned warehouse
-  * indexes ([[InvertedIndex]], [[AdcIngest]]) — the write-amplification
-  * fix over their full-rewrite `compact`: a full compact rewrites the
-  * ENTIRE index into `batch=0` every time the policy fires, so a steady
-  * append stream with segment budget K rewrites O(N·index/K) total
-  * bytes — the classic full-rewrite anti-shape at warehouse scale
+import graft.etl.{Load, LocalParquet, WriterLease}
+
+/** The generation tree of the three batched warehouses —
+  * [[InvertedIndex]] (`postings/`), [[AdcIngest]] (`index/`) and
+  * [[CorpusIngest]] (`corpus/`) — and its one lifecycle, LSM style
   * (O'Neil et al., "The Log-Structured Merge-Tree", Acta Informatica
-  * 1996; the tiering here is the size-tiered policy of Lucene's
+  * 1996). Each warehouse describes its tree once ([[Tree]]: key
+  * column and physical layout) and keeps only its own commit point
+  * (the corpus row with the BM25 globals, the vector meta row, or
+  * `delmeta` + `state`); everything else is defined here, once:
+  *
+  *  - the generation listing ([[generations]]), the only parser of
+  *    `batch=<id>` dir names;
+  *  - the tombstone ledger under `tombstones/epoch=E/`: the serving
+  *    anti-join ([[live]]) and the exactly-once epoch write
+  *    ([[tombstone]]);
+  *  - the tombstone-debt purge ([[purgeDebt]]);
+  *  - the rewrite behind full and size-tiered compaction ([[compact]],
+  *    [[tieredCompact]]);
+  *  - the rollback cut ([[rollback]]), snapshot retention (hidden
+  *    pending rewrites, deferred retirement) and every crash heal.
+  *
+  * Size-tiered merging is the write-amplification fix over the
+  * full-rewrite [[compact]]: a full compact rewrites the ENTIRE tree
+  * into `batch=0` every time the policy fires, so a steady append
+  * stream with segment budget K rewrites O(N·index/K) total bytes
+  * (the tiering is the size-tiered policy of Lucene's
   * TieredMergePolicy / RocksDB universal compaction). Tiered merging
   * rewrites only the SMALL unsettled tail of generations; a large
   * settled tree's files are never opened, moved, or rewritten.
@@ -30,11 +51,11 @@ import org.apache.spark.sql.SparkSession
   * preserves the coverage invariant the warehouses rely on: live dir
   * ids i_0 < … < i_k partition the original batches 0..last_batch into
   * runs, dir i_j holding exactly batches [i_j, i_{j+1}−1] (i_k holds
-  * [i_k, last]). That is what lets [[AdcIngest.rollback]] decide — from
-  * the dir listing and the meta high-water mark alone — whether a
-  * rollback cut falls on a generation boundary (deletable) or inside a
-  * merged tree (refused: rows below the cut share files with rows
-  * above it).
+  * [i_k, last]). That is what lets [[rollback]] and the as-of reads
+  * decide — from the dir listing and the high-water mark alone —
+  * whether a cut falls on a generation boundary ([[onBoundary]]) or
+  * inside a merged tree (refused: rows below the cut share files with
+  * rows above it).
   *
   * Crash safety — the two-rename discipline of
   * [[graft.etl.Load.atomicSwap]], scoped to the merged run:
@@ -47,8 +68,8 @@ import org.apache.spark.sql.SparkSession
   *  4. the staged merged dir renames into the live tree as
   *     `batch=<lowest id>` — the commit point;
   *  5. aside + staging are deleted.
-  * [[recover]] (called by every maintenance/read entry point alongside
-  * recoverSwap) heals any crash point: aside without manifest → nothing
+  * [[recover]] (called by every maintenance/read entry point) heals
+  * any crash point: aside without manifest → nothing
   * moved, discard; manifest present and live `batch=<lo>` missing →
   * uncommitted, restore the moved dirs; live `batch=<lo>` present →
   * committed (or never started), discard remnants. Every crash point
@@ -84,23 +105,335 @@ object SegmentCompaction {
   final case class PendingMerge(ids: Seq[Long], publishAfterMs: Long,
                                 dir: Path)
 
+  /** One warehouse's generation tree: the warehouse root `dir` (home
+    * of the `tombstones/` ledger and of the writer lease), the tree's
+    * dir `name` under it, the id column `key` the ledger holds, and the
+    * physical layout every rewrite lays rows out in — `cluster`
+    * (repartition keys), `sort` (order within each file) and `parts`
+    * (sub-partition dirs inside a generation). `merges = false` marks
+    * a tree compaction never folds into runs (the corpus): a missing
+    * generation dir there is an empty batch, not a merged one, so
+    * rollback skips the coverage check.
+    */
+  final case class Tree(dir: String, name: String, key: String,
+                        cluster: Seq[String] = Nil, sort: Seq[String] = Nil,
+                        parts: Seq[String] = Nil, merges: Boolean = true) {
+    def path: String = s"$dir/$name"
+
+    private[SegmentCompaction] def layout(df: DataFrame): DataFrame = {
+      val c = if (cluster.isEmpty) df else df.repartition(cluster.map(col): _*)
+      if (sort.isEmpty) c else c.sortWithinPartitions(sort.map(col): _*)
+    }
+  }
+
+  /** Ids of the `batch=<id>` generation dirs under `tree`, ascending —
+    * the one parser of generation dir names. A name that is not
+    * `batch=<long>` is not a generation and is skipped: under a live
+    * writer lease the read paths do not heal, so a reader can list a
+    * purge's in-flight `batch=N.__old` swap remnant.
+    */
+  def generations(spark: SparkSession, tree: String): Seq[Long] = {
+    val p = new Path(tree)
+    val fs = fsOf(spark, p)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.filter(_.isDirectory)
+      .flatMap(st => Some(st.getPath.getName).filter(_.startsWith("batch="))
+        .flatMap(_.stripPrefix("batch=").toLongOption))
+      .sorted
+  }
+
+  /** Whether a cut at generation `at` (≤ the high-water mark `last`)
+    * falls on a generation boundary: `at + 1` is itself a generation
+    * dir, or the cut is the high-water mark. Under the coverage
+    * invariant a cut anywhere else lies inside a merged run.
+    */
+  def onBoundary(spark: SparkSession, tree: String, last: Long,
+                 at: Long): Boolean =
+    at == last || generations(spark, tree).contains(at + 1)
+
   /** (batch id, row count) per live generation, ascending id. ROWS are
     * the tiering metric, not directory bytes: postings and PQ codes
     * are fixed-width rows, so rows ∝ data bytes at scale — but unlike
     * bytes, rows aren't floored by per-file parquet footer overhead
     * (a 64-bucket generation carries ~64 footers no matter how few
     * rows it holds, which at small scale makes every generation look
-    * the same size and the policy nondeterministic). The count reads
-    * only the partition column — footer metadata, no data pages.
+    * the same size and the policy nondeterministic). Counted from
+    * each generation's parquet footers on the driver — no schema
+    * inference, no partition discovery, no Spark job; zero-row
+    * generations are omitted.
     */
   def genSizes(spark: SparkSession, tree: String): Seq[(Long, Long)] =
-    // exact per-generation row counts straight from each batch= dir's
-    // parquet footers on the driver — the same numbers the previous
-    // `read.parquet(tree).groupBy(batch).count()` computed, without the
-    // schema inference + partition discovery + Spark job every
-    // maintenance verb was paying per call (guide §1.2; zero-row
-    // generations are omitted by both forms)
-    graft.etl.LocalParquet.partitionRowCounts(spark, tree, "batch")
+    generations(spark, tree)
+      .map(id => id -> LocalParquet.rowCount(spark, s"$tree/batch=$id"))
+      .filter(_._2 > 0L)
+
+  private def dropGeneration(spark: SparkSession, tree: String,
+                             id: Long): Unit = {
+    fsOf(spark, new Path(tree)).delete(new Path(s"$tree/batch=$id"), true)
+    ()
+  }
+
+  /** Delete every generation above `toBatch` from a per-generation
+    * sidecar tree (the inverted index's `docs/`, the corpus `urls/`)
+    * that follows its warehouse's rollback.
+    */
+  private[graft] def dropAbove(spark: SparkSession, tree: String,
+                               toBatch: Long): Unit =
+    generations(spark, tree).filter(_ > toBatch)
+      .foreach(dropGeneration(spark, tree, _))
+
+  // ---- the tombstone ledger ----
+
+  /** The committed tombstone ids: epochs ≤ the warehouse's committed
+    * `epoch` (a crashed delete's half-landed epoch above it is inert).
+    */
+  private[graft] def tombstones(spark: SparkSession, t: Tree,
+                                epoch: Long): DataFrame =
+    spark.read.parquet(s"${t.dir}/tombstones")
+      .filter(col("epoch") <= epoch).select(col(t.key))
+
+  /** Anti-join `df` out of the committed tombstone set, or `df`
+    * untouched when the warehouse holds no deletes — delete-free trees
+    * keep their exact pre-delete plans. The tombstone side is
+    * |deletes|-bounded, so it broadcasts: zero exchanges added on the
+    * served side.
+    */
+  private[graft] def live(spark: SparkSession, t: Tree, epoch: Long)
+                         (df: DataFrame): DataFrame =
+    if (epoch <= 0L) df
+    else df.join(broadcast(tombstones(spark, t, epoch)), Seq(t.key),
+      "left_anti")
+
+  /** The ledger write behind every warehouse's delete — exactly-once
+    * and crash-safe:
+    *  1. epoch dirs above the committed `e0` are a crashed delete's
+    *     remnants (the warehouse's commit row is the commit point) and
+    *     are deleted first;
+    *  2. `victims` — built after that heal, already filtered against
+    *     the ledger — materializes ONCE (eager local checkpoint):
+    *     `measure` and the epoch write must see the same rows, or a
+    *     nondeterministic `ids` (sample/limit-derived) could hand each
+    *     action a different victim set and desync the commit row from
+    *     the ledger;
+    *  3. `measure` returns the new-victim count (plus whatever the
+    *     commit needs); zero writes nothing and leaves the epoch, so a
+    *     replayed delete is a no-op;
+    *  4. the victims land as epoch `e0 + 1` in their OWN dir — never an
+    *     overwrite of the tombstones root a reader may hold open; step
+    *     1 removed any remnant, so errorifexists is exact;
+    *  5. after the fence check, `commit` writes the commit row LAST.
+    * Returns the number of newly deleted rows.
+    */
+  private[graft] def tombstone[A](spark: SparkSession, t: Tree,
+                                  lease: WriterLease.Lease, e0: Long,
+                                  victims: => DataFrame)
+                                 (measure: DataFrame => (Long, A))
+                                 (commit: A => Unit): Long = {
+    val root = new Path(s"${t.dir}/tombstones")
+    val fs = fsOf(spark, root)
+    if (fs.exists(root))
+      fs.listStatus(root).map(_.getPath).filter { q =>
+        q.getName.startsWith("epoch=") &&
+          q.getName.stripPrefix("epoch=").toLongOption.exists(_ > e0)
+      }.foreach(q => fs.delete(q, true))
+    val v = victims.localCheckpoint()
+    val (n, a) = measure(v)
+    if (n > 0L) {
+      v.write.mode("errorifexists")
+        .parquet(s"${t.dir}/tombstones/epoch=${e0 + 1}")
+      WriterLease.check(spark, lease)
+      commit(a)
+    }
+    n
+  }
+
+  // ---- heals ----
+
+  /** Writer-side entry heal of `t`, run unconditionally INSIDE the
+    * caller's lease: the tree's own swap and merge remnants
+    * ([[recover]]), then the sibling-table swap remnants (state, meta,
+    * corpus row, …) whose read-side heals are gated on lease liveness
+    * and so are suppressed under this writer's own lease.
+    */
+  private[graft] def heal(spark: SparkSession, t: Tree): Unit = {
+    recover(spark, t.path)
+    Load.recoverTreeSwaps(spark, t.dir)
+  }
+
+  /** Read-path heal, GATED on writer-lease liveness: remnants under a
+    * LIVE lease are a writer's in-flight state, not a crash — a reader
+    * "healing" them could restore a directory the writer is mid-rename
+    * on, or delete the staging it is about to commit. A lease silent
+    * past its ttl IS a crash (holders heartbeat), so heals then
+    * proceed, as they do with no lease at all.
+    */
+  private[graft] def healForRead(spark: SparkSession, t: Tree): Unit =
+    if (!WriterLease.liveHolder(spark, t.dir)) recover(spark, t.path)
+
+  // ---- the lifecycle verbs ----
+
+  private def stage(df: DataFrame, parts: Seq[String],
+                    path: String): Unit = {
+    val w = df.write.mode("overwrite")
+    (if (parts.isEmpty) w else w.partitionBy(parts: _*)).parquet(path)
+  }
+
+  /** The rewrite shared by full and tiered compaction: read the
+    * generations `gens` selects, drop tombstoned rows (the physical
+    * purge behind the logical deletes — the ledger itself stays, it
+    * keeps delete replays no-ops, and the read filter is idempotent on
+    * purged rows), relabel them `batch=lo`, lay them out, stage them
+    * at `staging`, check the fence, then `publish`.
+    */
+  private def rewrite(spark: SparkSession, t: Tree, lease: WriterLease.Lease,
+                      gens: Column, epoch: Long, lo: Long, staging: String)
+                     (publish: => Unit): Unit = {
+    stage(t.layout(spark.read.parquet(t.path).filter(gens)
+        .transform(live(spark, t, epoch))
+        .drop("batch").withColumn("batch", lit(lo))),
+      "batch" +: t.parts, staging)
+    WriterLease.check(spark, lease)
+    publish
+  }
+
+  /** Full compaction: every live generation (≤ `last`; remnants above
+    * it die here) into one `batch=0` tree. A pure physical move —
+    * generations carry disjoint ids — crash-safe through the two-rename
+    * [[graft.etl.Load.atomicSwap]] of the whole tree. An unpublished
+    * retained rewrite is derived data of generations this rewrite
+    * covers and is discarded rather than left to race its publish.
+    * `retainMs > 0` commits the rewrite as a HIDDEN pending over all
+    * live generations ([[commit]]), so the current tree keeps serving
+    * byte-untouched until publish.
+    */
+  private[graft] def compact(spark: SparkSession, t: Tree,
+                             lease: WriterLease.Lease, last: Long,
+                             epoch: Long, retainMs: Long): Unit = {
+    discardPending(spark, t.path)
+    val gens = genSizes(spark, t.path).map(_._1).filter(_ <= last)
+    val staging =
+      if (retainMs > 0L) stagingPath(t.path).toString else s"${t.path}.__staging"
+    rewrite(spark, t, lease, col("batch") <= last, epoch, 0L, staging) {
+      if (retainMs > 0L) commit(spark, t.path, gens, retainMs)
+      else Load.atomicSwap(spark, staging, t.path)
+    }
+  }
+
+  /** Size-tiered compaction under [[mergeSet]]: the unsettled tail
+    * merges into one generation at its lowest id; settled generations
+    * are never opened. A due retained rewrite publishes first and a
+    * due retained rollback's deletions execute; while a pending
+    * rewrite is still inside its window, maintenance BACKS OFF (a
+    * second merge over the same tail would race its publish). Returns
+    * the merged ids (empty = the policy did not fire).
+    */
+  private[graft] def tieredCompact(spark: SparkSession, t: Tree,
+                                   lease: WriterLease.Lease, last: Long,
+                                   epoch: Long, ratio: Double, minMerge: Int,
+                                   retainMs: Long): Seq[Long] = {
+    publishDue(spark, t.path)
+    retireDue(spark, t.path, last)
+    val ids =
+      if (pending(spark, t.path).nonEmpty) Seq.empty
+      else mergeSet(genSizes(spark, t.path).filter(_._1 <= last), ratio,
+        minMerge)
+    if (ids.nonEmpty)
+      rewrite(spark, t, lease, col("batch").isin(ids: _*), epoch, ids.min,
+        stagingPath(t.path).toString)(commit(spark, t.path, ids, retainMs))
+    ids
+  }
+
+  /** TOMBSTONE-DEBT purge: rewrite (only) the generations whose
+    * tombstoned-row fraction has reached `tau`, dropping the dead rows
+    * — the reclaim lever for the case the size-tiered policy never
+    * reaches, a huge SETTLED generation that is half deleted
+    * (RocksDB's delete-triggered compaction). Each indebted generation
+    * rewrites through its own two-rename swap; the others are never
+    * opened. A pure physical filter (every read already anti-joins the
+    * ledger). The debt scan is one id-column pass plus a broadcast
+    * semi-join. Due retained rewrites publish first; generations still
+    * covered by an in-window pending are skipped, never discarded
+    * (their debt drains at publish). `retainMs > 0` commits each
+    * rewrite as its own hidden single-generation pending, bytes
+    * reclaimed at publish. Returns the purged generation ids.
+    */
+  private[graft] def purgeDebt(spark: SparkSession, t: Tree,
+                               lease: WriterLease.Lease, last: Long,
+                               epoch: Long, tau: Double,
+                               retainMs: Long): Seq[Long] = {
+    require(tau > 0.0 && tau <= 1.0, "tau must be in (0, 1]")
+    publishDue(spark, t.path)
+    if (epoch <= 0L) Seq.empty
+    else {
+      val debt = spark.read.parquet(t.path)
+        .filter(col("batch") <= last)
+        .join(broadcast(tombstones(spark, t, epoch)), Seq(t.key), "left_semi")
+        .groupBy(col("batch").cast(LongType).as("batch"))
+        .count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val covered = pendings(spark, t.path).flatMap(_.ids).toSet
+      val victims = genSizes(spark, t.path)
+        .filter(_._1 <= last)
+        .collect { case (b, n)
+          if n > 0 && !covered(b) &&
+            debt.getOrElse(b, 0L).toDouble / n >= tau => b }
+      victims.foreach { b =>
+        val rewritten = t.layout(live(spark, t, epoch)(
+          spark.read.parquet(t.path).filter(col("batch") === b))
+          .drop("batch"))
+        val staging =
+          if (retainMs > 0L) s"${stagingPath(t.path)}/batch=$b"
+          else s"${t.path}.__debt_staging"
+        stage(rewritten, t.parts, staging)
+        WriterLease.check(spark, lease)
+        if (retainMs > 0L) commit(spark, t.path, Seq(b), retainMs)
+        else Load.atomicSwap(spark, staging, s"${t.path}/batch=$b")
+      }
+      victims
+    }
+  }
+
+  /** The rollback cut to `toBatch` below the high-water mark `last`:
+    * discard unpublished retained rewrites (their source generations
+    * are still live; a later publish would resurrect cut ones), delete
+    * the generations above `last` — a crashed rollback's remnants or
+    * an earlier retained rollback's still-scheduled generations, whose
+    * snapshots a restructuring writer legally invalidates — and refuse
+    * a cut inside a merged run (its files interleave rows from both
+    * sides). Then `commit` lands the warehouse's commit row (with its
+    * own fence check) FIRST, and the cut generations go: deleted, or
+    * with `retainMs > 0` left in place behind the committed mark on a
+    * deferred-deletion schedule ([[retire]]) so in-flight readers'
+    * pinned files survive. A crash between the two steps leaves inert
+    * dirs above the mark that the next rollback deletes and a re-ingest
+    * of the same id overwrites. Tombstones survive a rollback: it
+    * rewinds the ingest stream, not the delete requests.
+    */
+  private[graft] def rollback(spark: SparkSession, t: Tree, last: Long,
+                              toBatch: Long, retainMs: Long)
+                             (commit: => Unit): Unit = {
+    discardPending(spark, t.path)
+    val ids = generations(spark, t.path)
+    ids.filter(_ > last).foreach(dropGeneration(spark, t.path, _))
+    require(!t.merges || onBoundary(spark, t.path, last, toBatch),
+      s"rollback of ${t.path}: generation ${toBatch + 1} has been merged " +
+        "into an earlier tree by compaction — its files hold rows from " +
+        s"batches <= $toBatch too, so rolling back to $toBatch would " +
+        "corrupt them; rebuild from bootstrap instead")
+    commit
+    val cut = ids.filter(id => id > toBatch && id <= last)
+    if (retainMs > 0L)
+      retire(spark, t.path, cut, System.currentTimeMillis() + retainMs)
+    else cut.foreach(dropGeneration(spark, t.path, _))
+  }
+
+  /** Force-publish every snapshot-retained state NOW — pending
+    * rewrites and a retained rollback's deferred-deletion schedule —
+    * the vacuum step for when no reader still holds an older snapshot.
+    * Returns the affected ids (empty = nothing pending).
+    */
+  private[graft] def vacuum(spark: SparkSession, t: Tree,
+                            last: => Long): Seq[Long] =
+    publish(spark, t.path) ++ retireDue(spark, t.path, last, force = true)
 
   /** The ids to merge under the size-tiered policy, or empty when no
     * merge is due: every generation newer than the newest SETTLED one
@@ -122,20 +455,22 @@ object SegmentCompaction {
     if (cands.size >= minMerge) cands else Seq.empty
   }
 
-  /** Heal any half-finished tiered merge at `tree` — see the object doc
-    * for the crash-point table. Idempotent and re-entrant.
+  /** Heal any half-finished rewrite at `tree` — a whole-tree swap
+    * (full compaction), a generation swap (debt purge), a tiered merge
+    * or a publish; see the object doc for the crash-point table.
+    * Idempotent and re-entrant.
     */
   def recover(spark: SparkSession, tree: String): Unit = {
+    Load.recoverSwap(spark, tree)
     // publishes that crashed mid-sequence roll FORWARD (the pre-merge
     // view is already partially destroyed); an intact pending merge is
     // left alone — reads heal crashes, writers advance state
     // (publishDue runs from lease-holding maintenance entry points)
     completeHalfPublished(spark, tree)
-    // a debt purge ([[InvertedIndex.purgeDebt]]/[[AdcIngest.purgeDebt]])
-    // that crashed mid-generation-swap leaves a `batch=N.__old` beside
-    // (or instead of) its generation dir — the standard scoped-swap
-    // remnant, healed here so every entry point covers it
-    graft.etl.Load.recoverScopedSwaps(spark, tree)
+    // a debt purge ([[purgeDebt]]) that crashed mid-generation-swap
+    // leaves a `batch=N.__old` beside (or instead of) its generation
+    // dir — the standard scoped-swap remnant
+    Load.recoverScopedSwaps(spark, tree)
     val debtStaging = new Path(s"$tree.__debt_staging")
     val dfs = fsOf(spark, debtStaging)
     if (dfs.exists(debtStaging)) dfs.delete(debtStaging, true)
@@ -485,15 +820,13 @@ object SegmentCompaction {
       }
     }
     // (b) committed merged dir still carrying its marker: cleanup
-    fs.listStatus(p).map(_.getPath)
-      .filter(q => q.getName.startsWith("batch="))
-      .foreach { live =>
-        val mk = new Path(live, MergedMarker)
-        if (fs.exists(mk))
-          readMarker(fs, mk).foreach { case (ids, _) =>
-            finishPublish(fs, tree, ids)
-          }
-      }
+    generations(spark, tree).foreach { id =>
+      val mk = new Path(s"$tree/batch=$id/$MergedMarker")
+      if (fs.exists(mk))
+        readMarker(fs, mk).foreach { case (ids, _) =>
+          finishPublish(fs, tree, ids)
+        }
+    }
   }
 
   /** `_MERGED_IDS` contents: `(replaced ids, publish-after ms)`, or

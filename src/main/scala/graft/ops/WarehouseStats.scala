@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Load
+import graft.ops.SegmentCompaction.Tree
 
 /** Operational health report over the warehouse-index family — the
   * day-2 observability surface every production index ships (Lucene's
@@ -20,7 +21,10 @@ import graft.etl.Load
   *    the high-water mark) — the partition-column count
   *    [[SegmentCompaction.genSizes]] reads from footer metadata.
   *  - `tombstoned_docs`: committed delete ledger size (epochs ≤
-  *    del_epoch) — what every serving read anti-joins.
+  *    del_epoch) — what every serving read anti-joins. The ledger,
+  *    the generation listing and the heals are the shared
+  *    [[SegmentCompaction]] definitions; each kind supplies its tree
+  *    and its committed `del_epoch`.
   *  - `purge_backlog_rows`: physical rows still on disk that belong
   *    to tombstoned docs — the bytes the next compaction reclaims
   *    (0 ⇒ fully purged). The one metric that needs a data-page scan
@@ -37,44 +41,25 @@ import graft.etl.Load
   */
 object WarehouseStats {
 
-  private def delEpochOf(spark: SparkSession, metaDir: String,
-                         field: String = "del_epoch"): Long =
-    Load.readTable(spark, metaDir).map { df =>
-      val r = df.head()
-      if (r.schema.fieldNames.contains(field)) r.getAs[Long](field) else 0L
-    }.getOrElse(0L)
-
-  private def tombstonedIds(spark: SparkSession, dir: String,
-                            epoch: Long, idCol: String): DataFrame = {
-    import spark.implicits._
-    if (epoch <= 0L) Seq.empty[Long].toDF(idCol)
-    else spark.read.parquet(s"$dir/tombstones")
-      .filter(col("epoch") <= epoch).select(col(idCol))
-  }
-
-  private def row(spark: SparkSession, kind: String, dir: String,
-                  treeName: String, metaName: String, idCol: String,
-                  last: Long, ratio: Double, minMerge: Int,
+  private def row(spark: SparkSession, kind: String, t: Tree, last: Long,
+                  epoch: Long, ratio: Double, minMerge: Int,
                   countMerge: Boolean, extraPending: Long = 0L,
                   zeroTok: Long = 0L): DataFrame = {
     import spark.implicits._
-    val tree = s"$dir/$treeName"
     // stats are a READ path: crash heals gate on lease liveness (a
     // live writer's in-flight swap state is not a crash to heal)
-    if (!graft.etl.WriterLease.liveHolder(spark, dir)) {
-      Load.recoverSwap(spark, tree)
-      SegmentCompaction.recover(spark, tree)
-    }
-    val epoch = delEpochOf(spark, s"$dir/$metaName")
-    val sizes = SegmentCompaction.genSizes(spark, tree)
+    SegmentCompaction.healForRead(spark, t)
+    val sizes = SegmentCompaction.genSizes(spark, t.path)
       .filter(_._1 <= last)
     val rowsTotal = sizes.map(_._2).sum
-    val tomb = tombstonedIds(spark, dir, epoch, idCol)
-    val nTomb = tomb.distinct().count()
-    val backlog =
-      if (epoch <= 0L) 0L
-      else spark.read.parquet(tree).filter(col("batch") <= last)
-        .join(broadcast(tomb), Seq(idCol), "left_semi").count()
+    val (nTomb, backlog) =
+      if (epoch <= 0L) (0L, 0L)
+      else {
+        val tomb = SegmentCompaction.tombstones(spark, t, epoch)
+        (tomb.distinct().count(),
+          spark.read.parquet(t.path).filter(col("batch") <= last)
+            .join(broadcast(tomb), Seq(t.key), "left_semi").count())
+      }
     val mergeDue =
       if (countMerge) SegmentCompaction.mergeSet(sizes, ratio, minMerge).size
       else 0
@@ -83,16 +68,16 @@ object WarehouseStats {
     // ran — 0 on a pre-lease tree), lease_held = a writer is live (or
     // died inside its ttl) RIGHT NOW. A leaked lease after maintenance
     // shows up here — and the q202 oracle pins lease_held to 0.
-    val fence = graft.etl.WriterLease.fenceToken(spark, dir)
-    val held = if (graft.etl.WriterLease.held(spark, dir)) 1L else 0L
+    val fence = graft.etl.WriterLease.fenceToken(spark, t.dir)
+    val held = if (graft.etl.WriterLease.held(spark, t.dir)) 1L else 0L
     // the snapshot-retention surface: committed-but-unpublished hidden
     // rewrites (tiered merges, retained compacts/purges) + a retained
     // rollback's deferred-deletion schedule + (vector kind) a parked
     // retrained root — everything a later maintenance call or an
     // explicit vacuum will publish. The maintenance runner's signal
     // that snapshots are outstanding.
-    val pendingPub = SegmentCompaction.pendings(spark, tree).size.toLong +
-      SegmentCompaction.retired(spark, tree).size.toLong + extraPending
+    val pendingPub = SegmentCompaction.pendings(spark, t.path).size.toLong +
+      SegmentCompaction.retired(spark, t.path).size.toLong + extraPending
     Seq((kind, last, epoch, sizes.size.toLong, rowsTotal, nTomb,
       backlog, mergeDue.toLong, fence, held, pendingPub, zeroTok))
       .toDF("kind", "last_batch", "del_epoch", "generations",
@@ -112,17 +97,17 @@ object WarehouseStats {
       if (c.schema.fieldNames.contains("zero_token_docs"))
         c.getAs[Long]("zero_token_docs")
       else 0L
-    row(spark, "invidx", dir, "postings", "corpus", "doc_id",
-      c.getAs[Long]("last_batch"), ratio, minMerge, countMerge = true,
-      zeroTok = zeroTok)
+    row(spark, "invidx", InvertedIndex.tree(dir),
+      c.getAs[Long]("last_batch"), InvertedIndex.delEpoch(spark, dir),
+      ratio, minMerge, countMerge = true, zeroTok = zeroTok)
   }
 
   /** Health row of an [[AdcIngest]] vector warehouse. */
   def adc(spark: SparkSession, dir: String, ratio: Double = 4.0,
           minMerge: Int = 2): DataFrame =
-    row(spark, "adc", dir, "index", "meta", "vec_id",
-      AdcIngest.lastBatch(spark, dir), ratio, minMerge,
-      countMerge = true,
+    row(spark, "adc", AdcIngest.tree(dir),
+      AdcIngest.lastBatch(spark, dir), AdcIngest.delEpoch(spark, dir),
+      ratio, minMerge, countMerge = true,
       // a parked retained retrain counts as an outstanding publish
       extraPending = AdcIngest.retrainPending(spark, dir).size.toLong)
 
@@ -132,7 +117,7 @@ object WarehouseStats {
     * purge backlog is reclaimed by [[CorpusIngest.purge]].
     */
   def corpus(spark: SparkSession, dir: String): DataFrame =
-    row(spark, "corpus", dir, "corpus", "delmeta", "doc_id",
-      CorpusIngest.lastBatch(spark, dir), ratio = 4.0, minMerge = 2,
-      countMerge = false)
+    row(spark, "corpus", CorpusIngest.tree(dir),
+      CorpusIngest.lastBatch(spark, dir), CorpusIngest.delEpoch(spark, dir),
+      ratio = 4.0, minMerge = 2, countMerge = false)
 }

@@ -92,13 +92,7 @@ object PlanAudit {
     val sfDir = args.find(!_.startsWith("--")).getOrElse("/root/testdata/sf0.01")
     val record = args.contains("--record")
     val sf = Paths.get(sfDir).getFileName.toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val results = audit(spark, sfDir)

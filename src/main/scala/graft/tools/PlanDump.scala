@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round helper: dump `explain("formatted")` for selected
   * catalog queries to files (the plans/rN before/after evidence), and
   * optionally time them with the bench's exact methodology (full-row
@@ -31,15 +29,7 @@ object PlanDump {
     val timeN = args.sliding(2).collectFirst {
       case Array("--time", n) => n.toInt }.getOrElse(0)
     val jobLog = args.contains("--jobs")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     // --jobs: per-Spark-job wall time + the head of its call site, so a
     // multi-action lifecycle gate's cost can be attributed to verbs
     if (jobLog) {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: time a named catalog query and print its formatted
   * physical plan. Usage:
   *   sbt "runMain graft.tools.Profile <queryName> [sfDir]"
@@ -10,14 +8,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     val fn = graft.SparkEntry.queries(name)
     // lifecycle queries (q111/q114/q136…) do their warehouse work while
     // the frame is BUILT — time construction separately from execution

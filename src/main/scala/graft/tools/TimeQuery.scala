@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, max, xxhash64}
 
 /** Time a handful of catalog queries in isolation with Bench's exact
@@ -17,15 +16,7 @@ object TimeQuery {
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(sys.error("usage: TimeQuery <sfDir> <q1,q2,...> [passes]"))
     val passes = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
     val qs = graft.SparkEntry.queries
     val results = names.map { name =>

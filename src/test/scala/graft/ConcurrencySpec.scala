@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.etl.WriterLease
-import graft.ops.{AdcIngest, InvertedIndex, SegmentCompaction}
+import graft.ops.{AdcIngest, InvertedIndex, SegmentCompaction, WarehouseStats}
 
 /** The warehouse concurrency contract: (1) a single-writer lease every
   * mutator acquires — a second concurrent writer is refused loudly,
@@ -602,5 +602,35 @@ class ConcurrencySpec extends SparkSpec {
     AdcIngest.compact(spark, vdir)
     assert(SegmentCompaction.pending(spark, s"$vdir/index").isEmpty)
     assert(AdcIngest.index(spark, vdir).count() == n0)
+  }
+
+  test("reads under a live writer lease skip a purge's in-flight " +
+      "batch=N.__old remnant instead of failing to parse it") {
+    val dir = tmp("lease_gen_remnant")
+    InvertedIndex.build(spark, docs(0, 400), dir)
+    InvertedIndex.addBatch(spark, docs(400, 450), dir, 1L)
+    val vdir = tmp("lease_gen_remnant_adc")
+    AdcIngest.bootstrap(spark, vecs(0, 300), vdir, k = 4, m = 4, ks = 8)
+    AdcIngest.append(spark, vecs(300, 340), vdir, 1L)
+    // a non-retained purge between its generation swap's renames
+    // leaves batch=1.__old beside batch=1; under the purger's live
+    // lease the read paths must neither heal it nor choke on its name
+    val held = Seq(dir, vdir).map(WriterLease.acquire(spark, _, "purger"))
+    val remnant = new Path(s"$dir/postings/batch=1.__old")
+    fs(dir).mkdirs(remnant)
+    fs(vdir).mkdirs(new Path(s"$vdir/index/batch=1.__old"))
+    try {
+      assert(InvertedIndex.segmentCount(spark, dir) == 2)
+      assert(WarehouseStats.invidx(spark, dir).head()
+        .getAs[Long]("generations") == 2L)
+      assert(AdcIngest.segmentCount(spark, vdir) == 2)
+      assert(WarehouseStats.adc(spark, vdir).head()
+        .getAs[Long]("generations") == 2L)
+      assert(AdcIngest.readAsOf(spark, vdir, 0L).count() == 300L)
+      assert(fs(dir).exists(remnant), "no heal under a live writer lease")
+    } finally held.foreach(WriterLease.release(spark, _))
+    // the lease is gone: the next read heals the remnant
+    assert(InvertedIndex.segmentCount(spark, dir) == 2)
+    assert(!fs(dir).exists(remnant))
   }
 }

@@ -5,8 +5,27 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.etl.Load
+import graft.etl.{Load, WriterLease}
 import graft.ops.CorpusIngest
+
+/** A writer-lease takeover fired from inside a running ingest: the spec
+  * arms it, and a UDF in the ingested batch fires it (once) the first
+  * time the batch is evaluated — a usurper landing mid-ingest.
+  */
+private object MidIngestTakeover {
+  @volatile private var armed: Option[() => WriterLease.Lease] = None
+  @volatile var taken: Option[WriterLease.Lease] = None
+
+  def arm(takeover: () => WriterLease.Lease): Unit = {
+    taken = None
+    armed = Some(takeover)
+  }
+
+  def fire(): Unit = synchronized {
+    armed.foreach(t => taken = Some(t()))
+    armed = None
+  }
+}
 
 /** Incremental corpus warehouse: the O(batch) ingest contract —
   * in-batch dedup, seen-set rejection, frozen-model gates, per-source
@@ -371,5 +390,26 @@ class CorpusIngestSpec extends SparkSpec {
     val scanned = CorpusIngest.readAsOf(spark, dir, 1L)
       .queryExecution.executedPlan.toString
     assert(scanned.contains("PartitionFilters") && scanned.contains("batch"))
+  }
+
+  test("an ingest fenced out mid-run releases every frame it persisted") {
+    val dir = tmp()
+    boot(dir)
+    MidIngestTakeover.arm { () =>
+      Thread.sleep(5) // the ingest's lease heartbeat is older than 1 ms
+      WriterLease.acquire(spark, dir, "usurper", ttlMs = 1L)
+    }
+    val fire = udf { (id: Long) => MidIngestTakeover.fire(); id }
+    val fenced = batch.withColumn("doc_id", fire(col("doc_id")))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      CorpusIngest.ingest(spark, fenced, dir, 1L)
+    }
+    MidIngestTakeover.taken.foreach(WriterLease.release(spark, _))
+    assert(e.getMessage.contains("superseded"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+    assert(CorpusIngest.lastBatch(spark, dir) == 0L,
+      "a fenced-out ingest must not commit its state fold")
   }
 }

@@ -635,4 +635,29 @@ class TombstoneSpec extends SparkSpec {
       .orderBy(col("source")).collect().toSeq.map(_.toSeq) == stateBefore,
       "hole-aware hwm: state identical to never having rolled back")
   }
+
+  test("corpus rollback discards a retained purge: no purged copy of a " +
+      "cut generation comes back on the next read or re-ingest") {
+    val dir = tmp("tomb_corpus_rb_ret")
+    bootCorpus(dir) // gen 0 = docs {0,1,2,3}, gen 1 = docs {10,11}
+    assert(CorpusIngest.delete(spark, dir, idsDf(Seq(10L))) == 1L)
+    // the retained purge parks a hidden rewrite of generation 1
+    assert(CorpusIngest.purge(spark, dir,
+      retainMs = 24L * 3600 * 1000) == Seq(1L))
+    CorpusIngest.rollback(spark, dir, 0L)
+    assert(corpusIds(dir) == Set(0L, 1L, 2L, 3L))
+    val names = hadoopFs(dir).listStatus(new Path(s"$dir/corpus"))
+      .map(_.getPath.getName).toSeq
+    assert(!names.exists(_.startsWith(".merged-")),
+      s"the rolled-back generation's pending purge must be discarded: $names")
+    val last = CorpusIngest.lastBatch(spark, dir)
+    assert(names.filter(_.startsWith("batch="))
+      .forall(_.stripPrefix("batch=").toLong <= last),
+      s"no generation above last_batch $last may remain: $names")
+    // a re-ingest of the cut id whose fresh set is empty (a re-crawl of
+    // a seen URL) writes nothing — the rolled-back rows stay gone
+    assert(CorpusIngest.ingest(spark, crawl(Seq((20L, "A", "a0"))), dir, 1L))
+    assert(corpusIds(dir) == Set(0L, 1L, 2L, 3L),
+      "rolled-back rows must not be served again")
+  }
 }
