@@ -278,6 +278,8 @@ object Load {
         fs.delete(sp, true) // stale staging from a crashed prior run
         LocalParquet.writeFile(spark, merged.schema,
           rows.toSeq.map(_.toSeq), s"$staging/part-00000.parquet")
+        // the same completion marker a Spark write leaves
+        fs.create(new Path(sp, "_SUCCESS"), true).close()
         atomicSwap(spark, staging, dir)
         rows.length.toLong
       case None =>

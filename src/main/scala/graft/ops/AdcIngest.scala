@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.etl.{Load, WriterLease}
-import graft.ops.SegmentCompaction.live
+import graft.ops.SegmentCompaction.visible
 
 /** Incremental PQ/ADC index warehouse — the vector-side member of the
   * incremental warehouse family (corpus `CorpusIngest`, signature
@@ -295,12 +295,9 @@ object AdcIngest {
     require(last0 >= 0, s"AdcIngest.append: no warehouse at $dir")
     if (batchId <= last0) return false
     WriterLease.withLease(spark, dir, "adc.append") { lease =>
-    // Heal half-finished swaps BEFORE writing (root + index tree): if
-    // compact crashed between atomicSwap's two renames (index/ moved
-    // to index.__old, staging not yet renamed), writing here would
-    // recreate index/ holding only this batch, and the next
-    // recoverSwap — seeing both dirs — would delete __old and with it
-    // every prior generation, while meta still claimed they landed.
+    // heal BEFORE writing (root + index tree): a crashed rewrite
+    // commit's generations may sit in the aside dir and must be back
+    // before this batch lands
     healForWrite(spark, dir)
     // the replay/contiguity guard re-derives INSIDE the lease: the
     // pre-lease read above is only a cheap replay fast-path — two
@@ -321,13 +318,10 @@ object AdcIngest {
         .filterNot(_ == "batch").toSet == encoded.columns.toSet,
       s"AdcIngest.append: meta columns $meta do not reproduce the " +
         "index schema — every generation must carry the same columns")
+    SegmentCompaction.clearForLanding(spark, s"$dir/index", batchId)
     writeGeneration(encoded, dir, batchId)
     WriterLease.check(spark, lease)
     writeMeta(spark, dir, batchId, epoch, modelEp, floor)
-    // a retained rollback may have scheduled this id for deferred
-    // deletion — it is live again (the overwrite above is the
-    // exactly-once contract; deferred deletion must never fire on it)
-    SegmentCompaction.unretire(spark, s"$dir/index", batchId)
     true
     }
     }
@@ -341,7 +335,7 @@ object AdcIngest {
     * between the two leaves generation dirs ABOVE the high-water mark
     * — inert remnants that [[index]]/[[segmentCount]] filter out, the
     * next [[rollback]] deletes on entry, and a later [[append]] of the
-    * same id dynamic-overwrites. A cut INSIDE a tree merged by
+    * same id clears before it lands. A cut INSIDE a tree merged by
     * compaction is refused (its files interleave rows from both sides
     * of the cut); rebuild from bootstrap instead.
     */
@@ -399,9 +393,7 @@ object AdcIngest {
       .getOrElse((-1L, 0L, 0L, 0L))
     require(last >= 0, s"AdcIngest.delete: no warehouse at $dir")
     SegmentCompaction.tombstone(spark, tree(dir), lease, e0,
-      live(spark, tree(dir), e0)(
-        spark.read.parquet(s"$dir/index")
-          .filter(col("batch") <= last).select(col("vec_id")))
+      visible(spark, tree(dir), last, e0).select(col("vec_id"))
         .join(broadcast(ids.select(col("vec_id")).distinct()),
           Seq("vec_id"), "left_semi"))(v => (v.count(), ())) { _ =>
       writeMeta(spark, dir, last, e0 + 1, modelEpD, floorD)
@@ -443,9 +435,7 @@ object AdcIngest {
     // deletes are NOT time-traveled: an as-of read rewinds the INGEST
     // stream, but a takedown applies to every serving read, historical
     // replays included — that is what a deletion request means
-    servedCols(live(spark, tree(dir), del)(
-      spark.read.parquet(s"$dir/index")
-        .filter(col("batch") <= batch)))
+    servedCols(visible(spark, tree(dir), batch, del))
   }
 
   /** (vec_id, cluster_id, codes, vn) first, then any metadata columns
@@ -471,9 +461,7 @@ object AdcIngest {
     // vectors never serve either (broadcast anti-join, see [[delete]]).
     val (last, del, _, _) = readMeta(spark, dir)
       .getOrElse((-1L, 0L, 0L, 0L))
-    servedCols(live(spark, tree(dir), del)(
-      spark.read.parquet(s"$dir/index")
-        .filter(col("batch") <= last)))
+    servedCols(visible(spark, tree(dir), last, del))
   }
 
   /** Number of `batch=` generations in the index tree — the
@@ -487,11 +475,11 @@ object AdcIngest {
     SegmentCompaction.generations(spark, s"$dir/index").count(_ <= last)
   }
 
-  /** Collapse every generation into a single `batch=0` tree — a PURE
+  /** Collapse every generation into a single generation — a PURE
     * physical move (batches carry disjoint vec_ids under the append
     * contract; per-vector rows never merge), clustered by cluster_id
     * within files so probe-routed reads touch contiguous runs.
-    * Crash-safe via the warehouse two-rename swap; the meta row —
+    * Crash-safe through [[SegmentCompaction.commit]]; the meta row —
     * including the exactly-once `last_batch` high-water mark — is
     * untouched, so replay protection and the next append id survive.
     * `retainMs > 0` commits the rewrite as a hidden pending
@@ -511,7 +499,7 @@ object AdcIngest {
   /** The compaction POLICY hook: compact when the tree holds
     * more than `maxSegments` generations, else no-op. Idempotent under
     * streaming replays; a crash mid-compaction heals through
-    * [[segmentCount]]'s recoverSwap on the next call.
+    * [[segmentCount]]'s [[SegmentCompaction.recover]] on the next call.
     */
   def compactIfNeeded(spark: SparkSession, dir: String,
                       maxSegments: Int): Boolean = {
@@ -605,10 +593,8 @@ object AdcIngest {
     fs.delete(new org.apache.hadoop.fs.Path(stage), true) // stale staging
     // live generation membership from the served index — each vector
     // re-encodes into the generation it originally landed in
-    val membership = live(spark, tree(dir), e0)(
-      spark.read.parquet(s"$dir/index")
-        .filter(col("batch") <= last)
-        .select(col("vec_id"), col("batch").cast(LongType).as("batch")))
+    val membership = visible(spark, tree(dir), last, e0)
+      .select(col("vec_id"), col("batch").cast(LongType).as("batch"))
     val joined = graft.ops.Relational.eager(
       vecs.select((Seq("vec_id", "embedding") ++ meta).map(col): _*)
         .join(membership, Seq("vec_id")))
@@ -682,8 +668,9 @@ object AdcIngest {
   /** TOMBSTONE-DEBT purge ([[SegmentCompaction.purgeDebt]]): rewrite
     * only the generations whose tombstoned-row fraction has reached
     * `tau`, reclaiming dead bytes a settled generation would otherwise
-    * hold until it happened to merge. Generation-scoped two-rename
-    * swaps, pure physical filter, serving identical before/after.
+    * hold until it happened to merge. One generation per
+    * [[SegmentCompaction.commit]], pure physical filter, serving
+    * identical before/after.
     * Returns the purged generation ids.
     */
   def purgeDebt(spark: SparkSession, dir: String,

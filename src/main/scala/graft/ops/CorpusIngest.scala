@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.{Load, WriterLease}
 import graft.ops.Relational.eager
-import graft.ops.SegmentCompaction.live
+import graft.ops.SegmentCompaction.visible
 
 /** Incremental corpus-build warehouse — the INGEST twin of the q162
   * end-to-end flagship. The flagship trains and selects over the whole
@@ -305,12 +305,9 @@ object CorpusIngest {
     require(last0 >= 0, s"CorpusIngest.ingest: no warehouse at $dir")
     if (batchId <= last0) return false
     WriterLease.withLease(spark, dir, "corpus.ingest") { lease =>
-    // heal a crashed purge swap BEFORE writing (INSIDE the lease — a
-    // mutating heal outside it could race a live purge): with the
-    // corpus tree sitting only in __old, writeBatch would recreate
-    // corpus/ holding just this batch and the next heal would delete
-    // __old — every prior generation — while state still claimed they
-    // landed
+    // heal a crashed purge commit BEFORE writing (INSIDE the lease — a
+    // mutating heal outside it could race a live purge): its generation
+    // may sit in the aside dir and must be back before this batch lands
     SegmentCompaction.heal(spark, tree(dir))
     // writer-side maintenance cadence: a DUE retained purge publishes
     // here (read paths never publish by time)
@@ -412,6 +409,8 @@ object CorpusIngest {
       .agg(sum(col("n_tokens")).as("toks")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
+    SegmentCompaction.clearForLanding(spark, s"$dir/corpus", batchId)
+    SegmentCompaction.clearForLanding(spark, s"$dir/urls", batchId)
     writeBatch(packed, s"$dir/corpus", batchId)
     writeBatch(fresh.select(col("canon_url")), s"$dir/urls", batchId)
     // state fold LAST, one atomic swap built from driver rows alone:
@@ -554,8 +553,7 @@ object CorpusIngest {
     SegmentCompaction.healForRead(spark, tree(dir))
     val last = lastBatch(spark, dir)
     require(last >= 0, s"CorpusIngest.read: no warehouse at $dir")
-    live(spark, tree(dir), delEpoch(spark, dir))(
-      spark.read.parquet(s"$dir/corpus").filter(col("batch") <= last))
+    visible(spark, tree(dir), last, delEpoch(spark, dir))
   }
 
   /** Tombstone-delete documents from the packed corpus — the takedown
@@ -600,9 +598,7 @@ object CorpusIngest {
     require(last >= 0, s"CorpusIngest.delete: no warehouse at $dir")
     val e0 = delEpoch(spark, dir)
     SegmentCompaction.tombstone(spark, tree(dir), lease, e0,
-      live(spark, tree(dir), e0)(
-        spark.read.parquet(s"$dir/corpus")
-          .filter(col("batch") <= last).select(col("doc_id")))
+      visible(spark, tree(dir), last, e0).select(col("doc_id"))
         .join(broadcast(ids.select(col("doc_id")).distinct()),
           Seq("doc_id"), "left_semi"))(v => (v.count(), ())) { _ =>
       Load.replaceTable(spark, Seq(e0 + 1).toDF("del_epoch"),
@@ -613,8 +609,9 @@ object CorpusIngest {
 
   /** Physically reclaim tombstoned rows' bytes — GENERATION-SCOPED:
     * only generations actually holding tombstoned rows rewrite (each
-    * through its own two-rename swap); untouched generations' files
-    * are never opened or moved, so purge cost scales with the
+    * through its own [[SegmentCompaction.commit]]); untouched
+    * generations' files are never opened or moved, so purge cost
+    * scales with the
     * indebted generations, not the corpus
     * ([[SegmentCompaction.purgeDebt]] at any debt). Generation layout
     * and every surviving row's packing offsets are untouched (a
@@ -669,8 +666,7 @@ object CorpusIngest {
         s"high-water mark $last")
     // deletes are NOT time-traveled: a takedown applies to historical
     // snapshots too — that is what a deletion request means
-    live(spark, tree(dir), delEpoch(spark, dir))(
-      spark.read.parquet(s"$dir/corpus").filter(col("batch") <= batch))
+    visible(spark, tree(dir), batch, delEpoch(spark, dir))
   }
 
   /** Roll the warehouse back to `toBatch` through the shared

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.etl.{Load, WriterLease}
-import graft.ops.SegmentCompaction.{healForRead, live}
+import graft.ops.SegmentCompaction.{healForRead, live, visible}
 
 /** Persisted inverted index with incremental maintenance + BM25
   * search — the TEXT-index member of the warehouse-index trio
@@ -73,6 +73,11 @@ object InvertedIndex {
   private[ops] def tree(dir: String) = SegmentCompaction.Tree(dir, "postings",
     "doc_id", cluster = Seq("bucket"), sort = Seq("term", "doc_id"),
     parts = Seq("bucket"))
+
+  /** The `docs/` sidecar: one (doc_id, dl) generation per postings
+    * generation, never merged.
+    */
+  private def docsTree(dir: String) = tree(dir).copy(name = "docs")
 
   /** (term, doc_id, tf, dl, positions, bucket) of a (doc_id, text)
     * frame — one shuffle (groupBy doc_id×term with map-side combine).
@@ -174,6 +179,13 @@ object InvertedIndex {
       c.getAs[Long]("del_epoch")
     else 0L
 
+  /** The served postings under corpus row `c`: its high-water mark and
+    * its committed tombstones ([[SegmentCompaction.visible]]).
+    */
+  private def servedPostings(spark: SparkSession, dir: String,
+                             c: org.apache.spark.sql.Row): DataFrame =
+    visible(spark, tree(dir), c.getAs[Long]("last_batch"), delEpochOf(c))
+
   private[graft] def delEpoch(spark: SparkSession, dir: String): Long =
     Load.readTable(spark, s"$dir/corpus")
       .map(df => delEpochOf(df.head())).getOrElse(0L)
@@ -244,12 +256,8 @@ object InvertedIndex {
     require(last0 >= 0, s"InvertedIndex.addBatch: no index at $dir")
     if (batchId <= last0) false
     else WriterLease.withLease(spark, dir, "invidx.addBatch") { lease =>
-      // Heal a half-finished compaction swap BEFORE writing (same
-      // hazard as AdcIngest.append): a crash between atomicSwap's two
-      // renames leaves only postings.__old; writing here first would
-      // recreate postings/ with just this batch and the next
-      // recoverSwap would then delete __old — every prior generation —
-      // while the corpus row still claimed they landed.
+      // heal a crashed rewrite commit BEFORE writing: its generations
+      // may sit in the aside dir and must be back before this batch lands
       SegmentCompaction.heal(spark, tree(dir))
       // the batch analyzes under the INDEX's recorded policy — an
       // addBatch analyzing differently from the bootstrap would split
@@ -269,6 +277,8 @@ object InvertedIndex {
           "be contiguous or the skipped batch would silently never land")
       val az = analyzerOf(cOld)
       val epoch = delEpochOf(cOld)
+      SegmentCompaction.clearForLanding(spark, s"$dir/postings", batchId)
+      SegmentCompaction.clearForLanding(spark, s"$dir/docs", batchId)
       postings(docs, az).withColumn("batch", lit(batchId))
         .repartition(col("bucket"))
         .write.mode("overwrite")
@@ -303,10 +313,6 @@ object InvertedIndex {
             "del_epoch"), az)
       WriterLease.check(spark, lease)
       Load.replaceTable(spark, merged, s"$dir/corpus")
-      // a retained rollback may have scheduled this id for deferred
-      // deletion — it is live again (the overwrite above is the
-      // exactly-once contract; deferred deletion must never fire on it)
-      SegmentCompaction.unretire(spark, s"$dir/postings", batchId)
       true
       }
     }
@@ -366,10 +372,8 @@ object InvertedIndex {
       // tombstones survive the rollback, so the rebuilt globals
       // exclude live tombstoned docs too
       val epoch = delEpochOf(cOld)
-      val rebuilt = live(spark, tree(dir), epoch)(
-        spark.read.parquet(s"$dir/postings")
-          .filter(col("batch") <= toBatch)
-          .groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
+      val rebuilt = visible(spark, tree(dir), toBatch, epoch)
+        .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
         .withColumn("last_batch", lit(toBatch))
         .withColumn("del_epoch", lit(epoch))
@@ -432,11 +436,9 @@ object InvertedIndex {
         "rebuild the index to enable deletes")
     val e0 = delEpochOf(c)
     SegmentCompaction.tombstone(spark, tree(dir), lease, e0,
-      live(spark, tree(dir), e0)(
-        spark.read.parquet(s"$dir/docs")
-          .filter(col("batch") <= c.getAs[Long]("last_batch"))
-          .join(broadcast(ids.select(col("doc_id")).distinct()),
-            Seq("doc_id"), "left_semi"))
+      visible(spark, docsTree(dir), c.getAs[Long]("last_batch"), e0)
+        .join(broadcast(ids.select(col("doc_id")).distinct()),
+          Seq("doc_id"), "left_semi")
         .select(col("doc_id"), col("dl"))) { victims =>
       val a = victims.agg(count(lit(1)).as("n"),
         coalesce(sum(col("dl")), lit(0L)).as("sdl")).head()
@@ -454,7 +456,7 @@ object InvertedIndex {
     }
   }
 
-  /** Compact every `batch=` generation into a single `batch=0` tree —
+  /** Compact every `batch=` generation into a single generation —
     * the maintenance rewrite that undoes append-induced file decay.
     * A PURE PHYSICAL move: batches carry disjoint doc_ids (the
     * [[addBatch]] contract), so no (doc_id, term) posting row spans
@@ -465,15 +467,14 @@ object InvertedIndex {
     * deterministic layout); the corpus row, INCLUDING the exactly-once
     * `last_batch` high-water mark, is untouched, so a replayed old
     * batch id is still rejected after compaction and the next new id
-    * still lands in its own fresh `batch=` dir. Crash-safe via the
-    * warehouse two-rename swap (Load.atomicSwap): every crash point
-    * leaves the full old or full new tree, healed on the next
-    * read/maintenance call through recoverSwap.
+    * still lands in its own fresh `batch=` dir. Crash-safe through
+    * [[SegmentCompaction.commit]] with ids = every generation: every
+    * crash point leaves the full old or full new tree, healed on the
+    * next read/maintenance call.
     *
     * `retainMs > 0` — SNAPSHOT-RETAINED compact: the rewritten tree
     * commits as a HIDDEN pending rewrite covering every live
-    * generation ([[SegmentCompaction.commit]] — the tieredCompact
-    * protocol with ids = ALL live generations); the current
+    * generation; the current
     * generations keep serving byte-untouched until a later
     * lease-holding maintenance call or [[vacuum]] publishes after the
     * window, so in-flight readers survive the full rewrite too.
@@ -531,7 +532,7 @@ object InvertedIndex {
     * re-evaluates the policy either finds the already-compacted tree
     * (no-op) or compacts again (pure physical move, same result), and
     * a crash mid-compaction heals through [[segmentCount]]'s
-    * recoverSwap on the next call.
+    * [[SegmentCompaction.recover]] on the next call.
     */
   def compactIfNeeded(spark: SparkSession, dir: String,
                       maxSegments: Int): Boolean = {
@@ -604,11 +605,9 @@ object InvertedIndex {
     val distinctTerms = qphrase.distinct
     val buckets = distinctTerms.toDF("term").select(bucketOf(col("term")))
       .as[Int].collect().distinct.toSeq
-    val p = live(spark, tree(dir), delEpochOf(c))(
-      spark.read.parquet(s"$dir/postings")
-        .filter(col("batch") <= c.getAs[Long]("last_batch") &&
-          col("bucket").isin(buckets: _*) &&
-          col("term").isin(distinctTerms: _*)))
+    val p = servedPostings(spark, dir, c)
+      .filter(col("bucket").isin(buckets: _*) &&
+        col("term").isin(distinctTerms: _*))
       .select(col("doc_id"), col("term"), col("positions"))
     // RAREST-FIRST join order: left-deep reduce means the first
     // intermediate result rides through every later join, so a phrase
@@ -671,11 +670,9 @@ object InvertedIndex {
     val avgdl = sumDl.toDouble / nDocs
     val buckets = qterms.toDF("term").select(bucketOf(col("term")))
       .as[Int].collect().distinct.toSeq
-    val p = live(spark, tree(dir), delEpochOf(c))(
-      spark.read.parquet(s"$dir/postings")
-        .filter(col("batch") <= c.getAs[Long]("last_batch") &&
-          col("bucket").isin(buckets: _*) &&
-          col("term").isin(qterms: _*)))
+    val p = servedPostings(spark, dir, c)
+      .filter(col("bucket").isin(buckets: _*) &&
+        col("term").isin(qterms: _*))
     val wTerm = Window.partitionBy(col("term"))
     val idf = (lit(nDocs.toDouble) - col("df") + lit(0.5)) /
       (col("df") + lit(0.5))
@@ -771,11 +768,9 @@ object InvertedIndex {
       // tombstoned docs leave BEFORE the stats pass, so per-term df,
       // upper bounds and the θ seed all see live rows only — exactly
       // the rebuilt-index quantities (pruning stays exact)
-      live(spark, tree(dir), delEpochOf(c))(
-        spark.read.parquet(s"$dir/postings")
-          .filter(col("batch") <= c.getAs[Long]("last_batch") &&
-            col("bucket").isin(buckets: _*) &&
-            col("term").isin(ts: _*)))
+      servedPostings(spark, dir, c)
+        .filter(col("bucket").isin(buckets: _*) &&
+          col("term").isin(ts: _*))
     }
     def pruned = prunedFor(qterms)
     // the df-independent factor of the term score; ts_micro =
@@ -901,11 +896,9 @@ object InvertedIndex {
     val norm = lit(0.25) + lit(0.75) * col("dl") / lit(avgdl)
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("bm25_micro").desc, col("doc_id"))
-    live(spark, tree(dir), delEpochOf(c))(
-      spark.read.parquet(s"$dir/postings")
-        .filter(col("batch") <= c.getAs[Long]("last_batch") &&
-          col("bucket").isin(buckets: _*) &&
-          col("term").isin(terms: _*)))
+    servedPostings(spark, dir, c)
+      .filter(col("bucket").isin(buckets: _*) &&
+        col("term").isin(terms: _*))
       .withColumn("df", count(lit(1)).over(wTerm).cast(DoubleType))
       .withColumn("ts_micro",
         round(idf * (col("tf") * lit(2.2)) /
@@ -977,11 +970,9 @@ object InvertedIndex {
     val allTerms = (scoreTermsA ++ mustNotA).distinct
     val buckets = allTerms.toDF("term").select(bucketOf(col("term")))
       .as[Int].collect().distinct.toSeq
-    val p = live(spark, tree(dir), delEpochOf(c))(
-      spark.read.parquet(s"$dir/postings")
-        .filter(col("batch") <= c.getAs[Long]("last_batch") &&
-          col("bucket").isin(buckets: _*) &&
-          col("term").isin(allTerms: _*)))
+    val p = servedPostings(spark, dir, c)
+      .filter(col("bucket").isin(buckets: _*) &&
+        col("term").isin(allTerms: _*))
     val wTerm = Window.partitionBy(col("term"))
     val idf = (lit(nDocs.toDouble) - col("df") + lit(0.5)) /
       (col("df") + lit(0.5))
@@ -1049,11 +1040,9 @@ object InvertedIndex {
     // would re-match here and ride into delete() only to count zero —
     // semantically harmless, but the broadcast match set would grow
     // past its |new matches| bound on repeated overlapping takedowns
-    val p = live(spark, tree(dir), delEpochOf(c))(
-      spark.read.parquet(s"$dir/postings")
-        .filter(col("batch") <= c.getAs[Long]("last_batch") &&
-          col("bucket").isin(buckets: _*) &&
-          col("term").isin(allTerms: _*)))
+    val p = servedPostings(spark, dir, c)
+      .filter(col("bucket").isin(buckets: _*) &&
+        col("term").isin(allTerms: _*))
     val matched = p.filter(col("term").isin(mustA: _*))
       .groupBy(col("doc_id"))
       .agg(count_distinct(col("term")).as("__nm"))
@@ -1100,11 +1089,9 @@ object InvertedIndex {
     val idf = (lit(nDocs.toDouble) - col("df") + lit(0.5)) /
       (col("df") + lit(0.5))
     val norm = lit(0.25) + lit(0.75) * col("dl") / lit(avgdl)
-    live(spark, tree(dir), delEpochOf(c))(
-      spark.read.parquet(s"$dir/postings")
-        .filter(col("batch") <= c.getAs[Long]("last_batch") &&
-          col("bucket").isin(buckets: _*) &&
-          col("term").isin(qterms: _*)))
+    servedPostings(spark, dir, c)
+      .filter(col("bucket").isin(buckets: _*) &&
+        col("term").isin(qterms: _*))
       .withColumn("df", count(lit(1)).over(wTerm).cast(DoubleType))
       .withColumn("ts_micro",
         round(idf * (col("tf") * lit(2.2)) /
@@ -1156,8 +1143,7 @@ object InvertedIndex {
     // as-of globals from the docs/ sidecar minus TODAY's tombstones —
     // one n_docs-bounded aggregate (the sidecar mirrors the corpus
     // row: only documents that produce postings count)
-    val g = live(spark, tree(dir), del)(
-      spark.read.parquet(s"$dir/docs").filter(col("batch") <= batch))
+    val g = visible(spark, docsTree(dir), batch, del)
       .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s"))
       .head()
     val (nDocs, sumDl) = (g.getLong(0), g.getLong(1))
@@ -1171,11 +1157,9 @@ object InvertedIndex {
     val idf = (lit(nDocs.toDouble) - col("df") + lit(0.5)) /
       (col("df") + lit(0.5))
     val norm = lit(0.25) + lit(0.75) * col("dl") / lit(avgdl)
-    live(spark, tree(dir), del)(
-      spark.read.parquet(s"$dir/postings")
-        .filter(col("batch") <= batch &&
-          col("bucket").isin(buckets: _*) &&
-          col("term").isin(qterms: _*)))
+    visible(spark, tree(dir), batch, del)
+      .filter(col("bucket").isin(buckets: _*) &&
+        col("term").isin(qterms: _*))
       .withColumn("df", count(lit(1)).over(wTerm).cast(DoubleType))
       .withColumn("ts_micro",
         round(idf * (col("tf") * lit(2.2)) /

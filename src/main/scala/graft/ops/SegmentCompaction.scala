@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -17,13 +17,15 @@ import graft.etl.{Load, LocalParquet, WriterLease}
   * `delmeta` + `state`); everything else is defined here, once:
   *
   *  - the generation listing ([[generations]]), the only parser of
-  *    `batch=<id>` dir names;
-  *  - the tombstone ledger under `tombstones/epoch=E/`: the serving
-  *    anti-join ([[live]]) and the exactly-once epoch write
+  *    `batch=<id>` dir names, and the landing of a new generation
+  *    ([[clearForLanding]]);
+  *  - the serving read ([[visible]]): generations up to the
+  *    high-water mark minus the tombstone ledger under
+  *    `tombstones/epoch=E/`, with its exactly-once epoch write
   *    ([[tombstone]]);
-  *  - the tombstone-debt purge ([[purgeDebt]]);
-  *  - the rewrite behind full and size-tiered compaction ([[compact]],
-  *    [[tieredCompact]]);
+  *  - one rewrite and one commit behind the tombstone-debt purge
+  *    ([[purgeDebt]]) and full and size-tiered compaction
+  *    ([[compact]], [[tieredCompact]]);
   *  - the rollback cut ([[rollback]]), snapshot retention (hidden
   *    pending rewrites, deferred retirement) and every crash heal.
   *
@@ -57,23 +59,51 @@ import graft.etl.{Load, LocalParquet, WriterLease}
   * inside a merged tree (refused: rows below the cut share files with
   * rows above it).
   *
-  * Crash safety — the two-rename discipline of
-  * [[graft.etl.Load.atomicSwap]], scoped to the merged run:
-  *  1. the merged generation is fully written to `<tree>.__tiered_staging`;
-  *  2. a manifest naming the merged ids lands in `<tree>.__tiered_old`
+  * One commit ([[commit]]) lands every rewrite — full compaction, a
+  * size-tiered merge, a tombstone-debt purge. Each rewrites a run of
+  * generation ids (lo = the run's lowest id) and stages it at
+  * `<tree>.__tiered_staging/batch=<lo>`; a run whose live rows are all
+  * gone stages an empty dir. Then:
+  *  1. a manifest naming the run lands in `<tree>.__tiered_old`
   *     BEFORE anything moves (so recovery always knows the run);
-  *  3. the merged source dirs rename into the aside dir ASCENDING —
-  *     the lowest id first, because its presence in the live tree is
+  *  2. the run's generation dirs rename into that aside dir ASCENDING
+  *     — the lowest id first, because its presence in the live tree is
   *     the recovery discriminator;
-  *  4. the staged merged dir renames into the live tree as
-  *     `batch=<lowest id>` — the commit point;
-  *  5. aside + staging are deleted.
-  * [[recover]] (called by every maintenance/read entry point) heals
-  * any crash point: aside without manifest → nothing
-  * moved, discard; manifest present and live `batch=<lo>` missing →
-  * uncommitted, restore the moved dirs; live `batch=<lo>` present →
-  * committed (or never started), discard remnants. Every crash point
-  * leaves either the full pre-merge or the full post-merge tree.
+  *  3. the staged dir renames into the live tree as `batch=<lo>` — the
+  *     commit point;
+  *  4. aside + staging are deleted.
+  * With `retainMs > 0` steps 1–4 become a PUBLISH that runs after the
+  * retention window: the staged dir parks hidden as `.merged-<lo>`
+  * (a `_MERGED_IDS` marker names the run), the run keeps serving, and
+  * [[publish]] later (P1) moves live `batch=<lo>` to hidden `.old-<lo>`,
+  * (P2) renames `.merged-<lo>` to `batch=<lo>` — the commit point — and
+  * (P3) deletes the run's other generations, `.old-<lo>`, then the
+  * marker.
+  *
+  * [[recover]] (every writer entry; read entries when no writer lease
+  * is live) heals each crash point:
+  *
+  * | crash after | left on disk                      | heal              |
+  * |-------------|-----------------------------------|-------------------|
+  * | staging     | staging only                      | delete staging    |
+  * | 1 (torn)    | aside, no parseable manifest      | restore any moved |
+  * |             |                                   | dir, drop aside   |
+  * | 2           | manifest, live `batch=<lo>` gone  | restore the run   |
+  * | 3           | manifest, live `batch=<lo>` there | drop aside, stage |
+  * | P1          | `.merged-<lo>`, `batch=<lo>` gone | roll forward P2-3 |
+  * | P2          | `batch=<lo>` with `_MERGED_IDS`   | roll forward P3   |
+  *
+  * Every crash point leaves either the full pre-rewrite or the full
+  * post-rewrite tree. Nothing but `batch=<long>` ever sits in the live
+  * tree, so a reader never meets a generation name it cannot parse.
+  *
+  * Reader contract. Serving reads go through [[visible]]. A
+  * non-retained commit takes the run out of the live tree between
+  * steps 2 and 3, so a reader that lists the tree inside that window
+  * sees the run's generations briefly ABSENT — never twice — and one
+  * whose plan pinned the run's old files may find them gone.
+  * `retainMs > 0` is the reader-isolation option: the run's files stay
+  * where they are until the window has passed.
   */
 object SegmentCompaction {
 
@@ -128,9 +158,9 @@ object SegmentCompaction {
 
   /** Ids of the `batch=<id>` generation dirs under `tree`, ascending —
     * the one parser of generation dir names. A name that is not
-    * `batch=<long>` is not a generation and is skipped: under a live
-    * writer lease the read paths do not heal, so a reader can list a
-    * purge's in-flight `batch=N.__old` swap remnant.
+    * `batch=<long>` is not a generation and is skipped — e.g. the
+    * `batch=N.__old` swap remnant an older build's purge could leave,
+    * which only a writer entry heals ([[heal]]).
     */
   def generations(spark: SparkSession, tree: String): Seq[Long] = {
     val p = new Path(tree)
@@ -173,6 +203,24 @@ object SegmentCompaction {
     ()
   }
 
+  /** Clear generation `id` of `tree` before a writer lands it: a
+    * leftover `batch=<id>` dir — a retained rollback's cut generation,
+    * a crashed rollback's or a crashed append's remnant — is deleted,
+    * and `id` leaves the retirement schedule (it is live again, and
+    * deferred deletion must never fire on it). Without this, a
+    * partitioned dynamic overwrite (postings' `(batch, bucket)`)
+    * replaces only the sub-dirs the new batch touches and the cut rows
+    * in the others would serve again under the new high-water mark.
+    */
+  private[graft] def clearForLanding(spark: SparkSession, tree: String,
+                                     id: Long): Unit = {
+    dropGeneration(spark, tree, id)
+    retired(spark, tree).foreach { case (ids, after) =>
+      if (ids.contains(id))
+        writeRetired(spark, tree, ids.filterNot(_ == id), after)
+    }
+  }
+
   /** Delete every generation above `toBatch` from a per-generation
     * sidecar tree (the inverted index's `docs/`, the corpus `urls/`)
     * that follows its warehouse's rollback.
@@ -203,6 +251,19 @@ object SegmentCompaction {
     if (epoch <= 0L) df
     else df.join(broadcast(tombstones(spark, t, epoch)), Seq(t.key),
       "left_anti")
+
+  /** The one visibility rule of a generation tree: the generations ≤
+    * `upTo` (dirs above the high-water mark are a crashed append's
+    * half-landed batch, a crashed rollback's remnants or a retained
+    * rollback's cut generations — the commit row is the commit point),
+    * minus the tombstones committed by `epoch`. Callers add their own
+    * filters on top; the optimizer pushes them below the anti-join, so
+    * partition and bucket pruning stay as if written inside.
+    */
+  private[graft] def visible(spark: SparkSession, t: Tree, upTo: Long,
+                             epoch: Long): DataFrame =
+    live(spark, t, epoch)(
+      spark.read.parquet(t.path).filter(col("batch") <= upTo))
 
   /** The ledger write behind every warehouse's delete — exactly-once
     * and crash-safe:
@@ -239,7 +300,9 @@ object SegmentCompaction {
     val v = victims.localCheckpoint()
     val (n, a) = measure(v)
     if (n > 0L) {
-      v.write.mode("errorifexists")
+      // one file per epoch: the victims are already materialized, and a
+      // split would vary from run to run
+      v.coalesce(1).write.mode("errorifexists")
         .parquet(s"${t.dir}/tombstones/epoch=${e0 + 1}")
       WriterLease.check(spark, lease)
       commit(a)
@@ -250,10 +313,13 @@ object SegmentCompaction {
   // ---- heals ----
 
   /** Writer-side entry heal of `t`, run unconditionally INSIDE the
-    * caller's lease: the tree's own swap and merge remnants
-    * ([[recover]]), then the sibling-table swap remnants (state, meta,
-    * corpus row, …) whose read-side heals are gated on lease liveness
-    * and so are suppressed under this writer's own lease.
+    * caller's lease: the tree's own commit and publish remnants
+    * ([[recover]]), then the two-rename swap remnants under the
+    * warehouse root — sibling tables (state, meta, corpus row, …) whose
+    * read-side heals are gated on lease liveness and so are suppressed
+    * under this writer's own lease, and the `<tree>.__old` and
+    * `batch=N.__old` remnants an older build's whole-tree compact or
+    * generation purge could leave.
     */
   private[graft] def heal(spark: SparkSession, t: Tree): Unit = {
     recover(spark, t.path)
@@ -272,60 +338,56 @@ object SegmentCompaction {
 
   // ---- the lifecycle verbs ----
 
-  private def stage(df: DataFrame, parts: Seq[String],
-                    path: String): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (parts.isEmpty) w else w.partitionBy(parts: _*)).parquet(path)
-  }
-
-  /** The rewrite shared by full and tiered compaction: read the
-    * generations `gens` selects, drop tombstoned rows (the physical
-    * purge behind the logical deletes — the ledger itself stays, it
-    * keeps delete replays no-ops, and the read filter is idempotent on
-    * purged rows), relabel them `batch=lo`, lay them out, stage them
-    * at `staging`, check the fence, then `publish`.
+  /** The one rewrite behind full compaction, tiered merging and the
+    * debt purge: read the run `ids` (a contiguous run of generations),
+    * drop tombstoned rows (the physical purge behind the logical
+    * deletes — the ledger itself stays, it keeps delete replays no-ops,
+    * and the read filter is idempotent on purged rows), relabel them
+    * `batch=<ids.min>`, lay them out, stage them at
+    * `<tree>.__tiered_staging`, check the fence, then `publish` — every
+    * caller passes [[commit]]. A run whose live rows are all gone
+    * stages as an empty generation dir.
     */
   private def rewrite(spark: SparkSession, t: Tree, lease: WriterLease.Lease,
-                      gens: Column, epoch: Long, lo: Long, staging: String)
+                      ids: Seq[Long], epoch: Long)
                      (publish: => Unit): Unit = {
-    stage(t.layout(spark.read.parquet(t.path).filter(gens)
-        .transform(live(spark, t, epoch))
-        .drop("batch").withColumn("batch", lit(lo))),
-      "batch" +: t.parts, staging)
+    val lo = ids.min
+    val staging = stagingPath(t.path)
+    t.layout(live(spark, t, epoch)(
+        spark.read.parquet(t.path).filter(col("batch").isin(ids: _*)))
+        .drop("batch").withColumn("batch", lit(lo)))
+      .write.mode("overwrite").partitionBy("batch" +: t.parts: _*)
+      .parquet(staging.toString)
+    fsOf(spark, staging).mkdirs(new Path(staging, s"batch=$lo"))
     WriterLease.check(spark, lease)
     publish
   }
 
-  /** Full compaction: every live generation (≤ `last`; remnants above
-    * it die here) into one `batch=0` tree. A pure physical move —
-    * generations carry disjoint ids — crash-safe through the two-rename
-    * [[graft.etl.Load.atomicSwap]] of the whole tree. An unpublished
-    * retained rewrite is derived data of generations this rewrite
-    * covers and is discarded rather than left to race its publish.
-    * `retainMs > 0` commits the rewrite as a HIDDEN pending over all
-    * live generations ([[commit]]), so the current tree keeps serving
-    * byte-untouched until publish.
+  /** Full compaction: every generation ≤ `last` into one generation at
+    * the lowest id. A pure physical move — generations carry disjoint
+    * ids. Dirs above `last` are not this verb's: the rollback, retire
+    * and landing paths own them. An unpublished retained rewrite is
+    * derived data of generations this rewrite covers and is discarded
+    * rather than left to race its publish.
     */
   private[graft] def compact(spark: SparkSession, t: Tree,
                              lease: WriterLease.Lease, last: Long,
                              epoch: Long, retainMs: Long): Unit = {
     discardPending(spark, t.path)
-    val gens = genSizes(spark, t.path).map(_._1).filter(_ <= last)
-    val staging =
-      if (retainMs > 0L) stagingPath(t.path).toString else s"${t.path}.__staging"
-    rewrite(spark, t, lease, col("batch") <= last, epoch, 0L, staging) {
-      if (retainMs > 0L) commit(spark, t.path, gens, retainMs)
-      else Load.atomicSwap(spark, staging, t.path)
-    }
+    val ids = generations(spark, t.path).filter(_ <= last)
+    if (ids.nonEmpty)
+      rewrite(spark, t, lease, ids, epoch)(commit(spark, t.path, ids, retainMs))
   }
 
   /** Size-tiered compaction under [[mergeSet]]: the unsettled tail
     * merges into one generation at its lowest id; settled generations
-    * are never opened. A due retained rewrite publishes first and a
-    * due retained rollback's deletions execute; while a pending
-    * rewrite is still inside its window, maintenance BACKS OFF (a
-    * second merge over the same tail would race its publish). Returns
-    * the merged ids (empty = the policy did not fire).
+    * are never opened. Zero-row generations inside the tail's id range
+    * join the run, so the merged dir still covers a contiguous run. A
+    * due retained rewrite publishes first and a due retained
+    * rollback's deletions execute; while a pending rewrite is still
+    * inside its window, maintenance BACKS OFF (a second merge over the
+    * same tail would race its publish). Returns the merged ids (empty =
+    * the policy did not fire).
     */
   private[graft] def tieredCompact(spark: SparkSession, t: Tree,
                                    lease: WriterLease.Lease, last: Long,
@@ -333,13 +395,16 @@ object SegmentCompaction {
                                    retainMs: Long): Seq[Long] = {
     publishDue(spark, t.path)
     retireDue(spark, t.path, last)
-    val ids =
+    val tail =
       if (pending(spark, t.path).nonEmpty) Seq.empty
       else mergeSet(genSizes(spark, t.path).filter(_._1 <= last), ratio,
         minMerge)
+    val ids =
+      if (tail.isEmpty) tail
+      else generations(spark, t.path)
+        .filter(g => g >= tail.min && g <= tail.max)
     if (ids.nonEmpty)
-      rewrite(spark, t, lease, col("batch").isin(ids: _*), epoch, ids.min,
-        stagingPath(t.path).toString)(commit(spark, t.path, ids, retainMs))
+      rewrite(spark, t, lease, ids, epoch)(commit(spark, t.path, ids, retainMs))
     ids
   }
 
@@ -348,14 +413,13 @@ object SegmentCompaction {
     * — the reclaim lever for the case the size-tiered policy never
     * reaches, a huge SETTLED generation that is half deleted
     * (RocksDB's delete-triggered compaction). Each indebted generation
-    * rewrites through its own two-rename swap; the others are never
-    * opened. A pure physical filter (every read already anti-joins the
-    * ledger). The debt scan is one id-column pass plus a broadcast
-    * semi-join. Due retained rewrites publish first; generations still
-    * covered by an in-window pending are skipped, never discarded
-    * (their debt drains at publish). `retainMs > 0` commits each
-    * rewrite as its own hidden single-generation pending, bytes
-    * reclaimed at publish. Returns the purged generation ids.
+    * is its own one-generation run through [[rewrite]] and [[commit]];
+    * the others are never opened. A pure physical filter (every read
+    * already anti-joins the ledger). The debt scan is one id-column
+    * pass plus a broadcast semi-join. Due retained rewrites publish
+    * first; generations still covered by an in-window pending are
+    * skipped, never discarded (their debt drains at publish). Returns
+    * the purged generation ids.
     */
   private[graft] def purgeDebt(spark: SparkSession, t: Tree,
                                lease: WriterLease.Lease, last: Long,
@@ -377,16 +441,8 @@ object SegmentCompaction {
           if n > 0 && !covered(b) &&
             debt.getOrElse(b, 0L).toDouble / n >= tau => b }
       victims.foreach { b =>
-        val rewritten = t.layout(live(spark, t, epoch)(
-          spark.read.parquet(t.path).filter(col("batch") === b))
-          .drop("batch"))
-        val staging =
-          if (retainMs > 0L) s"${stagingPath(t.path)}/batch=$b"
-          else s"${t.path}.__debt_staging"
-        stage(rewritten, t.parts, staging)
-        WriterLease.check(spark, lease)
-        if (retainMs > 0L) commit(spark, t.path, Seq(b), retainMs)
-        else Load.atomicSwap(spark, staging, s"${t.path}/batch=$b")
+        rewrite(spark, t, lease, Seq(b), epoch)(
+          commit(spark, t.path, Seq(b), retainMs))
       }
       victims
     }
@@ -405,8 +461,8 @@ object SegmentCompaction {
     * deferred-deletion schedule ([[retire]]) so in-flight readers'
     * pinned files survive. A crash between the two steps leaves inert
     * dirs above the mark that the next rollback deletes and a re-ingest
-    * of the same id overwrites. Tombstones survive a rollback: it
-    * rewinds the ingest stream, not the delete requests.
+    * of the same id clears ([[clearForLanding]]). Tombstones survive a
+    * rollback: it rewinds the ingest stream, not the delete requests.
     */
   private[graft] def rollback(spark: SparkSession, t: Tree, last: Long,
                               toBatch: Long, retainMs: Long)
@@ -455,25 +511,16 @@ object SegmentCompaction {
     if (cands.size >= minMerge) cands else Seq.empty
   }
 
-  /** Heal any half-finished rewrite at `tree` — a whole-tree swap
-    * (full compaction), a generation swap (debt purge), a tiered merge
-    * or a publish; see the object doc for the crash-point table.
-    * Idempotent and re-entrant.
+  /** Heal any half-finished [[commit]] or [[publish]] at `tree`; see
+    * the object doc for the crash-point table. Idempotent and
+    * re-entrant.
     */
   def recover(spark: SparkSession, tree: String): Unit = {
-    Load.recoverSwap(spark, tree)
     // publishes that crashed mid-sequence roll FORWARD (the pre-merge
     // view is already partially destroyed); an intact pending merge is
     // left alone — reads heal crashes, writers advance state
     // (publishDue runs from lease-holding maintenance entry points)
     completeHalfPublished(spark, tree)
-    // a debt purge ([[purgeDebt]]) that crashed mid-generation-swap
-    // leaves a `batch=N.__old` beside (or instead of) its generation
-    // dir — the standard scoped-swap remnant
-    Load.recoverScopedSwaps(spark, tree)
-    val debtStaging = new Path(s"$tree.__debt_staging")
-    val dfs = fsOf(spark, debtStaging)
-    if (dfs.exists(debtStaging)) dfs.delete(debtStaging, true)
     val aside = asidePath(tree)
     val staging = stagingPath(tree)
     val fs = fsOf(spark, new Path(tree))
@@ -539,11 +586,13 @@ object SegmentCompaction {
     ()
   }
 
-  /** Commit a staged tiered merge: the caller has fully written the
-    * merged generation as `<tree>.__tiered_staging/batch=<ids.min>`.
+  /** Commit a staged rewrite of the run `ids` — the one commit behind
+    * full compaction, tiered merging and the debt purge: the caller has
+    * fully written the rewritten generation as
+    * `<tree>.__tiered_staging/batch=<ids.min>`.
     *
     * `retainMs = 0` (the default): immediate publish — protocol steps
-    * 2–5 (manifest, aside renames ascending, commit rename, cleanup).
+    * 1–4 (manifest, aside renames ascending, commit rename, cleanup).
     * Rename failures abort loudly before the commit point —
     * [[recover]] then restores the pre-merge tree on the next entry.
     *
@@ -565,9 +614,8 @@ object SegmentCompaction {
     */
   def commit(spark: SparkSession, tree: String, ids: Seq[Long],
              retainMs: Long = 0L): Unit = {
-    // ids.size >= 2 is a tiered MERGE; a single id is a retained
-    // in-place REWRITE (debt purge, 1-generation compact) — the
-    // protocol is identical, the replaced run is just length 1
+    // a single id is an in-place rewrite (debt purge, 1-generation
+    // compact) — the protocol is identical, the run is just length 1
     require(ids.nonEmpty, "a commit names at least one generation")
     val lo = ids.min
     val fs = fsOf(spark, new Path(tree))
@@ -582,11 +630,9 @@ object SegmentCompaction {
           s"$tree — publish or discard it before committing another")
       // the marker rides the atomic rename: no crash point can leave a
       // hidden merged dir whose replaced ids are unknown
-      val out = fs.create(
-        new Path(stagingPath(tree), s"batch=$lo/$MergedMarker"), true)
-      try out.write((ids.sorted.mkString(",") + "|" +
-        (System.currentTimeMillis() + retainMs)).getBytes("UTF-8"))
-      finally out.close()
+      writeText(fs, new Path(stagingPath(tree), s"batch=$lo/$MergedMarker"),
+        ids.sorted.mkString(",") + "|" +
+          (System.currentTimeMillis() + retainMs))
       if (!fs.rename(new Path(stagingPath(tree), s"batch=$lo"),
           mergedPath(tree, lo)))
         throw new IllegalStateException(
@@ -597,9 +643,7 @@ object SegmentCompaction {
     } else {
       val aside = asidePath(tree)
       fs.mkdirs(aside)
-      val out = fs.create(new Path(aside, Manifest), true)
-      try out.write(ids.sorted.mkString(",").getBytes("UTF-8"))
-      finally out.close()
+      writeText(fs, new Path(aside, Manifest), ids.sorted.mkString(","))
       ids.sorted.foreach { id =>
         if (!fs.rename(new Path(s"$tree/batch=$id"),
             new Path(aside, s"batch=$id")))
@@ -711,8 +755,8 @@ object SegmentCompaction {
   // their DELETION is deferred behind a `.retired` schedule file,
   // executed by a later lease-holding maintenance call ([[retireDue]])
   // or an explicit vacuum. A re-append of a retired id goes live again
-  // ([[unretire]] + the `> hwm` guard — deletion can never touch a
-  // live generation).
+  // ([[clearForLanding]] + the `> hwm` guard — deletion can never touch
+  // a live generation).
 
   private def retiredMarker(tree: String) = new Path(s"$tree/.retired")
 
@@ -720,16 +764,19 @@ object SegmentCompaction {
     * merges with an existing schedule (ids union, latest window wins).
     */
   def retire(spark: SparkSession, tree: String, ids: Seq[Long],
-             afterMs: Long): Unit = {
-    if (ids.isEmpty) return
+             afterMs: Long): Unit =
+    if (ids.nonEmpty) {
+      val (oldIds, oldAfter) = retired(spark, tree).getOrElse((Seq.empty, 0L))
+      writeRetired(spark, tree, (oldIds ++ ids).distinct.sorted,
+        math.max(afterMs, oldAfter))
+    }
+
+  /** Write the schedule, or drop it when no id is left. */
+  private def writeRetired(spark: SparkSession, tree: String, ids: Seq[Long],
+                           afterMs: Long): Unit = {
     val fs = fsOf(spark, new Path(tree))
-    val (oldIds, oldAfter) = retired(spark, tree).getOrElse((Seq.empty, 0L))
-    val merged = (oldIds ++ ids).distinct.sorted
-    val out = fs.create(retiredMarker(tree), true)
-    try out.write(
-      (merged.mkString(",") + "|" + math.max(afterMs, oldAfter))
-        .getBytes("UTF-8"))
-    finally out.close()
+    if (ids.isEmpty) fs.delete(retiredMarker(tree), false)
+    else writeText(fs, retiredMarker(tree), ids.mkString(",") + "|" + afterMs)
     ()
   }
 
@@ -739,24 +786,6 @@ object SegmentCompaction {
     */
   def retired(spark: SparkSession, tree: String): Option[(Seq[Long], Long)] =
     readMarker(fsOf(spark, new Path(tree)), retiredMarker(tree))
-
-  /** Remove one id from the schedule — called by the append path when
-    * a retired generation id is re-landed (it is live again; its
-    * pre-rollback snapshot is gone by the overwrite, which is the
-    * exactly-once contract, not a retention hole).
-    */
-  def unretire(spark: SparkSession, tree: String, id: Long): Unit =
-    retired(spark, tree).foreach { case (ids, after) =>
-      val fs = fsOf(spark, new Path(tree))
-      val rest = ids.filterNot(_ == id)
-      if (rest.isEmpty) { fs.delete(retiredMarker(tree), false); () }
-      else {
-        val out = fs.create(retiredMarker(tree), true)
-        try out.write((rest.mkString(",") + "|" + after).getBytes("UTF-8"))
-        finally out.close()
-        ()
-      }
-    }
 
   /** Execute the retirement schedule if its window has passed: delete
     * every scheduled generation still ABOVE the high-water mark (a
@@ -780,7 +809,7 @@ object SegmentCompaction {
       case _ => Seq.empty
     }
 
-  /** Steps 3–5 of a publish: delete the replaced generations (the
+  /** Step P3 of a publish: delete the replaced generations (the
     * lowest sits in its hidden aside), then the marker LAST — the
     * marker's presence is what makes an interrupted publish
     * recoverable.
@@ -798,7 +827,7 @@ object SegmentCompaction {
 
   /** Roll forward publishes that crashed mid-sequence — identified by
     * (a) a hidden merged dir whose live `batch=<lo>` is already gone
-    * (crash between publish steps 1 and 2), or (b) a live generation
+    * (crash between publish steps P1 and P2), or (b) a live generation
     * still carrying a `_MERGED_IDS` marker (crash after the commit
     * rename, before cleanup). Idempotent; called from [[recover]].
     */
@@ -834,21 +863,14 @@ object SegmentCompaction {
     * which precedes the staging rename, so nothing moved).
     */
   private def readMarker(fs: FileSystem,
-                         mk: Path): Option[(Seq[Long], Long)] = {
-    if (!fs.exists(mk)) return None
-    val in = fs.open(mk)
-    try {
-      val bytes = new Array[Byte](fs.getFileStatus(mk).getLen.toInt)
-      in.readFully(bytes)
-      val txt = new String(bytes, "UTF-8").trim
-      txt.split("\\|", 2) match {
-        case Array(ids, after) =>
-          try Some((ids.split(",").map(_.toLong).toSeq, after.toLong))
-          catch { case _: NumberFormatException => None }
-        case _ => None
-      }
-    } finally in.close()
-  }
+                         mk: Path): Option[(Seq[Long], Long)] =
+    if (!fs.exists(mk)) None
+    else readText(fs, mk).split("\\|", 2) match {
+      case Array(ids, after) =>
+        try Some((ids.split(",").map(_.toLong).toSeq, after.toLong))
+        catch { case _: NumberFormatException => None }
+      case _ => None
+    }
 
   private def restore(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
@@ -861,15 +883,22 @@ object SegmentCompaction {
     * crash during the manifest write — which precedes every rename,
     * so an unparsable manifest proves nothing moved).
     */
-  private def readManifest(fs: FileSystem, mf: Path): Seq[Long] = {
-    val in = fs.open(mf)
+  private def readManifest(fs: FileSystem, mf: Path): Seq[Long] =
+    try readText(fs, mf).split(",").map(_.toLong).toSeq
+    catch { case _: NumberFormatException => Seq.empty }
+
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
     try {
-      val bytes = new Array[Byte](fs.getFileStatus(mf).getLen.toInt)
+      val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
       in.readFully(bytes)
-      val txt = new String(bytes, "UTF-8").trim
-      try txt.split(",").map(_.toLong).toSeq
-      catch { case _: NumberFormatException => Seq.empty }
+      new String(bytes, "UTF-8").trim
     } finally in.close()
+  }
+
+  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   /** (absolute path, length, modification time) of every file under

@@ -129,21 +129,19 @@ class AdcIngestSpec extends SparkSpec {
   }
 
   test("append after a crashed compaction swap loses no generations") {
-    // Simulate compact dying between atomicSwap's two renames: index/
-    // moved aside to index.__old, staging not yet promoted. The next
-    // append must heal FIRST — if it wrote into a fresh index/ dir,
-    // the later recoverSwap would see both trees, assume the swap
-    // completed, and delete __old (every prior generation) while meta
-    // still claimed they landed.
+    // Simulate compact dying inside its commit: every generation moved
+    // into index.__tiered_old, the staged batch=0 not yet promoted. The
+    // next append must heal FIRST — landing its batch beside a tree
+    // missing every prior generation would serve it while meta still
+    // claimed they landed.
     val dir = tmp()
     AdcIngest.bootstrap(spark, vecs(0, 64), dir, k = 4, m = 2, ks = 4)
     assert(AdcIngest.append(spark, vecs(64, 80), dir, 1L))
-    Files.move(java.nio.file.Paths.get(s"$dir/index"),
-      java.nio.file.Paths.get(s"$dir/index.__old"))
+    crashMidCommit(s"$dir/index", Seq(0L, 1L))
     assert(AdcIngest.append(spark, vecs(80, 96), dir, 2L))
     assert(rows(dir).keySet == (0L until 96L).toSet,
       "prior generations lost after crashed-swap append")
-    assert(!new java.io.File(s"$dir/index.__old").exists())
+    assert(!new java.io.File(s"$dir/index.__tiered_old").exists())
   }
 
   test("rollback truncates bit-identically and the lifecycle continues") {

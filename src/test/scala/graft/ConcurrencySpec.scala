@@ -604,33 +604,55 @@ class ConcurrencySpec extends SparkSpec {
     assert(AdcIngest.index(spark, vdir).count() == n0)
   }
 
-  test("reads under a live writer lease skip a purge's in-flight " +
-      "batch=N.__old remnant instead of failing to parse it") {
+  test("reads under a purger's live lease never throw or double-serve") {
     val dir = tmp("lease_gen_remnant")
     InvertedIndex.build(spark, docs(0, 400), dir)
     InvertedIndex.addBatch(spark, docs(400, 450), dir, 1L)
     val vdir = tmp("lease_gen_remnant_adc")
     AdcIngest.bootstrap(spark, vecs(0, 300), vdir, k = 4, m = 4, ks = 8)
     AdcIngest.append(spark, vecs(300, 340), vdir, 1L)
-    // a non-retained purge between its generation swap's renames
-    // leaves batch=1.__old beside batch=1; under the purger's live
-    // lease the read paths must neither heal it nor choke on its name
+    val terms = Seq("w17", "w42", "w133")
+    def hits(d: String) = InvertedIndex.search(spark, d, terms, 1000)
+      .select(col("doc_id")).as[Long].collect().toSeq
+    val allHits = hits(dir)
+    def vecIds = AdcIngest.index(spark, vdir).select(col("vec_id"))
+      .as[Long].collect().toSeq
+    // a non-retained purge of generation 1, caught between its commit's
+    // aside rename and its commit rename: the generation sits in
+    // <tree>.__tiered_old, live batch=1 is missing. Under the purger's
+    // live lease the read paths must not heal it, and every serving
+    // read sees the generation absent, never twice
     val held = Seq(dir, vdir).map(WriterLease.acquire(spark, _, "purger"))
-    val remnant = new Path(s"$dir/postings/batch=1.__old")
-    fs(dir).mkdirs(remnant)
-    fs(vdir).mkdirs(new Path(s"$vdir/index/batch=1.__old"))
+    val aside = new Path(s"$dir/postings.__tiered_old")
     try {
-      assert(InvertedIndex.segmentCount(spark, dir) == 2)
+      crashMidCommit(s"$dir/postings", Seq(1L))
+      crashMidCommit(s"$vdir/index", Seq(1L))
+      assert(InvertedIndex.segmentCount(spark, dir) == 1)
       assert(WarehouseStats.invidx(spark, dir).head()
-        .getAs[Long]("generations") == 2L)
-      assert(AdcIngest.segmentCount(spark, vdir) == 2)
+        .getAs[Long]("generations") == 1L)
+      assert(AdcIngest.segmentCount(spark, vdir) == 1)
       assert(WarehouseStats.adc(spark, vdir).head()
-        .getAs[Long]("generations") == 2L)
+        .getAs[Long]("generations") == 1L)
+      val racing = hits(dir)
+      assert(racing.distinct == racing && racing.forall(_ < 400L) &&
+        racing.toSet == allHits.filter(_ < 400L).toSet)
+      assert(vecIds.sorted == (0L until 300L))
+      // the commit rename lands, the aside dir is not yet deleted: the
+      // generation serves exactly once
+      Seq(s"$dir/postings", s"$vdir/index").foreach { t =>
+        assert(org.apache.hadoop.fs.FileUtil.copy(fs(t),
+          new Path(s"$t.__tiered_old/batch=1"), fs(t),
+          new Path(s"$t/batch=1"), false, fs(t).getConf))
+      }
+      assert(hits(dir) == allHits)
+      assert(vecIds.sorted == (0L until 340L))
       assert(AdcIngest.readAsOf(spark, vdir, 0L).count() == 300L)
-      assert(fs(dir).exists(remnant), "no heal under a live writer lease")
+      assert(fs(dir).exists(aside), "no heal under a live writer lease")
     } finally held.foreach(WriterLease.release(spark, _))
     // the lease is gone: the next read heals the remnant
     assert(InvertedIndex.segmentCount(spark, dir) == 2)
-    assert(!fs(dir).exists(remnant))
+    assert(!fs(dir).exists(aside))
+    assert(AdcIngest.segmentCount(spark, vdir) == 2)
+    assert(!fs(vdir).exists(new Path(s"$vdir/index.__tiered_old")))
   }
 }

@@ -334,15 +334,14 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("addBatch after a crashed compaction swap loses no generations") {
-    // compact dying between atomicSwap's two renames leaves only
-    // postings.__old; the next addBatch must heal first or the later
-    // recoverSwap deletes __old — every prior generation — while the
-    // corpus row still claims they landed
+    // a full compact dying inside its commit leaves every generation in
+    // postings.__tiered_old and no live batch=0; the next addBatch must
+    // heal first, or the batch lands beside a tree missing every prior
+    // generation while the corpus row still claims they landed
     val dir = tmp()
     InvertedIndex.build(spark, docs(corpus.take(3): _*), dir)
     assert(InvertedIndex.addBatch(spark, docs(corpus.drop(3): _*), dir, 1L))
-    Files.move(java.nio.file.Paths.get(s"$dir/postings"),
-      java.nio.file.Paths.get(s"$dir/postings.__old"))
+    crashMidCommit(s"$dir/postings", Seq(0L, 1L))
     assert(InvertedIndex.addBatch(spark,
       docs(10L -> "fresh crash batch"), dir, 2L))
     val dir2 = tmp()
@@ -350,7 +349,7 @@ class InvertedIndexSpec extends SparkSpec {
       docs(corpus :+ (10L -> "fresh crash batch"): _*), dir2)
     assert(postingsOf(dir) == postingsOf(dir2),
       "prior generations lost after crashed-swap addBatch")
-    assert(!new java.io.File(s"$dir/postings.__old").exists())
+    assert(!new java.io.File(s"$dir/postings.__tiered_old").exists())
   }
 
   test("proximity search: sort-based min pair distance boosts BM25 exactly") {

@@ -51,6 +51,16 @@ class LoadSpec extends SparkSpec {
     assert(Load.parseLocalReadMaxBytes(Some("0")) == 0L)
   }
 
+  test("a driver-written 1-row replaceTable carries a _SUCCESS marker") {
+    val dir = tmp("replace_success")
+    assert(Load.replaceTable(spark, Seq((1L, "a")).toDF("id", "v"), dir) == 1L)
+    assert(Files.exists(java.nio.file.Paths.get(s"$dir/_SUCCESS")),
+      "the driver-side write must leave the completion marker a Spark " +
+        "write leaves")
+    assert(Load.readTable(spark, dir).get.collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1))) == Seq((1L, "a")))
+  }
+
   test("upsert bootstraps an absent table and is idempotent") {
     val dir = tmp("ups")
     val a = Seq(("k1", "v1"), ("k2", "v2")).toDF("pk", "v")

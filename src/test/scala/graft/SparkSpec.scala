@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,4 +27,20 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Plant the crash state of a generation-tree rewrite commit that
+    * died after moving its run `ids` aside and before the commit
+    * rename: the generations sit in `<tree>.__tiered_old` under a
+    * `_MANIFEST` naming them, and live `batch=<ids.min>` is missing.
+    */
+  protected def crashMidCommit(tree: String, ids: Seq[Long]): Unit = {
+    val fs = new Path(tree)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val aside = new Path(s"$tree.__tiered_old")
+    fs.mkdirs(aside)
+    val out = fs.create(new Path(aside, "_MANIFEST"), true)
+    try out.write(ids.mkString(",").getBytes("UTF-8")) finally out.close()
+    ids.foreach(id => assert(fs.rename(new Path(s"$tree/batch=$id"),
+      new Path(aside, s"batch=$id"))))
+  }
 }

@@ -553,13 +553,12 @@ class TombstoneSpec extends SparkSpec {
     // replays stay no-ops; re-running the purge is a no-op too
     assert(InvertedIndex.delete(spark, dir, idsDf(Seq(800L))) == 0L)
     assert(InvertedIndex.purgeDebt(spark, dir, tau = 0.5).isEmpty)
-    // crash window: a generation sitting only at batch=N.__old heals
-    // on the next entry (the scoped-swap remnant rule)
-    val fs = hadoopFs(dir)
-    assert(fs.rename(new Path(s"$dir/postings/batch=1"),
-      new Path(s"$dir/postings/batch=1.__old")))
+    // crash window: a purge dying inside its commit leaves the
+    // generation only in the aside dir; it heals on the next entry
+    crashMidCommit(s"$dir/postings", Seq(1L))
     assert(searchRows(dir) == served,
-      "a crashed generation swap must heal before serving")
+      "a crashed generation commit must heal before serving")
+    assert(!hadoopFs(dir).exists(new Path(s"$dir/postings.__tiered_old")))
     // the vector twin: same contract
     val vdir = tmp("tomb_debt_adc")
     AdcIngest.bootstrap(spark, vecs(0, 300), vdir, k = 4, m = 4, ks = 8)
@@ -584,18 +583,16 @@ class TombstoneSpec extends SparkSpec {
     assert(CorpusIngest.delete(spark, dir, idsDf(Seq(1L, 10L))) == 2L)
     val view = CorpusIngest.read(spark, dir).orderBy(col("doc_id"))
       .collect().toSeq.map(_.toSeq)
-    val fs = hadoopFs(dir)
-    // simulate purge dying between atomicSwap's two renames: the live
-    // tree sits only in corpus.__old
-    def crash(): Unit = assert(fs.rename(
-      new Path(s"$dir/corpus"), new Path(s"$dir/corpus.__old")))
+    // simulate purge dying inside its commit of generation 0: the
+    // generation sits only in corpus.__tiered_old
+    def crash(): Unit = crashMidCommit(s"$dir/corpus", Seq(0L))
     crash()
     assert(CorpusIngest.read(spark, dir).orderBy(col("doc_id"))
       .collect().toSeq.map(_.toSeq) == view,
-      "read must heal the crashed swap and serve the full tree")
+      "read must heal the crashed commit and serve the full tree")
     // the write path: ingest after the same crash state must heal
-    // FIRST — recreating corpus/ with just its own batch would let the
-    // next heal delete __old (every prior generation)
+    // FIRST — landing its batch beside a tree missing generation 0
+    // would lose it once the aside dir is discarded
     crash()
     assert(CorpusIngest.ingest(spark,
       crawl(Seq((30L, "A", "a30"))), dir, 2L))
@@ -659,5 +656,134 @@ class TombstoneSpec extends SparkSpec {
     assert(CorpusIngest.ingest(spark, crawl(Seq((20L, "A", "a0"))), dir, 1L))
     assert(corpusIds(dir) == Set(0L, 1L, 2L, 3L),
       "rolled-back rows must not be served again")
+  }
+
+  // ---- one commit and one read for the generation tree ----
+
+  private def adcRows(dir: String): Seq[(Long, Long, Seq[Int], Double)] =
+    AdcIngest.index(spark, dir).collect().toSeq.map { r =>
+      (r.getAs[Long]("vec_id"), r.getAs[Long]("cluster_id"),
+        r.getAs[scala.collection.Seq[Int]]("codes").toSeq,
+        r.getAs[Double]("vn"))
+    }.sortBy(_._1)
+
+  test("re-adding a generation cut by a retained rollback serves only " +
+      "its new rows") {
+    val dir = tmp("land_clear")
+    InvertedIndex.build(spark, docs(0, 800), dir)
+    InvertedIndex.addBatch(spark, docs(800, 900), dir, 1L)
+    InvertedIndex.rollback(spark, dir, 0L, retainMs = 24L * 3600 * 1000)
+    assert(InvertedIndex.addBatch(spark, docs(5000, 5002), dir, 1L))
+    // the new batch touches a handful of the 64 bucket dirs; the cut
+    // rows in every other bucket must be gone, not served again
+    assert(spark.read.parquet(s"$dir/postings")
+      .filter(col("batch") <= 1)
+      .join(idsDf(800L until 900L), Seq("doc_id"), "left_semi")
+      .count() == 0L, "rolled-back postings survived the re-landing")
+    assert(SegmentCompaction.retired(spark, s"$dir/postings").isEmpty)
+    val terms = Seq("w17", "w42", "w133", "w250", "w301")
+    def top(d: String) = InvertedIndex.search(spark, d, terms, 1000)
+      .collect().toSeq.map(_.toSeq)
+    val fresh = tmp("land_clear_fresh")
+    InvertedIndex.build(spark, docs(0, 800), fresh)
+    InvertedIndex.addBatch(spark, docs(5000, 5002), fresh, 1L)
+    assert(top(dir) == top(fresh))
+    assert(corpusRow(dir) == corpusRow(fresh))
+    // the vector twin lands the same way
+    val vdir = tmp("land_clear_adc")
+    AdcIngest.bootstrap(spark, vecs(0, 300), vdir, k = 4, m = 4, ks = 8)
+    AdcIngest.append(spark, vecs(300, 340), vdir, 1L)
+    AdcIngest.rollback(spark, vdir, 0L, retainMs = 24L * 3600 * 1000)
+    assert(AdcIngest.append(spark, vecs(500, 510), vdir, 1L))
+    assert(adcRows(vdir).map(_._1) == ((0L until 300L) ++ (500L until 510L)))
+    assert(SegmentCompaction.retired(spark, s"$vdir/index").isEmpty)
+  }
+
+  test("tieredCompact over an all-tombstoned tail commits an empty " +
+      "generation; the next call is a no-op") {
+    val dir = tmp("tomb_tail")
+    InvertedIndex.build(spark, docs(0, 800), dir)
+    InvertedIndex.addBatch(spark, docs(800, 850), dir, 1L)
+    InvertedIndex.addBatch(spark, docs(850, 900), dir, 2L)
+    assert(InvertedIndex.delete(spark, dir, idsDf(800L until 900L)) == 100L)
+    val served = searchRows(dir)
+    assert(InvertedIndex.tieredCompact(spark, dir) == Seq(1L, 2L))
+    assert(searchRows(dir) == served)
+    assert(SegmentCompaction.genSizes(spark, s"$dir/postings")
+      .map(_._1) == Seq(0L), "the merged tail holds no rows")
+    assert(InvertedIndex.tieredCompact(spark, dir).isEmpty)
+    assert(searchRows(dir) == served)
+    val vdir = tmp("tomb_tail_adc")
+    AdcIngest.bootstrap(spark, vecs(0, 300), vdir, k = 4, m = 4, ks = 8)
+    AdcIngest.append(spark, vecs(300, 320), vdir, 1L)
+    AdcIngest.append(spark, vecs(320, 340), vdir, 2L)
+    assert(AdcIngest.delete(spark, vdir,
+      (300L until 340L).toDF("vec_id")) == 40L)
+    val vServed = adcRows(vdir)
+    assert(AdcIngest.tieredCompact(spark, vdir) == Seq(1L, 2L))
+    assert(adcRows(vdir) == vServed)
+    assert(AdcIngest.tieredCompact(spark, vdir).isEmpty)
+    assert(adcRows(vdir) == vServed)
+  }
+
+  test("a retained compact after generation 0 was purged empty " +
+      "publishes the live rows") {
+    val vdir = tmp("tomb_empty_gen0")
+    AdcIngest.bootstrap(spark, vecs(0, 300), vdir, k = 4, m = 4, ks = 8)
+    AdcIngest.append(spark, vecs(300, 340), vdir, 1L)
+    assert(AdcIngest.delete(spark, vdir,
+      (0L until 300L).toDF("vec_id")) == 300L)
+    assert(AdcIngest.purgeDebt(spark, vdir, tau = 0.5) == Seq(0L))
+    val served = adcRows(vdir)
+    assert(served.map(_._1) == (300L until 340L))
+    AdcIngest.compact(spark, vdir, retainMs = 3600 * 1000L)
+    assert(SegmentCompaction.pending(spark, s"$vdir/index").map(_.ids) ==
+      Some(Seq(0L, 1L)))
+    assert(adcRows(vdir) == served)
+    assert(AdcIngest.vacuum(spark, vdir) == Seq(0L, 1L))
+    assert(adcRows(vdir) == served)
+    assert(AdcIngest.segmentCount(spark, vdir) == 1)
+  }
+
+  test("each tombstone epoch lands as one data file (invidx and adc)") {
+    def filesPerEpoch(root: String): Seq[Int] =
+      hadoopFs(root).listStatus(new Path(root)).toSeq
+        .filter(_.getPath.getName.startsWith("epoch="))
+        .map(e => hadoopFs(root).listStatus(e.getPath)
+          .count(f => !f.getPath.getName.startsWith("_") &&
+            !f.getPath.getName.startsWith(".")))
+    val dir = tmp("tomb_one_file")
+    InvertedIndex.build(spark, docs(0, 300), dir)
+    InvertedIndex.addBatch(spark, docs(300, 360), dir, 1L)
+    // victims in both generations: the docs sidecar scan spans files
+    assert(InvertedIndex.delete(spark, dir,
+      idsDf(Seq(5L, 17L, 150L, 310L, 350L))) == 5L)
+    assert(InvertedIndex.delete(spark, dir, idsDf(Seq(6L, 320L))) == 2L)
+    assert(filesPerEpoch(s"$dir/tombstones") == Seq(1, 1))
+    val vdir = tmp("tomb_one_file_adc")
+    AdcIngest.bootstrap(spark, vecs(0, 300), vdir, k = 4, m = 4, ks = 8)
+    AdcIngest.append(spark, vecs(300, 340), vdir, 1L)
+    assert(AdcIngest.delete(spark, vdir,
+      Seq(3L, 150L, 299L, 305L, 330L).toDF("vec_id")) == 5L)
+    assert(filesPerEpoch(s"$vdir/tombstones") == Seq(1))
+  }
+
+  test("a tiered run spans an emptied generation, so a rollback " +
+      "inside the run is refused") {
+    val dir = tmp("tomb_tail_gap")
+    InvertedIndex.build(spark, docs(0, 800), dir)
+    InvertedIndex.addBatch(spark, docs(800, 850), dir, 1L)
+    InvertedIndex.addBatch(spark, docs(850, 900), dir, 2L)
+    InvertedIndex.addBatch(spark, docs(900, 950), dir, 3L)
+    assert(InvertedIndex.delete(spark, dir, idsDf(850L until 900L)) == 50L)
+    assert(InvertedIndex.purgeDebt(spark, dir, tau = 0.5) == Seq(2L))
+    val served = searchRows(dir)
+    // generation 2 holds no rows, so the size policy sees only 1 and 3;
+    // the merged dir must still cover the whole run 1..3
+    assert(InvertedIndex.tieredCompact(spark, dir) == Seq(1L, 2L, 3L))
+    assert(searchRows(dir) == served)
+    // batch=1 now holds generation 3's rows: a cut at 1 is inside it
+    intercept[IllegalArgumentException](InvertedIndex.rollback(spark, dir, 1L))
+    assert(searchRows(dir) == served)
   }
 }
