@@ -175,11 +175,22 @@ object SegmentCompaction {
   /** Whether a cut at generation `at` (≤ the high-water mark `last`)
     * falls on a generation boundary: `at + 1` is itself a generation
     * dir, or the cut is the high-water mark. Under the coverage
-    * invariant a cut anywhere else lies inside a merged run.
+    * invariant a cut anywhere else lies inside a merged run. A run a
+    * non-retained [[commit]] has moved aside is absent from the live
+    * tree until its commit rename, and it lands (or is restored) under
+    * its lowest id, so `at + 1` heading the aside manifest is a
+    * boundary too. A manifest gone by the time it is read means the
+    * commit landed after the listing, so the tree is listed again.
     */
   def onBoundary(spark: SparkSession, tree: String, last: Long,
                  at: Long): Boolean =
-    at == last || generations(spark, tree).contains(at + 1)
+    at == last || generations(spark, tree).contains(at + 1) || {
+      val mf = new Path(asidePath(tree), Manifest)
+      val asideLo =
+        try readManifest(fsOf(spark, mf), mf).minOption
+        catch { case _: java.io.FileNotFoundException => None }
+      asideLo.contains(at + 1) || generations(spark, tree).contains(at + 1)
+    }
 
   /** (batch id, row count) per live generation, ascending id. ROWS are
     * the tiering metric, not directory bytes: postings and PQ codes

@@ -3,6 +3,8 @@ package graft.queries
 import java.nio.file.Files
 import java.time.LocalDate
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -39,7 +41,7 @@ object PipelineQueries {
     * can't be eager: the returned DataFrame lazily reads the warehouse
     * parquet until the caller materializes it.
     */
-  private[queries] def tempRoot(prefix: String): String = {
+  private[graft] def tempRoot(prefix: String): String = {
     val p = Files.createTempDirectory(prefix)
     sys.addShutdownHook {
       // Other shutdown hooks (Spark's executor/task teardown) can still
@@ -48,7 +50,9 @@ object PipelineQueries {
       // that gained a file after the walk, and one failed delete used
       // to abort the whole hook. Re-walk a few times, tolerating
       // individual failures; anything that survives a concurrent
-      // writer's last gasp goes on the final best-effort pass.
+      // writer's last gasp goes on the final best-effort pass. The walk
+      // is lazy, so an entry vanishing mid-walk surfaces as an
+      // UncheckedIOException, not an IOException: hence NonFatal.
       import scala.jdk.CollectionConverters._
       var attempt = 0
       var done = false
@@ -58,10 +62,10 @@ object PipelineQueries {
           java.nio.file.Files.walk(p).iterator().asScala.toSeq
             .reverse.foreach { f =>
               try java.nio.file.Files.deleteIfExists(f)
-              catch { case _: java.io.IOException => }
+              catch { case NonFatal(_) => }
             }
           !java.nio.file.Files.exists(p)
-        } catch { case _: java.io.IOException => false }
+        } catch { case NonFatal(_) => false }
       }
     }
     p.toString

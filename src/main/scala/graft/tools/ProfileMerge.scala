@@ -29,15 +29,9 @@ object ProfileMerge {
     }
 
     val results = (1 to passes).map { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_profmerge")
-      val wh = tmp.toString + "/fact"
-      // clean the month-partitioned copies up on exit (tempRoot's
-      // shutdown-hook contract — each pass writes a full orders copy)
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq
-          .reverse.foreach(java.nio.file.Files.deleteIfExists)
-      }
+      // each pass writes a full orders copy, removed at JVM exit
+      val wh = graft.queries.PipelineQueries.tempRoot("graft_profmerge") +
+        "/fact"
       val ord = graft.tables.Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_totalprice"),
           date_format(col("o_orderdate"), "yyyy-MM").as("day"))

@@ -617,6 +617,9 @@ class ConcurrencySpec extends SparkSpec {
     val allHits = hits(dir)
     def vecIds = AdcIngest.index(spark, vdir).select(col("vec_id"))
       .as[Long].collect().toSeq
+    def hitsAsOf0 = InvertedIndex.searchAsOf(spark, dir, terms, 1000, 0L)
+      .collect().map(_.toString).sorted.toSeq
+    val allHitsAsOf0 = hitsAsOf0
     // a non-retained purge of generation 1, caught between its commit's
     // aside rename and its commit rename: the generation sits in
     // <tree>.__tiered_old, live batch=1 is missing. Under the purger's
@@ -637,6 +640,10 @@ class ConcurrencySpec extends SparkSpec {
       assert(racing.distinct == racing && racing.forall(_ < 400L) &&
         racing.toSet == allHits.filter(_ < 400L).toSet)
       assert(vecIds.sorted == (0L until 300L))
+      // the run lands (or is restored) as batch=1, so a cut at 0 is on
+      // a generation boundary while it sits aside
+      assert(AdcIngest.readAsOf(spark, vdir, 0L).count() == 300L)
+      assert(allHitsAsOf0.nonEmpty && hitsAsOf0 == allHitsAsOf0)
       // the commit rename lands, the aside dir is not yet deleted: the
       // generation serves exactly once
       Seq(s"$dir/postings", s"$vdir/index").foreach { t =>
