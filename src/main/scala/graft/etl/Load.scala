@@ -6,6 +6,7 @@ import scala.util.Try
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.Relational.{antiJoin, dedupKeepLast, dedupKeepLastPositional, requireNonNull, semiJoin}
 
@@ -177,10 +178,17 @@ object Load {
   private[graft] def parseLocalReadMaxBytes(raw: Option[String]): Long =
     raw.flatMap(v => Try(v.trim.toLong).toOption).getOrElse(8L * 1024 * 1024)
 
-  def readTable(spark: SparkSession, dir: String): Option[DataFrame] = {
+  /** Heals the table at `dir` (liveness-gated) and says whether it is
+    * there to read.
+    */
+  private def present(spark: SparkSession, dir: String): Boolean = {
     recoverSwapGated(spark, dir)
     recoverScopedSwapsGated(spark, dir)
-    if (!tableExists(spark, dir)) None
+    tableExists(spark, dir)
+  }
+
+  def readTable(spark: SparkSession, dir: String): Option[DataFrame] = {
+    if (!present(spark, dir)) None
     // Meta/model-sized tables (the overwhelming majority of readTable
     // calls on the warehouse verb paths) come back as a LocalRelation:
     // the footers are read once on the driver, and every downstream
@@ -196,6 +204,18 @@ object Load {
       case None => spark.read.parquet(dir)
     })
   }
+
+  /** Column `key` of the table at `dir`, read with the type `batch`
+    * gives it. A given schema skips the footer-inference job that
+    * `spark.read.parquet` launches on a partitioned tree, and no
+    * footer is read on the driver either: the key-existence checks
+    * ([[insert]]'s duplicate-PK probe, a FK check) need nothing else.
+    */
+  private[graft] def readKey(spark: SparkSession, dir: String,
+                             batch: DataFrame, key: String): Option[DataFrame] =
+    if (!present(spark, dir)) None
+    else Some(spark.read.schema(StructType(Seq(batch.schema(key))))
+      .parquet(dir).select(key))
 
   /** K2 batch UPSERT: existing rows lose to incoming rows on PK match.
     * Staged write + rename so the target is never half-written and the
@@ -215,7 +235,10 @@ object Load {
     // foreachBatch micro-batch. For a post-shuffle frame the winner
     // among intra-batch duplicates is partitioning-dependent; such
     // callers should pre-dedupe with an explicit ordering column via
-    // dedupKeepLast before calling upsert.
+    // dedupKeepLast before calling upsert. This window is the only
+    // keep-last the daily pipeline runs for its master tables: it
+    // upserts the sheet's projection straight from the one-partition
+    // sheet scan (Transform.cursosProjection).
     val incoming = df.withColumn("__prio", lit(1))
       .withColumn("__idx", monotonically_increasing_id())
     val candidates = readTable(spark, dir) match {
@@ -621,10 +644,10 @@ object Load {
   def insert(spark: SparkSession, df: DataFrame, dir: String,
              pk: Option[String] = None,
              partitionDay: Option[String] = None): Long = {
-    for (key <- pk; existing <- readTable(spark, dir)) {
-      val dups = semiJoin(df.select(col(key)), existing, Seq(key)).count()
-      if (dups > 0) throw new IllegalStateException(
-        s"insert into $dir aborted: $dups incoming rows duplicate existing PK $key")
+    for (key <- pk; existing <- readKey(spark, dir, df, key)) {
+      val dups = semiJoin(df.select(col(key)), existing, Seq(key))
+      if (!dups.isEmpty) throw new IllegalStateException(
+        s"insert into $dir aborted: ${dups.count()} incoming rows duplicate existing PK $key")
     }
     // the row count rides the write itself (Observation) — no count job
     // and no cache of the batch; a caller whose batch has a wider
@@ -657,7 +680,10 @@ object Load {
     */
   def enforceFk(df: DataFrame, referenced: DataFrame, key: String,
                 quarantineDir: String): DataFrame = {
-    val keys = referenced.select(col(key)).na.drop().distinct()
+    // no na.drop().distinct(): a null key matches nothing in an
+    // equi-join and a duplicate one keeps no row twice in a semi- or
+    // anti-join, so the two aggregate stages would change no result
+    val keys = referenced.select(col(key))
     writeQuarantine(antiJoin(df, keys, Seq(key)), quarantineDir)
     semiJoin(df, broadcast(keys), Seq(key))
   }

@@ -2,7 +2,7 @@ package graft.etl
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Functions.lenientTimestamp
@@ -39,17 +39,43 @@ case class EtlSummary(
   *    parquet (`day=YYYY-MM-DD/`): the daily incremental contract means
   *    every run appends one day's directories, and the reference's
   *    day-equality reads become partition pruning instead of scans.
+  *
+  * Code budget: a daily job must run its next day from compiled
+  * classes. Spark keeps generated classes in an LRU of
+  * `spark.sql.codegen.cache.maxEntries` (100) entries, a Guava cache
+  * of 4 segments of 25 placed by hash. Each whole-stage-codegen stage
+  * takes two entries (the driver's class loader and the executor's),
+  * and projections, orderings and predicates take more. The classes of
+  * a day that overflows a segment are compiled again every day (for
+  * about 50 classes, 0.5–0.7 s of Janino on the driver and the same
+  * again in tasks). So no value that changes per day is inlined into
+  * generated code (see [[stampedOn]]), keep-last runs once per table,
+  * the FK checks add no aggregate stage and the duplicate-PK probe no
+  * count. EtlPipelineSpec pins the budget: it counts the
+  * `WholeStageCodegenExec` nodes of every action of one incremental
+  * day (AQE query stages and subqueries included) through a
+  * `QueryExecutionListener`.
   */
 object Pipeline {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** W1's day filter: the sheet timestamp `c` falls on `day`. The day
+    * compares as an ISO string, not as a date: a date literal is
+    * inlined into the generated code as an int, a string literal is
+    * passed by reference, so only the string form lets the next day
+    * run this day's compiled classes.
+    */
+  private[graft] def stampedOn(c: Column, day: LocalDate): Column =
+    lenientTimestamp(c).cast("date").cast("string") === lit(day.toString)
 
   def run(spark: SparkSession, paths: EtlPaths, targetDate: LocalDate): EtlSummary = {
     val wh = paths.warehouseDir
     val q = paths.quarantineDir
 
     // ---- entry point 1: master data (SURVEY.md §3.1) ----
-    val cursos = Transform.cursos(
+    // keep-last by PK runs once, in upsert's window (see Transform.cursos)
+    val cursos = Transform.cursosProjection(
       Extract.readSheet(spark, paths.rawCursos, headerRow = 2))
     val nCursos = Load.upsert(spark, cursos, s"$wh/cursos", "codigo_curso")
 
@@ -65,8 +91,7 @@ object Pipeline {
       // ---- entry point 2: transactional matriculas (§3.2) ----
       // W1: equality filter on the RAW sheet before any transform (the
       // reference's hand-rolled pushdown; Catalyst would push it anyway)
-      val onDate = lenientTimestamp(col("Marca temporal")).cast("date") ===
-        lit(java.sql.Date.valueOf(targetDate))
+      val onDate = stampedOn(col("Marca temporal"), targetDate)
       // D4/O4: per-stage row/null telemetry piggybacked on the existing
       // pass via the Observation API — zero extra jobs, unlike the
       // reference's count()-per-stage logging
@@ -122,7 +147,8 @@ object Pipeline {
         s"$q/pagos_nulls")
       // J5: FK to matriculas vs warehouse state (post-insert, like the
       // reference's check against the DB after matriculas loaded)
-      val pagosValid = Load.readTable(spark, s"$wh/matriculas") match {
+      val pagosValid = Load.readKey(spark, s"$wh/matriculas", pagosClean,
+          "codigo_matricula") match {
         case Some(mat) =>
           Load.enforceFk(pagosClean, mat, "codigo_matricula", s"$q/pagos_fk")
         case None => pagosClean

@@ -14,18 +14,23 @@ import graft.ops.Relational.dedupKeepLastPositional
 object Transform {
 
   /** `cursos` (P1, etl/transform.py:14-38): 6-column projection +
-    * keep-last dedup by PK.
+    * keep-last dedup by PK. [[Pipeline]] upserts [[cursosProjection]]
+    * instead: [[Load.upsert]]'s one window already keeps the last
+    * incoming row per PK, so a second keep-last pass would only add a
+    * shuffle and a window stage to the day's plans.
     */
   def cursos(df: DataFrame): DataFrame =
-    dedupKeepLastPositional(
-      df.select(
-        col("CÓDIGO_C").cast(StringType).as("codigo_curso"),
-        col("NOMBRE_C").cast(StringType).as("nombre_curso"),
-        col("I1").cast(IntegerType).as("numero_modulo"),
-        isoDate(lenientTimestamp(col("FECHA DE INICIO"))).as("fecha_inicio"),
-        firstToken(col("PROFESOR")).as("codigo_profesor"),
-        col("HORARIOS").cast(StringType).as("horarios")),
-      Seq("codigo_curso"))
+    dedupKeepLastPositional(cursosProjection(df), Seq("codigo_curso"))
+
+  /** P1's 6-column projection, without the keep-last dedup. */
+  def cursosProjection(df: DataFrame): DataFrame =
+    df.select(
+      col("CÓDIGO_C").cast(StringType).as("codigo_curso"),
+      col("NOMBRE_C").cast(StringType).as("nombre_curso"),
+      col("I1").cast(IntegerType).as("numero_modulo"),
+      isoDate(lenientTimestamp(col("FECHA DE INICIO"))).as("fecha_inicio"),
+      firstToken(col("PROFESOR")).as("codigo_profesor"),
+      col("HORARIOS").cast(StringType).as("horarios"))
 
   /** `estudiantes` (P5, etl/transform.py:283-354): strip/title/lower
     * normalizations + phone-prefix country detection (F10–F12).

@@ -3,7 +3,13 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.sql.execution.{QueryExecution, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.etl.{EtlPaths, Load, Pipeline, Transform}
 
@@ -258,5 +264,60 @@ class EtlPipelineSpec extends SparkSpec {
       .filter(col("codigo_curso") === "P101")
       .select("nombre_curso").collect()(0).getString(0)
     assert(name == "RENAMED")
+  }
+
+  test("W1's ISO-string day filter keeps exactly the rows the date-typed filter keeps") {
+    // one cell per lenientTimestamp pattern, the first and last second
+    // on both sides of the day, and empty, unparseable and null cells
+    // (the ragged last row leaves its timestamp null)
+    val p = s"$root/w1_stamps.csv"
+    write(p, Seq(
+      "id,Marca temporal",
+      "1,11/8/2026 00:00:00", "2,11/8/2026 23:59:59",
+      "3,10/8/2026 23:59:59", "4,12/8/2026 00:00:00",
+      "5,11/08/2026 9:05", "6,10/8/2026 23:59", "7,11/8/2026",
+      "8,12/8/2026", "9,2026-08-11 00:00:00", "10,2026-08-11 23:59:59",
+      "11,2026-08-10 23:59:59", "12,2026-08-12 00:00:00", "13,2026-08-11",
+      "14,2026-08-12", "15,", "16,not a date", "17,31/13/2026 10:00:00",
+      "18"))
+    val sheet = graft.etl.Extract.readSheet(spark, p, headerRow = 1)
+    assert(sheet.filter(col("Marca temporal").isNull).count() == 2)
+    val day = LocalDate.of(2026, 8, 11)
+    def kept(f: org.apache.spark.sql.Column) =
+      sheet.filter(f).select("id").collect().map(_.getString(0).toInt).sorted.toSeq
+    val dateTyped = kept(graft.functions.Functions.lenientTimestamp(
+      col("Marca temporal")).cast("date") === lit(java.sql.Date.valueOf(day)))
+    assert(dateTyped == Seq(1, 2, 5, 7, 9, 10, 13))
+    assert(kept(Pipeline.stampedOn(col("Marca temporal"), day)) == dateTyped)
+  }
+
+  test("an incremental day runs within its whole-stage-codegen budget") {
+    // Spark caches generated classes in an LRU of
+    // spark.sql.codegen.cache.maxEntries (100) entries, 4 segments of
+    // 25; the classes of a day that overflows a segment are compiled
+    // again on every run. Each WholeStageCodegenExec of an action's
+    // executed plan (AQE query stages and subqueries included) is one
+    // generated class, cached for the driver's and the executor's
+    // class loader.
+    val r = Files.createTempDirectory("graft_etl_budget").toString
+    val paths = fixtures(r)
+    Pipeline.run(spark, paths, LocalDate.of(2026, 8, 10))
+    val perAction = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        perAction.add(funcName -> collectWithSubqueries(qe.executedPlan) {
+          case w: WholeStageCodegenExec => w
+        }.size)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    BusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      Pipeline.run(spark, paths, LocalDate.of(2026, 8, 11))
+      BusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val stages = perAction.asScala.toSeq
+    assert(stages.map(_._2).sum <= 20,
+      s"whole-stage-codegen stages per action: ${stages.mkString(", ")}")
   }
 }

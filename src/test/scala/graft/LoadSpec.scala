@@ -146,4 +146,42 @@ class LoadSpec extends SparkSpec {
       .select("fk").as[String].collect().sorted.toSeq
     assert(quarantined == Seq("kX", "kY"))
   }
+
+  test("enforceFk against duplicate and null referenced keys matches the distinct non-null form") {
+    val q = Files.createTempDirectory("fkq_dup").toString + "/orphans"
+    val facts = Seq(Some("k1") -> 10, Some("kX") -> 20, Some("k2") -> 30,
+      None -> 40, Some("k1") -> 50).toDF("fk", "v")
+    val dim = Seq(Some("k1"), Some("k1"), None, Some("k2"), Some("k2"), None,
+      Some("k3")).toDF("fk")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("fk"), col("v").cast("int")).as[(Option[String], Int)]
+        .collect().sortBy(_._2).toSeq
+    // the form enforceFk used to broadcast
+    val keys = dim.na.drop().distinct()
+    val wantKept = rows(facts.join(keys, Seq("fk"), "left_semi"))
+    val wantQuarantined = rows(facts.join(keys, Seq("fk"), "left_anti"))
+    val kept = rows(Load.enforceFk(facts, dim, "fk", q))
+    val quarantined = rows(spark.read.option("header", "true").csv(q))
+    assert(kept == Seq(Some("k1") -> 10, Some("k2") -> 30, Some("k1") -> 50))
+    assert(quarantined == Seq(Some("kX") -> 20, None -> 40))
+    assert(kept == wantKept && quarantined == wantQuarantined)
+  }
+
+  test("readKey reads a day-partitioned table's keys without a Spark job") {
+    // spark.read.parquet on a partitioned tree launches a footer
+    // schema-inference job; readKey takes the key's type from the batch
+    val dir = tmp("readkey")
+    val batch = Seq(("k1", "2026-08-10"), ("k2", "2026-08-11"), ("k3", "2026-08-11"))
+      .toDF("pk", "d")
+    assert(Load.insert(spark, batch, dir, pk = Some("pk"),
+      partitionDay = Some("d")) == 3)
+    val sc = spark.sparkContext
+    sc.setJobGroup("readKey", "readKey")
+    val keys = try Load.readKey(spark, dir, batch, "pk").get
+      finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("readKey").isEmpty)
+    assert(keys.columns.toSeq == Seq("pk"))
+    assert(keys.as[String].collect().sorted.toSeq == Seq("k1", "k2", "k3"))
+    assert(Load.readKey(spark, tmp("readkey_absent"), batch, "pk").isEmpty)
+  }
 }
