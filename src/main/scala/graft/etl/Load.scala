@@ -238,7 +238,7 @@ object Load {
     // dedupKeepLast before calling upsert. This window is the only
     // keep-last the daily pipeline runs for its master tables: it
     // upserts the sheet's projection straight from the one-partition
-    // sheet scan (Transform.cursosProjection).
+    // sheet scan (Transform.cursos).
     val incoming = df.withColumn("__prio", lit(1))
       .withColumn("__idx", monotonically_increasing_id())
     val candidates = readTable(spark, dir) match {

@@ -54,7 +54,7 @@ case class EtlSummary(
   * count. EtlPipelineSpec pins the budget: it counts the
   * `WholeStageCodegenExec` nodes of every action of one incremental
   * day (AQE query stages and subqueries included) through a
-  * `QueryExecutionListener`.
+  * `QueryExecutionListener`, and each persisted frame's plan once.
   */
 object Pipeline {
 
@@ -75,7 +75,7 @@ object Pipeline {
 
     // ---- entry point 1: master data (SURVEY.md §3.1) ----
     // keep-last by PK runs once, in upsert's window (see Transform.cursos)
-    val cursos = Transform.cursosProjection(
+    val cursos = Transform.cursos(
       Extract.readSheet(spark, paths.rawCursos, headerRow = 2))
     val nCursos = Load.upsert(spark, cursos, s"$wh/cursos", "codigo_curso")
 

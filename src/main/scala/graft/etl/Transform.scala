@@ -13,17 +13,12 @@ import graft.ops.Relational.dedupKeepLastPositional
   */
 object Transform {
 
-  /** `cursos` (P1, etl/transform.py:14-38): 6-column projection +
-    * keep-last dedup by PK. [[Pipeline]] upserts [[cursosProjection]]
-    * instead: [[Load.upsert]]'s one window already keeps the last
-    * incoming row per PK, so a second keep-last pass would only add a
-    * shuffle and a window stage to the day's plans.
+  /** `cursos` (P1, etl/transform.py:14-38): 6-column projection. The
+    * reference's keep-last dedup by PK runs in [[Load.upsert]]'s one
+    * window, as for [[estudiantes]]: a second keep-last pass here would
+    * only add a shuffle and a window stage to the day's plans.
     */
   def cursos(df: DataFrame): DataFrame =
-    dedupKeepLastPositional(cursosProjection(df), Seq("codigo_curso"))
-
-  /** P1's 6-column projection, without the keep-last dedup. */
-  def cursosProjection(df: DataFrame): DataFrame =
     df.select(
       col("CÓDIGO_C").cast(StringType).as("codigo_curso"),
       col("NOMBRE_C").cast(StringType).as("nombre_curso"),
