@@ -8,14 +8,13 @@ import graft.etl.{Load, WriterLease}
 import graft.ops.Relational.eager
 import graft.ops.SegmentCompaction.visible
 
-/** Incremental corpus-build warehouse — the INGEST twin of the q162
-  * end-to-end flagship. The flagship trains and selects over the whole
-  * crawl every run; a production pipeline does that ONCE (bootstrap)
-  * and then folds each new crawl batch through apply-only stages at
-  * O(batch): no model retrain, no corpus window, no corpus shuffle.
-  * This is the corpus-level member of the incremental warehouse family
-  * (signature index q136, IVF q148, inverted index q157, NB/DSIR model
-  * `extend`).
+/** Incremental corpus-build warehouse. [[bootstrap]] is the one corpus
+  * build (it serves the q162 end-to-end flagship): it trains and
+  * selects over the whole initial crawl ONCE; each new crawl batch then
+  * folds through apply-only stages at O(batch): no model retrain, no
+  * corpus window, no corpus shuffle. This is the corpus-level member
+  * of the incremental warehouse family (signature index q136, IVF
+  * q148, inverted index q157, NB/DSIR model `extend`).
   *
   * Layout under `dir`:
   *  - `mapping/`, `nb/`, `dsir/`, `merges/` — the persisted model
@@ -44,9 +43,9 @@ import graft.ops.SegmentCompaction.visible
   *  4. NB quality gate — persisted weights, zero-exchange scoring;
   *  5. DSIR admission by the per-source threshold RECORDED at
   *     bootstrap (min selected lr per source) — a broadcast join plus
-  *     a filter, where the flagship needed a per-source window over
-  *     the corpus; sources unseen at bootstrap admit at the global
-  *     minimum threshold;
+  *     a filter, where bootstrap needed a per-source window over the
+  *     corpus; sources unseen at bootstrap admit at the global minimum
+  *     threshold;
   *  6. BPE encode with the persisted merges and pack CONTINUING from
   *     the per-source token high-water mark — new sequences extend
   *     the corpus stream exactly where batch I−1 left it, without
@@ -192,6 +191,21 @@ object CorpusIngest {
     * model under the xxhash64 production hash (scoring follows the
     * hash kind recorded in the model, so every later ingest inherits
     * it); leave false where a DuckDB oracle must replay the scores.
+    *
+    * Stages, cheapest reducer first (C4/RefinedWeb shape):
+    *  1. canonical-URL dedup — one window exchange, BEFORE any byte
+    *     of page content is touched;
+    *  2. HTML extract + mojibake repair (persisted mapping) on the
+    *     keepers only — zero shuffles, materialized once because
+    *     every later stage scans it;
+    *  3. optional langid (`langid`), then the NB quality gate: train
+    *     on the `nbSplit` rows, persist micro-unit weights, score the
+    *     whole pool with zero exchanges, keep `pred_pos`;
+    *  4. DSIR: train `dsirTarget` vs the gated pool, score, ONE
+    *     per-source window keeps the top `selectPct` percent;
+    *  5. BPE: train `bpeMerges` merges on the selected corpus,
+    *     persist, encode via a broadcast lexicon, and pack into
+    *     `seqLen`-token sequences with one per-source window.
     */
   def bootstrap(spark: SparkSession, crawl: DataFrame, dir: String,
                 nbLabel: Column, nbSplit: Column, dsirTarget: Column,
@@ -276,7 +290,7 @@ object CorpusIngest {
     writeBatch(packed, s"$dir/corpus", 0L)
     writeBatch(keep.select(col("canon_url")), s"$dir/urls", 0L)
     // per-source admission threshold = min selected lr (what the
-    // flagship's top-pct window admitted); hwm = the packed stream end
+    // top-pct window above admitted); hwm = the packed stream end
     val n = Load.replaceTable(spark,
       packed.groupBy(col("source")).agg(
           min(col("lr_micro")).as("lr_min_micro"),

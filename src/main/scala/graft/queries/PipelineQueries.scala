@@ -472,7 +472,7 @@ object PipelineQueries {
 
   val q168IncrementalCorpus = Q("q168_incremental_corpus",
     // INCREMENTAL corpus ingest (ops/CorpusIngest) — the O(batch)
-    // production twin of the q162 end-to-end flagship: bootstrap on
+    // path after the bootstrap the q162 flagship runs: bootstrap on
     // 3/4 of the crawl trains + persists every model and records the
     // per-source DSIR admission thresholds and token high-water
     // marks; the remaining 1/4 then folds through APPLY-ONLY stages —

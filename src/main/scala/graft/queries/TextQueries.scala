@@ -2901,37 +2901,15 @@ object TextQueries {
       FROM f ORDER BY score_micro DESC, doc_id LIMIT 20"""))
 
   val q162CorpusBuild = Q("q162_corpus_build",
-    // FLAGSHIP end-to-end corpus build — the round-7 operator surface
-    // composed the way a real crawl pipeline chains it (C4/RefinedWeb
-    // shape), promoted to SparkEntry.entry. Stages, in the order a
-    // 100 TB run wants them (cheapest reducer first):
-    //   1. URL-canonical dedup (q153 machinery) on the planted crawl
-    //      record — one window exchange on the canonical string,
-    //      BEFORE any byte of page content is touched;
-    //   2. HTML → text extraction (q155) + mojibake repair (q151,
-    //      persisted mapping) on the KEEPERS only — zero shuffles,
-    //      one codegen regex/replace ladder, materialized once
-    //      (eager) because four downstream consumers scan it;
-    //   3. NB quality gate (q154): TRAIN on the %3!=0 split
-    //      (label lang='en'), persist micro-unit weights, score the
-    //      whole pool with the zero-exchange WeightedTokenSum pass,
-    //      keep pred_pos;
-    //   4. DSIR selection (q161, B=512): train target=en vs raw=pool
-    //      on the gated survivors, zero-exchange score, ONE per-source
-    //      window keeps the top half per source;
-    //   5. BPE tokenize + sequence pack (q152): train 16 merges on the
-    //      selected corpus, persist, encode via broadcast lexicon,
-    //      pack into 2048-token sequences with one per-source window.
-    // Every model artifact is persisted and CONSUMED by the oracle
-    // (q141 rule); the planted url/html/mojibake columns are built by
-    // IDENTICAL expressions in both engines. URL dup pairs are
+    // FLAGSHIP end-to-end corpus build (SparkEntry.entry):
+    // CorpusIngest.bootstrap over a planted crawl, read back from the
+    // warehouse. The planted url/html/mojibake columns are built by
+    // IDENTICAL expressions in both engines, and the oracle consumes
+    // every persisted model (q141 rule). URL dup pairs are
     // (doc_id-1, doc_id) at doc_id%10==9, so ~10% of the crawl
     // collapses and the keeper is always the even member.
     (s, d) => {
-      import graft.ops.{Bpe, Dsir, HtmlText, Mojibake, NaiveBayes}
-      val mojiWh = "/root/repo/target/graft_mojibake/mapping_q162"
-      Mojibake.saveMapping(s, mojiWh)
-      val mapping = Mojibake.loadMapping(s, mojiWh)
+      import graft.ops.CorpusIngest
 
       // planted crawl record: url mess (case/port/slash/param-order/
       // utm/fbclid/fragment) around canonical id k, page html around
@@ -2967,76 +2945,33 @@ object TextQueries {
         lit(" &lt;end&gt;</p><footer><a href=\"/p\">Privacy"),
         lit("</a> &nbsp; <a href=\"/t\">Terms</a></footer></body></html>"))
 
-      // stage 1: URL dedup first — content untouched, one exchange
-      val uw = Window.partitionBy(col("canon_url")).orderBy(col("doc_id"))
-      val keep0 = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), col("lang"),
-          url.as("url"), html.as("html"))
-        .withColumn("canon_url", canonicalizeUrl(col("url")))
-        .withColumn("rn", row_number().over(uw))
-        .filter(col("rn") === 1)
-
-      // stage 2: extract + repair keepers only; materialize ONCE —
-      // the NB train/score, DSIR train/score and BPE passes all scan
-      // this pool (at 100 TB this is the checkpoint-to-warehouse step)
-      val pool = eager(keep0.select(col("doc_id"), col("source"),
-        col("lang"),
-        Mojibake.repair(HtmlText.extractText(col("html")), mapping)
-          .as("text")))
-
-      // stage 3: NB quality gate
-      NaiveBayes.train(s,
-        pool.filter(col("doc_id") % 3 =!= 0)
-          .select(col("text"), (col("lang") === "en").as("label")),
-        NbWarehouse + "/q162", 256)
-      val gated = eager(NaiveBayes.score(s, pool, NbWarehouse + "/q162")
-        .filter(col("pred_pos"))
-        .select(col("doc_id"), col("source"), col("lang"), col("text"),
-          col("margin_micro")))
-
-      // stage 4: DSIR selection (top 50% per source)
-      Dsir.train(s,
-        gated.filter(col("lang") === "en").select(col("text")),
-        gated.select(col("text")), DsirWarehouse + "/q162", 512)
-      val selected = eager(Dsir.selectTop(
-          Dsir.score(s, gated, DsirWarehouse + "/q162"),
-          "source", "doc_id", 50)
-        .filter(col("is_selected"))
-        .select(col("doc_id"), col("source"), col("lang"), col("text"),
-          col("margin_micro"), col("lr_micro")))
-
-      // stage 5: BPE tokenize + pack into 2048-token sequences
-      val merges = Bpe.train(s, selected, numMerges = 16)
-      Bpe.saveMerges(s, merges, BpeWarehouse + "/merges_q162")
-      val ranked = Bpe.loadMerges(s, BpeWarehouse + "/merges_q162")
-      val lex = Bpe.lexicon(Bpe.wordCounts(selected).select(col("word")),
-        ranked)
-      val toks = Bpe.encode(selected.select(col("doc_id"), col("text")),
-          lex, ranked)
-        .select(col("doc_id"), col("n_tokens"))
-      val pw = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      selected.drop("text").join(toks, Seq("doc_id"))
-        .withColumn("tok_before",
-          coalesce(sum(col("n_tokens")).over(pw), lit(0L)))
+      val wh = "/root/repo/target/graft_corpus/q162"
+      CorpusIngest.bootstrap(s,
+        Tables.documents(s, d).select(col("doc_id"), col("source"),
+          col("lang"), canonicalizeUrl(url).as("canon_url"),
+          html.as("html")),
+        wh,
+        nbLabel = col("lang") === "en",
+        nbSplit = col("doc_id") % 3 =!= 0,
+        dsirTarget = col("lang") === "en",
+        selectPct = 50)
+      CorpusIngest.read(s, wh)
         .select(col("doc_id"), col("source"), col("lang"),
           col("margin_micro"), col("lr_micro"), col("n_tokens"),
-          col("tok_before"),
-          expr("tok_before div 2048").as("start_seq"),
-          expr("(tok_before + n_tokens - 1) div 2048").as("end_seq"))
+          col("tok_before"), col("start_seq"), col("end_seq"))
         .orderBy(col("doc_id"))
     },
     Some(raw"""WITH RECURSIVE
         mm AS (SELECT rank, moji, fixed FROM read_parquet(
-          '/root/repo/target/graft_mojibake/mapping_q162/*.parquet')),
+          '/root/repo/target/graft_corpus/q162/mapping/*.parquet')),
         nw AS (SELECT token, weight_micro FROM read_parquet(
-          '/root/repo/target/graft_nb/q162/weights/*.parquet')),
+          '/root/repo/target/graft_corpus/q162/nb/weights/*.parquet')),
         nm AS (SELECT prior_micro FROM read_parquet(
-          '/root/repo/target/graft_nb/q162/meta/*.parquet')),
+          '/root/repo/target/graft_corpus/q162/nb/meta/*.parquet')),
         dm AS (SELECT bucket, lr_micro FROM read_parquet(
-          '/root/repo/target/graft_dsir/q162/model/*.parquet')),
+          '/root/repo/target/graft_corpus/q162/dsir/model/*.parquet')),
         bm AS (SELECT rank, left_sym, right_sym FROM read_parquet(
-          '/root/repo/target/graft_bpe/merges_q162/*.parquet')),
+          '/root/repo/target/graft_corpus/q162/merges/*.parquet')),
         base AS (SELECT doc_id, source, lang,
           CASE WHEN doc_id % 10 = 9 THEN doc_id - 1 ELSE doc_id END AS kk,
           text FROM documents),

@@ -1656,119 +1656,6 @@ object Stress {
       10000L
     }
 
-    // ---- END-TO-END corpus build (q162 shape) at 1M pages, with  ----
-    // ---- PER-STAGE wall attribution: url-dedup -> html extract + ----
-    // ---- mojibake repair (checkpointed to parquet — the          ----
-    // ---- warehouse step the real pipeline takes) -> NB gate      ----
-    // ---- (planted dialect labels) -> DSIR select (PRODUCTION     ----
-    // ---- xxhash path — no oracle at stress scale) -> BPE pack.   ----
-    // ---- Each stage reads the previous stage's parquet, so a     ----
-    // ---- stage's wall is its own cost, not its lineage's.        ----
-    val cbRoot = s"$dir/stress_corpusbuild"
-    val cbLabels = Seq("corpus url-dedup 1M", "corpus extract+repair 1M",
-      "corpus nb gate 1M", "corpus dsir select 1M", "corpus bpe pack 1M")
-    if (cbLabels.exists(wanted)) {
-      val n = 1000000L
-      // crawl records: ~10% url dups (pairs at id%10==9), en-dialect
-      // "t#" vocab for id%3==0 (the NB gate's positive class), page
-      // html around the text with mojibake damage planted in the body
-      val moji = graft.ops.Mojibake
-      val plant0 = s"caf${moji.mojibakeOf(0xE9)} pr${moji.mojibakeOf(0xE8)}s"
-      val plant1 = s"${moji.mojibakeOf(0x201C)}quoted${moji.mojibakeOf(0x201D)}"
-      val kk = when(col("id") % 10 === 9, col("id") - 1).otherwise(col("id"))
-      val text = concat_ws(" ", (0 until 20).map { j =>
-        concat(
-          when(col("id") % 3 === 0, lit("t")).otherwise(lit("r")),
-          pmod(hash(col("id") * 37L + lit(j)), lit(500)))
-      }: _*)
-      val crawl = spark.range(n).select(
-        col("id").as("doc_id"),
-        concat(lit("src"), pmod(hash(col("id") * 17L), lit(20))).as("source"),
-        when(col("id") % 3 === 0, lit("en")).otherwise(lit("xx")).as("lang"),
-        concat(lit("https://www.example"), kk % 7, lit(".com/page/"), kk,
-          when(col("id") % 2 === 0, concat(lit("?id="), kk, lit("&utm_s=x")))
-            .otherwise(concat(lit("?id="), kk)),
-          when(col("id") % 5 === 0, concat(lit("#f"), col("id")))
-            .otherwise(lit(""))).as("url"),
-        concat(lit("<html><head><title>Doc "), col("id"),
-          lit("</title><script>t();</script></head><body><nav><a href=\"/\">H</a></nav><p>"),
-          text, lit(" "),
-          when(col("id") % 2 === 0, lit(plant0)).otherwise(lit(plant1)),
-          lit("</p><footer><a href=\"/t\">T</a></footer></body></html>"))
-          .as("html"))
-      val mojiWh = s"$cbRoot/mapping"
-      graft.ops.Mojibake.saveMapping(spark, mojiWh)
-      val mapping = graft.ops.Mojibake.loadMapping(spark, mojiWh)
-      time("corpus url-dedup 1M") {
-        val uw = Window.partitionBy(col("canon_url")).orderBy(col("doc_id"))
-        crawl
-          .withColumn("canon_url",
-            graft.queries.TextQueries.canonicalizeUrl(col("url")))
-          .withColumn("rn", row_number().over(uw))
-          .filter(col("rn") === 1)
-          .select("doc_id", "source", "lang", "html")
-          .write.mode("overwrite").parquet(s"$cbRoot/keepers")
-        spark.read.parquet(s"$cbRoot/keepers").count()
-      }
-      time("corpus extract+repair 1M") {
-        spark.read.parquet(s"$cbRoot/keepers")
-          .select(col("doc_id"), col("source"), col("lang"),
-            graft.ops.Mojibake.repair(
-              graft.ops.HtmlText.extractText(col("html")), mapping)
-              .as("text"))
-          .write.mode("overwrite").parquet(s"$cbRoot/pool")
-        spark.read.parquet(s"$cbRoot/pool").count()
-      }
-      time("corpus nb gate 1M") {
-        val pool = spark.read.parquet(s"$cbRoot/pool")
-        graft.ops.NaiveBayes.train(spark,
-          pool.filter(col("doc_id") % 7 =!= 0)
-            .select(col("text"), (col("lang") === "en").as("label")),
-          s"$cbRoot/nb", 512)
-        graft.ops.NaiveBayes.score(spark, pool, s"$cbRoot/nb")
-          .filter(col("pred_pos"))
-          .select("doc_id", "source", "lang", "text", "margin_micro")
-          .write.mode("overwrite").parquet(s"$cbRoot/gated")
-        val g = spark.read.parquet(s"$cbRoot/gated")
-        val bad = g.filter(col("lang") =!= "en").count()
-        val kept = g.count()
-        require(bad * 50 < kept, s"nb gate leaked $bad of $kept")
-        kept
-      }
-      time("corpus dsir select 1M") {
-        val gated = spark.read.parquet(s"$cbRoot/gated")
-        graft.ops.Dsir.train(spark,
-          gated.filter(col("doc_id") % 11 === 0).select(col("text")),
-          gated.select(col("text")), s"$cbRoot/dsir", buckets = 2048,
-          fast = true)
-        graft.ops.Dsir.selectTop(
-            graft.ops.Dsir.score(spark, gated, s"$cbRoot/dsir"),
-            "source", "doc_id", 50)
-          .filter(col("is_selected"))
-          .select("doc_id", "source", "text")
-          .write.mode("overwrite").parquet(s"$cbRoot/selected")
-        spark.read.parquet(s"$cbRoot/selected").count()
-      }
-      time("corpus bpe pack 1M") {
-        val selected = spark.read.parquet(s"$cbRoot/selected")
-        val merges = graft.ops.Bpe.train(spark, selected, numMerges = 16)
-        graft.ops.Bpe.saveMerges(spark, merges, s"$cbRoot/merges")
-        val ranked = graft.ops.Bpe.loadMerges(spark, s"$cbRoot/merges")
-        val lex = graft.ops.Bpe.lexicon(
-          graft.ops.Bpe.wordCounts(selected).select(col("word")), ranked)
-        val toks = graft.ops.Bpe.encode(
-            selected.select(col("doc_id"), col("text")), lex, ranked)
-          .select(col("doc_id"), col("n_tokens"))
-        val pw = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        force(selected.drop("text").join(toks, Seq("doc_id"))
-          .withColumn("tok_before",
-            coalesce(sum(col("n_tokens")).over(pw), lit(0L)))
-          .select(col("doc_id"), col("source"), col("n_tokens"),
-            expr("tok_before div 2048").as("start_seq")))
-      }
-    }
-
     // ---- INCREMENTAL corpus ingest (q168 shape) at 1M pages:     ----
     // ---- bootstrap trains + persists every model ONCE; a 10k-page----
     // ---- batch then folds through the apply-only path (frozen    ----
@@ -1827,7 +1714,11 @@ object Stress {
           dsirTarget = col("doc_id") % 11 === 0,
           selectPct = 50, nbVocabCap = 512, dsirBuckets = 2048,
           bpeMerges = 16, dsirFast = true)
-        spark.read.parquet(s"$ciRoot/corpus").count()
+        val landed = spark.read.parquet(s"$ciRoot/corpus")
+        val bad = landed.filter(col("lang") =!= "en").count()
+        val kept = landed.count()
+        require(bad * 50 < kept, s"nb gate leaked $bad of $kept")
+        kept
       }
       time("corpus ingest 10k batch") {
         require(graft.ops.CorpusIngest.ingest(spark,

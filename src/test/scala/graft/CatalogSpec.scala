@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
+import graft.ops.CorpusIngest
 import graft.tools.PlanAudit
 
 /** The catalog-wide checks, read from ONE pass over the catalog in name
@@ -35,7 +37,7 @@ class CatalogSpec extends SparkSpec {
     "q157_inverted_index",      // graft_invidx/q157
     "q160_phrase_search",       // graft_invidx/q160
     "q161_dsir_select",         // graft_dsir/q161
-    "q162_corpus_build",        // graft_mojibake/mapping_q162, nb, dsir, bpe
+    "q162_corpus_build",        // graft_corpus/q162 (bootstrap)
     "q163_pq_codebooks",        // graft_centroids/q163 + graft_pq/q163
     "q164_proximity_search",    // graft_invidx/q164
     "q167_index_compact",       // graft_invidx/q167
@@ -99,7 +101,17 @@ class CatalogSpec extends SparkSpec {
 
   test("flagship entry returns rows on sf0.001") {
     val df = SparkEntry.entry(spark)
-    assert(df.count() > 0)
+    val served = df.collect().toSeq
+    assert(served.nonEmpty)
+    // the flagship serves the bootstrap warehouse its oracle reads, as
+    // is: a build forked from CorpusIngest.bootstrap would not
+    val wh = "'([^']*/q162)/mapping/".r
+      .findFirstMatchIn(SparkEntry.oracleSql("q162_corpus_build"))
+      .map(_.group(1)).getOrElse(fail("q162's oracle reads no mapping"))
+    assert(CorpusIngest.lastBatch(spark, wh) == 0)
+    val stored = CorpusIngest.read(spark, wh)
+      .select(df.columns.map(col): _*).orderBy(col("doc_id"))
+    assert(served == stored.collect().toSeq)
   }
 
   test("every oracleSql key has a matching query") {
