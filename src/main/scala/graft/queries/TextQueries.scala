@@ -2900,6 +2900,13 @@ object TextQueries {
         CAST(bm25_micro + prox_micro AS BIGINT) AS score_micro
       FROM f ORDER BY score_micro DESC, doc_id LIMIT 20"""))
 
+  /** q162's bootstrap warehouse under the build-output target/ dir,
+    * made absolute so the DuckDB oracle's read_parquet globs resolve
+    * to the same files from any working directory.
+    */
+  private val Q162Warehouse =
+    new java.io.File("target/graft_corpus/q162").getAbsolutePath
+
   val q162CorpusBuild = Q("q162_corpus_build",
     // FLAGSHIP end-to-end corpus build (SparkEntry.entry):
     // CorpusIngest.bootstrap over a planted crawl, read back from the
@@ -2945,7 +2952,7 @@ object TextQueries {
         lit(" &lt;end&gt;</p><footer><a href=\"/p\">Privacy"),
         lit("</a> &nbsp; <a href=\"/t\">Terms</a></footer></body></html>"))
 
-      val wh = "/root/repo/target/graft_corpus/q162"
+      val wh = Q162Warehouse
       CorpusIngest.bootstrap(s,
         Tables.documents(s, d).select(col("doc_id"), col("source"),
           col("lang"), canonicalizeUrl(url).as("canon_url"),
@@ -2963,15 +2970,15 @@ object TextQueries {
     },
     Some(raw"""WITH RECURSIVE
         mm AS (SELECT rank, moji, fixed FROM read_parquet(
-          '/root/repo/target/graft_corpus/q162/mapping/*.parquet')),
+          '${Q162Warehouse}/mapping/*.parquet')),
         nw AS (SELECT token, weight_micro FROM read_parquet(
-          '/root/repo/target/graft_corpus/q162/nb/weights/*.parquet')),
+          '${Q162Warehouse}/nb/weights/*.parquet')),
         nm AS (SELECT prior_micro FROM read_parquet(
-          '/root/repo/target/graft_corpus/q162/nb/meta/*.parquet')),
+          '${Q162Warehouse}/nb/meta/*.parquet')),
         dm AS (SELECT bucket, lr_micro FROM read_parquet(
-          '/root/repo/target/graft_corpus/q162/dsir/model/*.parquet')),
+          '${Q162Warehouse}/dsir/model/*.parquet')),
         bm AS (SELECT rank, left_sym, right_sym FROM read_parquet(
-          '/root/repo/target/graft_corpus/q162/merges/*.parquet')),
+          '${Q162Warehouse}/merges/*.parquet')),
         base AS (SELECT doc_id, source, lang,
           CASE WHEN doc_id % 10 = 9 THEN doc_id - 1 ELSE doc_id END AS kk,
           text FROM documents),
