@@ -1796,7 +1796,7 @@ object TextQueries {
     * exited — so the table must outlive the session. target/ is
     * build-output space (gitignored) and each run replaces the table.
     */
-  private val BpeWarehouse = "/root/repo/target/graft_bpe"
+  private val BpeWarehouse = s"${Catalog.root}/graft_bpe"
 
   /** Stable warehouse root for the unigram-LM tokenizer artifacts
     * (the [[BpeWarehouse]] rationale: the DuckDB oracle re-runs the
@@ -1804,7 +1804,7 @@ object TextQueries {
     * Declared here, BEFORE first use — object vals initialize in
     * source order.
     */
-  private val UnigramWarehouse = "/root/repo/target/graft_unigram"
+  private val UnigramWarehouse = s"${Catalog.root}/graft_unigram"
 
   val q149BpeTokenize = Q("q149_bpe_tokenize",
     // distributed BPE subword tokenization with a TRAIN / APPLY split
@@ -1841,9 +1841,9 @@ object TextQueries {
           concat_ws(" ", slice(col("tokens"), 1, 12)).as("toks_head"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH RECURSIVE
+    Some(raw"""WITH RECURSIVE
         m AS (SELECT rank, left_sym, right_sym FROM
-          read_parquet('/root/repo/target/graft_bpe/merges/*.parquet')),
+          read_parquet('${Catalog.root}/graft_bpe/merges/*.parquet')),
         w AS (SELECT DISTINCT word FROM (SELECT
             unnest(string_split(text, ' ')) AS word FROM documents)
           WHERE length(word) > 0),
@@ -1966,18 +1966,15 @@ object TextQueries {
     (s, d) => {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("text"), col("n_chars"))
-      val marker = BpeWarehouse + "/fixture_q185"
       // marker match alone is not enough: the two model artifacts live
       // in DIFFERENT warehouse roots (graft_bpe + graft_unigram), so a
       // wiped root with a surviving marker must force the retrain, not
       // fail every later pass at loadPieces/loadMerges
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(d) ||
-        scala.util.Try {
-          s.read.parquet(BpeWarehouse + "/merges_q185").schema
-          s.read.parquet(UnigramWarehouse + "/pieces_q185").schema
-        }.isFailure
-      if (fresh) {
+      Catalog.buildOnce(s, BpeWarehouse + "/fixture_q185", d)(
+          scala.util.Try {
+            s.read.parquet(BpeWarehouse + "/merges_q185").schema
+            s.read.parquet(UnigramWarehouse + "/pieces_q185").schema
+          }.isFailure) {
         val trainDocs = docs.filter(col("doc_id") % 3 =!= 0)
           .select(col("doc_id"), col("text"))
         graft.ops.Bpe.saveMerges(s,
@@ -1987,8 +1984,6 @@ object TextQueries {
           graft.ops.UnigramLm.train(s, trainDocs, vocabSize = 24,
             maxPieceLen = 8, emRounds = 3, seedSize = 1000),
           UnigramWarehouse + "/pieces_q185")
-        import s.implicits._
-        Seq(d).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       val ranked = graft.ops.Bpe.loadMerges(s, BpeWarehouse + "/merges_q185")
       val pieces = graft.ops.UnigramLm.loadPieces(s,
@@ -2044,7 +2039,7 @@ object TextQueries {
     },
     Some(s"""WITH RECURSIVE
         m AS (SELECT rank, left_sym, right_sym FROM
-          read_parquet('/root/repo/target/graft_bpe/merges_q185/*.parquet')),
+          read_parquet('${Catalog.root}/graft_bpe/merges_q185/*.parquet')),
         w AS (SELECT DISTINCT word FROM (SELECT
             unnest(string_split(text, ' ')) AS word FROM documents)
           WHERE length(word) > 0),
@@ -2229,7 +2224,7 @@ object TextQueries {
     // the persisted mapping parquet with a recursive CTE over ranks —
     // the repair math is verified cross-engine byte-exactly.
     (s, d) => {
-      val wh = "/root/repo/target/graft_mojibake/mapping"
+      val wh = s"${Catalog.root}/graft_mojibake/mapping"
       graft.ops.Mojibake.saveMapping(s, wh)
       val mapping = graft.ops.Mojibake.loadMapping(s, wh)
       val planted = when(col("doc_id") % 4 === 0, lit(MojiPlants(0)))
@@ -2246,7 +2241,7 @@ object TextQueries {
     },
     Some(s"""WITH RECURSIVE
         m AS (SELECT rank, moji, fixed FROM read_parquet(
-          '/root/repo/target/graft_mojibake/mapping/*.parquet')),
+          '${Catalog.root}/graft_mojibake/mapping/*.parquet')),
         base AS (SELECT doc_id, text || ' ' || CASE
             WHEN doc_id % 4 = 0 THEN '${MojiPlants(0)}'
             WHEN doc_id % 4 = 1 THEN '${MojiPlants(1)}'
@@ -2308,9 +2303,9 @@ object TextQueries {
           expr("(tok_before + n_tokens - 1) div 2048").as("end_seq"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH RECURSIVE
+    Some(raw"""WITH RECURSIVE
         m AS (SELECT rank, left_sym, right_sym FROM
-          read_parquet('/root/repo/target/graft_bpe/merges_q152/*.parquet')),
+          read_parquet('${Catalog.root}/graft_bpe/merges_q152/*.parquet')),
         w AS (SELECT DISTINCT word FROM (SELECT
             unnest(string_split(text, ' ')) AS word FROM documents)
           WHERE length(word) > 0),
@@ -2443,8 +2438,8 @@ object TextQueries {
           AS is_keeper
       FROM f ORDER BY doc_id"""))
 
-  private val NbWarehouse = "/root/repo/target/graft_nb"
-  private val DsirWarehouse = "/root/repo/target/graft_dsir"
+  private val NbWarehouse = s"${Catalog.root}/graft_nb"
+  private val DsirWarehouse = s"${Catalog.root}/graft_dsir"
 
   val q154NbClassifier = Q("q154_nb_classifier",
     // fasttext-style linear classifier gate with a TRAIN / APPLY split
@@ -2474,10 +2469,10 @@ object TextQueries {
           (col("pred_pos") === (col("lang") === "en")).as("correct"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH w AS (SELECT token, weight_micro FROM
-          read_parquet('/root/repo/target/graft_nb/q154/weights/*.parquet')),
+    Some(raw"""WITH w AS (SELECT token, weight_micro FROM
+          read_parquet('${Catalog.root}/graft_nb/q154/weights/*.parquet')),
         m AS (SELECT prior_micro FROM
-          read_parquet('/root/repo/target/graft_nb/q154/meta/*.parquet')),
+          read_parquet('${Catalog.root}/graft_nb/q154/meta/*.parquet')),
         b AS (SELECT doc_id, text, lang FROM documents WHERE doc_id % 3 = 0),
         tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
           FROM b),
@@ -2567,7 +2562,7 @@ object TextQueries {
     // term scores so the per-doc sum is associativity-free; the
     // oracle replays the search from the SAME persisted index parquet.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q157"
+      val wh = s"${Catalog.root}/graft_invidx/q157"
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       graft.ops.InvertedIndex.build(s,
         docs.filter(col("doc_id") % 3 =!= 0), wh)
@@ -2576,11 +2571,11 @@ object TextQueries {
       graft.ops.InvertedIndex.search(s, wh,
         Seq("spark", "query", "merge"), 20)
     },
-    Some("""WITH p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
-          '/root/repo/target/graft_invidx/q157/postings/*/*/*.parquet')),
+    Some(raw"""WITH p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
+          '${Catalog.root}/graft_invidx/q157/postings/*/*/*.parquet')),
         c AS (SELECT n_docs, CAST(sum_dl AS DOUBLE) / n_docs AS avgdl
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q157/corpus/*.parquet')),
+            '${Catalog.root}/graft_invidx/q157/corpus/*.parquet')),
         q AS (SELECT p.*, c.n_docs, c.avgdl FROM p, c
           WHERE term IN ('spark', 'query', 'merge')),
         s AS (SELECT doc_id, tf, dl, n_docs, avgdl,
@@ -2713,14 +2708,14 @@ object TextQueries {
     // batch" yields TWO start positions. Oracle replays the intersect
     // from the same persisted index parquet.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q160"
+      val wh = s"${Catalog.root}/graft_invidx/q160"
       graft.ops.InvertedIndex.build(s,
         Tables.documents(s, d).select(col("doc_id"), col("text")), wh)
       graft.ops.InvertedIndex.phraseSearch(s, wh, Seq("batch", "batch"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH p AS (SELECT term, doc_id, positions FROM read_parquet(
-          '/root/repo/target/graft_invidx/q160/postings/*/*/*.parquet')
+    Some(raw"""WITH p AS (SELECT term, doc_id, positions FROM read_parquet(
+          '${Catalog.root}/graft_invidx/q160/postings/*/*/*.parquet')
           WHERE term = 'batch'),
         s0 AS (SELECT doc_id, positions AS l0 FROM p),
         s1 AS (SELECT doc_id,
@@ -2750,18 +2745,13 @@ object TextQueries {
       // gated content is scoring + selection under the PERSISTED
       // model — which the oracle consumes — so repeat passes charge
       // the apply, not the n-gram distribution re-train.
-      val marker = DsirWarehouse + "/q161_fixture"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(d) ||
-        scala.util.Try(
-          s.read.parquet(DsirWarehouse + "/q161/model").schema).isFailure
-      if (fresh) {
+      Catalog.buildOnce(s, DsirWarehouse + "/q161_fixture", d)(
+          scala.util.Try(
+            s.read.parquet(DsirWarehouse + "/q161/model").schema).isFailure) {
         graft.ops.Dsir.train(s,
           docs.filter(col("lang") === "en").select(col("text")),
           docs.select(col("text")),
           DsirWarehouse + "/q161", 2048)
-        import s.implicits._
-        Seq(d).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       graft.ops.Dsir.selectTop(
           graft.ops.Dsir.score(s,
@@ -2773,8 +2763,8 @@ object TextQueries {
           col("lr_micro"), col("sel_rank"), col("is_selected"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH m AS (SELECT bucket, lr_micro FROM read_parquet(
-          '/root/repo/target/graft_dsir/q161/model/*.parquet')),
+    Some(raw"""WITH m AS (SELECT bucket, lr_micro FROM read_parquet(
+          '${Catalog.root}/graft_dsir/q161/model/*.parquet')),
         d AS (SELECT doc_id, source, lang,
             list_filter(string_split(text, ' '), x -> length(x) > 0) AS t
           FROM documents),
@@ -2858,19 +2848,19 @@ object TextQueries {
     // algebra; the oracle replays BM25 + the span fold from the SAME
     // persisted postings parquet.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q164"
+      val wh = s"${Catalog.root}/graft_invidx/q164"
       graft.ops.InvertedIndex.build(s,
         Tables.documents(s, d).select(col("doc_id"), col("text")), wh)
       graft.ops.InvertedIndex.proximitySearch(s, wh,
         Seq("spark", "query", "merge"), 20)
     },
-    Some("""WITH p AS (SELECT term, doc_id, tf, dl, positions
+    Some(raw"""WITH p AS (SELECT term, doc_id, tf, dl, positions
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q164/postings/*/*/*.parquet')
+            '${Catalog.root}/graft_invidx/q164/postings/*/*/*.parquet')
           WHERE term IN ('spark', 'query', 'merge')),
         c AS (SELECT n_docs, CAST(sum_dl AS DOUBLE) / n_docs AS avgdl
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q164/corpus/*.parquet')),
+            '${Catalog.root}/graft_invidx/q164/corpus/*.parquet')),
         q AS (SELECT p.*, c.n_docs, c.avgdl FROM p, c),
         sdf AS (SELECT doc_id, tf, dl, n_docs, avgdl,
             CAST(count(*) OVER (PARTITION BY term) AS DOUBLE) AS df
@@ -2899,13 +2889,6 @@ object TextQueries {
       SELECT doc_id, n_terms, bm25_micro, min_dist, prox_micro,
         CAST(bm25_micro + prox_micro AS BIGINT) AS score_micro
       FROM f ORDER BY score_micro DESC, doc_id LIMIT 20"""))
-
-  /** q162's bootstrap warehouse under the build-output target/ dir,
-    * made absolute so the DuckDB oracle's read_parquet globs resolve
-    * to the same files from any working directory.
-    */
-  private val Q162Warehouse =
-    new java.io.File("target/graft_corpus/q162").getAbsolutePath
 
   val q162CorpusBuild = Q("q162_corpus_build",
     // FLAGSHIP end-to-end corpus build (SparkEntry.entry):
@@ -2952,7 +2935,7 @@ object TextQueries {
         lit(" &lt;end&gt;</p><footer><a href=\"/p\">Privacy"),
         lit("</a> &nbsp; <a href=\"/t\">Terms</a></footer></body></html>"))
 
-      val wh = Q162Warehouse
+      val wh = s"${Catalog.root}/graft_corpus/q162"
       CorpusIngest.bootstrap(s,
         Tables.documents(s, d).select(col("doc_id"), col("source"),
           col("lang"), canonicalizeUrl(url).as("canon_url"),
@@ -2970,15 +2953,15 @@ object TextQueries {
     },
     Some(raw"""WITH RECURSIVE
         mm AS (SELECT rank, moji, fixed FROM read_parquet(
-          '${Q162Warehouse}/mapping/*.parquet')),
+          '${Catalog.root}/graft_corpus/q162/mapping/*.parquet')),
         nw AS (SELECT token, weight_micro FROM read_parquet(
-          '${Q162Warehouse}/nb/weights/*.parquet')),
+          '${Catalog.root}/graft_corpus/q162/nb/weights/*.parquet')),
         nm AS (SELECT prior_micro FROM read_parquet(
-          '${Q162Warehouse}/nb/meta/*.parquet')),
+          '${Catalog.root}/graft_corpus/q162/nb/meta/*.parquet')),
         dm AS (SELECT bucket, lr_micro FROM read_parquet(
-          '${Q162Warehouse}/dsir/model/*.parquet')),
+          '${Catalog.root}/graft_corpus/q162/dsir/model/*.parquet')),
         bm AS (SELECT rank, left_sym, right_sym FROM read_parquet(
-          '${Q162Warehouse}/merges/*.parquet')),
+          '${Catalog.root}/graft_corpus/q162/merges/*.parquet')),
         base AS (SELECT doc_id, source, lang,
           CASE WHEN doc_id % 10 = 9 THEN doc_id - 1 ELSE doc_id END AS kk,
           text FROM documents),
@@ -3130,7 +3113,7 @@ object TextQueries {
     // the COMPACTED postings parquet, so search-result parity with
     // the generation-per-batch layout is exactly what the gate pins.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q167"
+      val wh = s"${Catalog.root}/graft_invidx/q167"
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       graft.ops.InvertedIndex.build(s,
         docs.filter(col("doc_id") % 3 === 1), wh)
@@ -3146,11 +3129,11 @@ object TextQueries {
       graft.ops.InvertedIndex.search(s, wh,
         Seq("spark", "query", "merge"), 20)
     },
-    Some("""WITH p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
-          '/root/repo/target/graft_invidx/q167/postings/*/*/*.parquet')),
+    Some(raw"""WITH p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
+          '${Catalog.root}/graft_invidx/q167/postings/*/*/*.parquet')),
         c AS (SELECT n_docs, CAST(sum_dl AS DOUBLE) / n_docs AS avgdl
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q167/corpus/*.parquet')),
+            '${Catalog.root}/graft_invidx/q167/corpus/*.parquet')),
         q AS (SELECT p.*, c.n_docs, c.avgdl FROM p, c
           WHERE term IN ('spark', 'query', 'merge')),
         s AS (SELECT doc_id, tf, dl, n_docs, avgdl,
@@ -3181,7 +3164,7 @@ object TextQueries {
     // parquet (compacted batch=0 + the post-compaction batch=3), so
     // what's compared is the physical tree the policy produced.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q171"
+      val wh = s"${Catalog.root}/graft_invidx/q171"
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val ix = graft.ops.InvertedIndex
       ix.build(s, docs.filter(col("doc_id") % 4 === 1), wh)
@@ -3202,11 +3185,11 @@ object TextQueries {
         "post-compaction append must open its own generation")
       ix.search(s, wh, Seq("stream", "hash", "vector"), 20)
     },
-    Some("""WITH p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
-          '/root/repo/target/graft_invidx/q171/postings/*/*/*.parquet')),
+    Some(raw"""WITH p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
+          '${Catalog.root}/graft_invidx/q171/postings/*/*/*.parquet')),
         c AS (SELECT n_docs, CAST(sum_dl AS DOUBLE) / n_docs AS avgdl
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q171/corpus/*.parquet')),
+            '${Catalog.root}/graft_invidx/q171/corpus/*.parquet')),
         q AS (SELECT p.*, c.n_docs, c.avgdl FROM p, c
           WHERE term IN ('stream', 'hash', 'vector')),
         s AS (SELECT doc_id, tf, dl, n_docs, avgdl,
@@ -3242,7 +3225,7 @@ object TextQueries {
     // the post-merge postings parquet — search parity over the tiered
     // tree is exactly what the gate pins.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q190"
+      val wh = s"${Catalog.root}/graft_invidx/q190"
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val ix = graft.ops.InvertedIndex
       ix.build(s, docs.filter(col("doc_id") % 20 < 16), wh)
@@ -3269,11 +3252,11 @@ object TextQueries {
         "post-merge append must open its own generation")
       ix.search(s, wh, Seq("spark", "query", "merge"), 20)
     },
-    Some("""WITH p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
-          '/root/repo/target/graft_invidx/q190/postings/*/*/*.parquet')),
+    Some(raw"""WITH p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
+          '${Catalog.root}/graft_invidx/q190/postings/*/*/*.parquet')),
         c AS (SELECT n_docs, CAST(sum_dl AS DOUBLE) / n_docs AS avgdl
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q190/corpus/*.parquet')),
+            '${Catalog.root}/graft_invidx/q190/corpus/*.parquet')),
         q AS (SELECT p.*, c.n_docs, c.avgdl FROM p, c
           WHERE term IN ('spark', 'query', 'merge')),
         s AS (SELECT doc_id, tf, dl, n_docs, avgdl,
@@ -3309,7 +3292,7 @@ object TextQueries {
     // safe recovery story, not a lossy one). The oracle replays BM25
     // from the post-re-ingest persisted index.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q196"
+      val wh = s"${Catalog.root}/graft_invidx/q196"
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val ix = graft.ops.InvertedIndex
       ix.build(s, docs.filter(col("doc_id") % 3 === 1), wh)
@@ -3331,11 +3314,11 @@ object TextQueries {
           "having rolled back")
       ix.search(s, wh, Seq("spark", "query", "merge"), 20)
     },
-    Some("""WITH p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
-          '/root/repo/target/graft_invidx/q196/postings/*/*/*.parquet')),
+    Some(raw"""WITH p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
+          '${Catalog.root}/graft_invidx/q196/postings/*/*/*.parquet')),
         c AS (SELECT n_docs, CAST(sum_dl AS DOUBLE) / n_docs AS avgdl
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q196/corpus/*.parquet')),
+            '${Catalog.root}/graft_invidx/q196/corpus/*.parquet')),
         q AS (SELECT p.*, c.n_docs, c.avgdl FROM p, c
           WHERE term IN ('spark', 'query', 'merge')),
         s AS (SELECT doc_id, tf, dl, n_docs, avgdl,
@@ -3372,7 +3355,7 @@ object TextQueries {
     // guard). TombstoneSpec pins the crash window, the tiered-merge
     // purge split, and the rollback interplay.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q197"
+      val wh = s"${Catalog.root}/graft_invidx/q197"
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val ix = graft.ops.InvertedIndex
       ix.build(s, docs.filter(col("doc_id") % 3 =!= 0), wh)
@@ -3398,7 +3381,7 @@ object TextQueries {
         "the post-compact delete batch must land")
       // ground-truth equivalence: a from-scratch index on live docs
       // serves bit-identically (globals, df, every micro score)
-      val rebuilt = "/root/repo/target/graft_invidx/q197_rebuild"
+      val rebuilt = s"${Catalog.root}/graft_invidx/q197_rebuild"
       ix.build(s, docs.filter(col("doc_id") % 7 =!= 3 &&
         col("doc_id") % 7 =!= 5), rebuilt)
       val got = snap()
@@ -3408,16 +3391,16 @@ object TextQueries {
         "served-with-tombstones must equal rebuilt-without-deleted")
       ix.search(s, wh, Seq("spark", "query", "merge"), 20)
     },
-    Some("""WITH c AS (SELECT n_docs,
+    Some(raw"""WITH c AS (SELECT n_docs,
             CAST(sum_dl AS DOUBLE) / n_docs AS avgdl, del_epoch
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q197/corpus/*.parquet')),
+            '${Catalog.root}/graft_invidx/q197/corpus/*.parquet')),
         tomb AS (SELECT DISTINCT t.doc_id FROM read_parquet(
-            '/root/repo/target/graft_invidx/q197/tombstones/*/*.parquet',
+            '${Catalog.root}/graft_invidx/q197/tombstones/*/*.parquet',
             hive_partitioning = true) t, c
           WHERE t.epoch <= c.del_epoch),
         p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
-            '/root/repo/target/graft_invidx/q197/postings/*/*/*.parquet')
+            '${Catalog.root}/graft_invidx/q197/postings/*/*/*.parquet')
           WHERE doc_id NOT IN (SELECT doc_id FROM tomb)),
         q AS (SELECT p.*, c.n_docs, c.avgdl FROM p, c
           WHERE term IN ('spark', 'query', 'merge')),
@@ -3453,7 +3436,7 @@ object TextQueries {
     // gate, MUST_NOT anti-join, tombstone NOT-IN behind the committed
     // del_epoch) from the persisted index parquet.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q200"
+      val wh = s"${Catalog.root}/graft_invidx/q200"
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val ix = graft.ops.InvertedIndex
       ix.build(s, docs.filter(col("doc_id") % 3 =!= 0), wh)
@@ -3472,16 +3455,16 @@ object TextQueries {
       ix.booleanSearch(s, wh, must = Seq("spark", "query"),
         should = Seq("merge"), mustNot = Seq("hash"), k = 20)
     },
-    Some("""WITH c AS (SELECT n_docs,
+    Some(raw"""WITH c AS (SELECT n_docs,
             CAST(sum_dl AS DOUBLE) / n_docs AS avgdl, del_epoch
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q200/corpus/*.parquet')),
+            '${Catalog.root}/graft_invidx/q200/corpus/*.parquet')),
         tomb AS (SELECT DISTINCT t.doc_id FROM read_parquet(
-            '/root/repo/target/graft_invidx/q200/tombstones/*/*.parquet',
+            '${Catalog.root}/graft_invidx/q200/tombstones/*/*.parquet',
             hive_partitioning = true) t, c
           WHERE t.epoch <= c.del_epoch),
         p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
-            '/root/repo/target/graft_invidx/q200/postings/*/*/*.parquet')
+            '${Catalog.root}/graft_invidx/q200/postings/*/*/*.parquet')
           WHERE doc_id NOT IN (SELECT doc_id FROM tomb)),
         sc AS (SELECT p.*, c.n_docs, c.avgdl FROM p, c
           WHERE term IN ('spark', 'query', 'merge')),
@@ -3525,53 +3508,47 @@ object TextQueries {
     // generation counts (settled ⇔ n ≥ ratio × newer total, the
     // newest never settled, fire iff ≥ minMerge candidates).
     (s, d) => {
-      val ixWh = "/root/repo/target/graft_invidx/q202"
-      val adcWh = "/root/repo/target/graft_adc/q202"
+      val ixWh = s"${Catalog.root}/graft_invidx/q202"
+      val adcWh = s"${Catalog.root}/graft_adc/q202"
       // the two warehouse lifecycles are the FIXTURE (built once per
       // input, the q192/q195 de-distortion rule); the measured and
       // oracle-gated content is the stats report itself — which is
       // the operational claim: health stats are maintenance-cadence
-      // cheap, not index-rebuild expensive. Marker lands LAST.
-      val marker = s"$ixWh/fixture"
+      // cheap, not index-rebuild expensive.
       // tag versioned r13: the round-13 corpus row adds
       // zero_token_docs and the lock moved to <dir>.__lock — an older
       // fixture must rebuild once so the oracle's column reads hold
-      val tag = s"$d|r13"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(tag) ||
-        graft.ops.InvertedIndex.lastBatch(s, ixWh) < 2L ||
-        graft.ops.AdcIngest.lastBatch(s, adcWh) < 2L ||
-        // a fixture built before the writer-lease contract carries no
-        // fence — rebuild so the lease columns report real lifecycles
-        graft.etl.WriterLease.fenceToken(s, ixWh) == 0L ||
-        graft.etl.WriterLease.fenceToken(s, adcWh) == 0L
-      if (fresh) {
-      // wipe both roots: deletes are irreversible, so a re-built
-      // fixture must start from nothing (build/bootstrap alone would
-      // keep the old tombstone epochs' require-counts from landing)
-      val conf = s.sparkContext.hadoopConfiguration
-      Seq(ixWh, adcWh).foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).delete(hp, true)
-      }
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val ix = graft.ops.InvertedIndex
-      ix.build(s, docs.filter(col("doc_id") % 20 < 16), ixWh)
-      ix.addBatch(s, docs.filter(col("doc_id") % 20 === 16), ixWh, 1L)
-      ix.addBatch(s, docs.filter(col("doc_id") % 20 === 17), ixWh, 2L)
-      require(ix.delete(s, ixWh,
-        docs.filter(col("doc_id") % 11 === 3).select(col("doc_id"))) > 0)
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"))
-      val ai = graft.ops.AdcIngest
-      ai.bootstrap(s, e.filter(col("vec_id") % 20 < 16), adcWh,
-        k = 16, m = 8, ks = 16)
-      require(ai.append(s, e.filter(col("vec_id") % 20 === 16), adcWh, 1L))
-      require(ai.append(s, e.filter(col("vec_id") % 20 === 17), adcWh, 2L))
-      require(ai.delete(s, adcWh,
-        e.filter(col("vec_id") % 9 === 2).select(col("vec_id"))) > 0)
-      import s.implicits._
-      Seq(tag).toDF("sf_dir").write.mode("overwrite").parquet(marker)
+      Catalog.buildOnce(s, s"$ixWh/fixture", s"$d|r13")(
+          graft.ops.InvertedIndex.lastBatch(s, ixWh) < 2L ||
+          graft.ops.AdcIngest.lastBatch(s, adcWh) < 2L ||
+          // a fixture built before the writer-lease contract carries no
+          // fence — rebuild so the lease columns report real lifecycles
+          graft.etl.WriterLease.fenceToken(s, ixWh) == 0L ||
+          graft.etl.WriterLease.fenceToken(s, adcWh) == 0L) {
+        // wipe both roots: deletes are irreversible, so a re-built
+        // fixture must start from nothing (build/bootstrap alone would
+        // keep the old tombstone epochs' require-counts from landing)
+        val conf = s.sparkContext.hadoopConfiguration
+        Seq(ixWh, adcWh).foreach { p =>
+          val hp = new org.apache.hadoop.fs.Path(p)
+          hp.getFileSystem(conf).delete(hp, true)
+        }
+        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+        val ix = graft.ops.InvertedIndex
+        ix.build(s, docs.filter(col("doc_id") % 20 < 16), ixWh)
+        ix.addBatch(s, docs.filter(col("doc_id") % 20 === 16), ixWh, 1L)
+        ix.addBatch(s, docs.filter(col("doc_id") % 20 === 17), ixWh, 2L)
+        require(ix.delete(s, ixWh,
+          docs.filter(col("doc_id") % 11 === 3).select(col("doc_id"))) > 0)
+        val e = Tables.embeddings(s, d)
+          .select(col("vec_id"), col("embedding"))
+        val ai = graft.ops.AdcIngest
+        ai.bootstrap(s, e.filter(col("vec_id") % 20 < 16), adcWh,
+          k = 16, m = 8, ks = 16)
+        require(ai.append(s, e.filter(col("vec_id") % 20 === 16), adcWh, 1L))
+        require(ai.append(s, e.filter(col("vec_id") % 20 === 17), adcWh, 2L))
+        require(ai.delete(s, adcWh,
+          e.filter(col("vec_id") % 9 === 2).select(col("vec_id"))) > 0)
       }
       val st = graft.ops.WarehouseStats.invidx(s, ixWh)
         .unionByName(graft.ops.WarehouseStats.adc(s, adcWh))
@@ -3583,15 +3560,15 @@ object TextQueries {
           "tiered policy as due on both warehouses")
       st
     },
-    Some("""WITH ic AS (SELECT last_batch, del_epoch FROM read_parquet(
-          '/root/repo/target/graft_invidx/q202/corpus/*.parquet')),
+    Some(raw"""WITH ic AS (SELECT last_batch, del_epoch FROM read_parquet(
+          '${Catalog.root}/graft_invidx/q202/corpus/*.parquet')),
         ig AS (SELECT CAST(batch AS BIGINT) AS b, count(*) AS n
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q202/postings/*/*/*.parquet',
+            '${Catalog.root}/graft_invidx/q202/postings/*/*/*.parquet',
             hive_partitioning = true)
           WHERE batch <= (SELECT last_batch FROM ic) GROUP BY 1),
         itomb AS (SELECT DISTINCT t.doc_id FROM read_parquet(
-            '/root/repo/target/graft_invidx/q202/tombstones/*/*.parquet',
+            '${Catalog.root}/graft_invidx/q202/tombstones/*/*.parquet',
             hive_partitioning = true) t
           WHERE t.epoch <= (SELECT del_epoch FROM ic)),
         istats AS (SELECT 'invidx' AS kind,
@@ -3602,7 +3579,7 @@ object TextQueries {
             AS rows_total,
           (SELECT count(*) FROM itomb) AS tombstoned_docs,
           (SELECT count(*) FROM read_parquet(
-              '/root/repo/target/graft_invidx/q202/postings/*/*/*.parquet',
+              '${Catalog.root}/graft_invidx/q202/postings/*/*/*.parquet',
               hive_partitioning = true) p
             WHERE p.batch <= (SELECT last_batch FROM ic)
               AND p.doc_id IN (SELECT doc_id FROM itomb))
@@ -3615,26 +3592,26 @@ object TextQueries {
                     WHERE x.b > g.b)), -1)))
             AS merge_candidates,
           (SELECT CAST(trim(content) AS BIGINT) FROM read_text(
-            '/root/repo/target/graft_invidx/q202.__lock/_FENCE'))
+            '${Catalog.root}/graft_invidx/q202.__lock/_FENCE'))
             AS fence_token,
           CAST(0 AS BIGINT) AS lease_held,
           (SELECT count(*) FROM glob(
-            '/root/repo/target/graft_invidx/q202/postings/.merged-*/_MERGED_IDS'))
+            '${Catalog.root}/graft_invidx/q202/postings/.merged-*/_MERGED_IDS'))
           + (SELECT count(*) FROM glob(
-            '/root/repo/target/graft_invidx/q202/postings/.retired'))
+            '${Catalog.root}/graft_invidx/q202/postings/.retired'))
             AS pending_publishes,
           (SELECT zero_token_docs FROM read_parquet(
-            '/root/repo/target/graft_invidx/q202/corpus/*.parquet'))
+            '${Catalog.root}/graft_invidx/q202/corpus/*.parquet'))
             AS zero_token_docs),
         ac AS (SELECT last_batch, del_epoch FROM read_parquet(
-          '/root/repo/target/graft_adc/q202/meta/*.parquet')),
+          '${Catalog.root}/graft_adc/q202/meta/*.parquet')),
         ag AS (SELECT CAST(batch AS BIGINT) AS b, count(*) AS n
           FROM read_parquet(
-            '/root/repo/target/graft_adc/q202/index/*/*.parquet',
+            '${Catalog.root}/graft_adc/q202/index/*/*.parquet',
             hive_partitioning = true)
           WHERE batch <= (SELECT last_batch FROM ac) GROUP BY 1),
         atomb AS (SELECT DISTINCT t.vec_id FROM read_parquet(
-            '/root/repo/target/graft_adc/q202/tombstones/*/*.parquet',
+            '${Catalog.root}/graft_adc/q202/tombstones/*/*.parquet',
             hive_partitioning = true) t
           WHERE t.epoch <= (SELECT del_epoch FROM ac)),
         astats AS (SELECT 'adc' AS kind,
@@ -3645,7 +3622,7 @@ object TextQueries {
             AS rows_total,
           (SELECT count(*) FROM atomb) AS tombstoned_docs,
           (SELECT count(*) FROM read_parquet(
-              '/root/repo/target/graft_adc/q202/index/*/*.parquet',
+              '${Catalog.root}/graft_adc/q202/index/*/*.parquet',
               hive_partitioning = true) p
             WHERE p.batch <= (SELECT last_batch FROM ac)
               AND p.vec_id IN (SELECT vec_id FROM atomb))
@@ -3658,15 +3635,15 @@ object TextQueries {
                     WHERE x.b > g.b)), -1)))
             AS merge_candidates,
           (SELECT CAST(trim(content) AS BIGINT) FROM read_text(
-            '/root/repo/target/graft_adc/q202.__lock/_FENCE'))
+            '${Catalog.root}/graft_adc/q202.__lock/_FENCE'))
             AS fence_token,
           CAST(0 AS BIGINT) AS lease_held,
           (SELECT count(*) FROM glob(
-            '/root/repo/target/graft_adc/q202/index/.merged-*/_MERGED_IDS'))
+            '${Catalog.root}/graft_adc/q202/index/.merged-*/_MERGED_IDS'))
           + (SELECT count(*) FROM glob(
-            '/root/repo/target/graft_adc/q202/index/.retired'))
+            '${Catalog.root}/graft_adc/q202/index/.retired'))
           + (SELECT count(*) FROM glob(
-            '/root/repo/target/graft_adc/q202.__retrain_pending/_PUBLISH_AFTER'))
+            '${Catalog.root}/graft_adc/q202.__retrain_pending/_PUBLISH_AFTER'))
             AS pending_publishes,
           CAST(0 AS BIGINT) AS zero_token_docs)
       SELECT * FROM istats UNION ALL SELECT * FROM astats
@@ -3698,18 +3675,13 @@ object TextQueries {
     // fast path returns the input buffer untouched); query-side
     // analysis is driver-side on |terms| strings — zero plan cost.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q203"
+      val wh = s"${Catalog.root}/graft_invidx/q203"
       val raw = Tables.documents(s, d).select(col("doc_id"),
         concat(lit("Café «"), upper(col("text")),
           lit("» Fin, SEÑOR №"), col("doc_id")).as("text"))
-      val marker = s"$wh/fixture"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(d) ||
-        graft.etl.Load.readTable(s, s"$wh/corpus").isEmpty
-      if (fresh) {
+      Catalog.buildOnce(s, s"$wh/fixture", d)(
+          graft.etl.Load.readTable(s, s"$wh/corpus").isEmpty) {
         graft.ops.InvertedIndex.build(s, raw, wh) // Unicode default
-        import s.implicits._
-        Seq(d).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       graft.ops.InvertedIndex.search(s, wh,
         Seq("SPARK!", "Query,", "mérge"), 20)
@@ -3769,18 +3741,15 @@ object TextQueries {
     // cadence; the rewrite cost is |indebted generations| only —
     // exactly NOT the full rewrite this operator exists to avoid.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q205"
+      val wh = s"${Catalog.root}/graft_invidx/q205"
       val ix = graft.ops.InvertedIndex
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val victims = docs
         .filter(col("doc_id") % 20 === 16 && col("doc_id") % 2 === 0)
         .select(col("doc_id"))
-      val marker = s"$wh/fixture"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(d) ||
-        scala.util.Try(ix.lastBatch(s, wh)).getOrElse(-1L) != 1L ||
-        graft.etl.WriterLease.fenceToken(s, wh) < 4L
-      if (fresh) {
+      Catalog.buildOnce(s, s"$wh/fixture", d)(
+          scala.util.Try(ix.lastBatch(s, wh)).getOrElse(-1L) != 1L ||
+          graft.etl.WriterLease.fenceToken(s, wh) < 4L) {
         val conf = s.sparkContext.hadoopConfiguration
         val hp = new org.apache.hadoop.fs.Path(wh)
         hp.getFileSystem(conf).delete(hp, true)
@@ -3802,20 +3771,18 @@ object TextQueries {
         require(graft.ops.WarehouseStats.invidx(s, wh).head()
             .getAs[Long]("purge_backlog_rows") == 0L,
           "the backlog must fully drain (the debt was generation-1-only)")
-        import s.implicits._
-        Seq(d).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       graft.ops.WarehouseStats.invidx(s, wh)
     },
-    Some("""WITH ic AS (SELECT last_batch, del_epoch FROM read_parquet(
-          '/root/repo/target/graft_invidx/q205/corpus/*.parquet')),
+    Some(raw"""WITH ic AS (SELECT last_batch, del_epoch FROM read_parquet(
+          '${Catalog.root}/graft_invidx/q205/corpus/*.parquet')),
         ig AS (SELECT CAST(batch AS BIGINT) AS b, count(*) AS n
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q205/postings/*/*/*.parquet',
+            '${Catalog.root}/graft_invidx/q205/postings/*/*/*.parquet',
             hive_partitioning = true)
           WHERE batch <= (SELECT last_batch FROM ic) GROUP BY 1),
         itomb AS (SELECT DISTINCT t.doc_id FROM read_parquet(
-            '/root/repo/target/graft_invidx/q205/tombstones/*/*.parquet',
+            '${Catalog.root}/graft_invidx/q205/tombstones/*/*.parquet',
             hive_partitioning = true) t
           WHERE t.epoch <= (SELECT del_epoch FROM ic))
       SELECT 'invidx' AS kind,
@@ -3826,7 +3793,7 @@ object TextQueries {
           AS rows_total,
         (SELECT count(*) FROM itomb) AS tombstoned_docs,
         (SELECT count(*) FROM read_parquet(
-            '/root/repo/target/graft_invidx/q205/postings/*/*/*.parquet',
+            '${Catalog.root}/graft_invidx/q205/postings/*/*/*.parquet',
             hive_partitioning = true) p
           WHERE p.batch <= (SELECT last_batch FROM ic)
             AND p.doc_id IN (SELECT doc_id FROM itomb))
@@ -3839,15 +3806,15 @@ object TextQueries {
                   WHERE x.b > g.b)), -1)))
           AS merge_candidates,
         (SELECT CAST(trim(content) AS BIGINT) FROM read_text(
-          '/root/repo/target/graft_invidx/q205.__lock/_FENCE')) AS fence_token,
+          '${Catalog.root}/graft_invidx/q205.__lock/_FENCE')) AS fence_token,
         CAST(0 AS BIGINT) AS lease_held,
         (SELECT count(*) FROM glob(
-          '/root/repo/target/graft_invidx/q205/postings/.merged-*/_MERGED_IDS'))
+          '${Catalog.root}/graft_invidx/q205/postings/.merged-*/_MERGED_IDS'))
         + (SELECT count(*) FROM glob(
-          '/root/repo/target/graft_invidx/q205/postings/.retired'))
+          '${Catalog.root}/graft_invidx/q205/postings/.retired'))
           AS pending_publishes,
         (SELECT zero_token_docs FROM read_parquet(
-          '/root/repo/target/graft_invidx/q205/corpus/*.parquet'))
+          '${Catalog.root}/graft_invidx/q205/corpus/*.parquet'))
           AS zero_token_docs"""))
 
   val q207ScriptSearch = Q("q207_script_search",
@@ -3878,7 +3845,7 @@ object TextQueries {
     // fast path untouched); CJK bigrams are the standard storage
     // trade-off every CJK-capable engine makes.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q207"
+      val wh = s"${Catalog.root}/graft_invidx/q207"
       val base = Tables.documents(s, d).select(col("doc_id"),
         concat(
           lit("Привет «"), col("text"), lit("» №"), col("doc_id"),
@@ -3890,15 +3857,9 @@ object TextQueries {
             .otherwise(lit(""))).as("text"))
       val raw = base.unionByName(s.range(3).select(
         (col("id") + 10000000L).as("doc_id"), lit("※ ✦ ❖").as("text")))
-      val marker = s"$wh/fixture"
-      val tag = s"$d|script13"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(tag) ||
-        graft.etl.Load.readTable(s, s"$wh/corpus").isEmpty
-      if (fresh) {
+      Catalog.buildOnce(s, s"$wh/fixture", s"$d|script13")(
+          graft.etl.Load.readTable(s, s"$wh/corpus").isEmpty) {
         graft.ops.InvertedIndex.build(s, raw, wh) // Unicode default
-        import s.implicits._
-        Seq(tag).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       // the three symbol-only documents must surface in the counter —
       // never again a silent empty analysis
@@ -3982,19 +3943,15 @@ object TextQueries {
     // maintenance: publish happens after the reader horizon, and the
     // stats row is the operator's outstanding-snapshot gauge.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q208"
+      val wh = s"${Catalog.root}/graft_invidx/q208"
       val ix = graft.ops.InvertedIndex
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val victims = docs
         .filter(col("doc_id") % 20 === 16 && col("doc_id") % 2 === 0)
         .select(col("doc_id"))
       val retain = 3650L * 24 * 3600 * 1000 // effectively forever
-      val marker = s"$wh/fixture"
-      val tag = s"$d|r13"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(tag) ||
-        scala.util.Try(ix.lastBatch(s, wh)).getOrElse(-1L) != 1L
-      if (fresh) {
+      Catalog.buildOnce(s, s"$wh/fixture", s"$d|r13")(
+          scala.util.Try(ix.lastBatch(s, wh)).getOrElse(-1L) != 1L) {
         val conf = s.sparkContext.hadoopConfiguration
         val hp = new org.apache.hadoop.fs.Path(wh)
         hp.getFileSystem(conf).delete(hp, true)
@@ -4009,8 +3966,6 @@ object TextQueries {
         require(ix.purgeDebt(s, wh, tau = 0.3,
           retainMs = retain) == Seq(1L),
           "exactly the indebted generation must commit a pending")
-        import s.implicits._
-        Seq(tag).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       // serving semantics hold while the retained bytes remain: the
       // cut generation and the tombstoned docs never serve
@@ -4023,16 +3978,16 @@ object TextQueries {
         "the rolled-back generation must not serve while retained")
       graft.ops.WarehouseStats.invidx(s, wh)
     },
-    Some("""WITH ic AS (SELECT last_batch, del_epoch, zero_token_docs
+    Some(raw"""WITH ic AS (SELECT last_batch, del_epoch, zero_token_docs
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q208/corpus/*.parquet')),
+            '${Catalog.root}/graft_invidx/q208/corpus/*.parquet')),
         ig AS (SELECT CAST(batch AS BIGINT) AS b, count(*) AS n
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q208/postings/batch=*/bucket=*/*.parquet',
+            '${Catalog.root}/graft_invidx/q208/postings/batch=*/bucket=*/*.parquet',
             hive_partitioning = true)
           WHERE batch <= (SELECT last_batch FROM ic) GROUP BY 1),
         itomb AS (SELECT DISTINCT t.doc_id FROM read_parquet(
-            '/root/repo/target/graft_invidx/q208/tombstones/*/*.parquet',
+            '${Catalog.root}/graft_invidx/q208/tombstones/*/*.parquet',
             hive_partitioning = true) t
           WHERE t.epoch <= (SELECT del_epoch FROM ic))
       SELECT 'invidx' AS kind,
@@ -4043,7 +3998,7 @@ object TextQueries {
           AS rows_total,
         (SELECT count(*) FROM itomb) AS tombstoned_docs,
         (SELECT count(*) FROM read_parquet(
-            '/root/repo/target/graft_invidx/q208/postings/batch=*/bucket=*/*.parquet',
+            '${Catalog.root}/graft_invidx/q208/postings/batch=*/bucket=*/*.parquet',
             hive_partitioning = true) p
           WHERE p.batch <= (SELECT last_batch FROM ic)
             AND p.doc_id IN (SELECT doc_id FROM itomb))
@@ -4056,13 +4011,13 @@ object TextQueries {
                   WHERE x.b > g.b)), -1)))
           AS merge_candidates,
         (SELECT CAST(trim(content) AS BIGINT) FROM read_text(
-          '/root/repo/target/graft_invidx/q208.__lock/_FENCE'))
+          '${Catalog.root}/graft_invidx/q208.__lock/_FENCE'))
           AS fence_token,
         CAST(0 AS BIGINT) AS lease_held,
         (SELECT count(*) FROM glob(
-          '/root/repo/target/graft_invidx/q208/postings/.merged-*/_MERGED_IDS'))
+          '${Catalog.root}/graft_invidx/q208/postings/.merged-*/_MERGED_IDS'))
         + (SELECT count(*) FROM glob(
-          '/root/repo/target/graft_invidx/q208/postings/.retired'))
+          '${Catalog.root}/graft_invidx/q208/postings/.retired'))
           AS pending_publishes,
         (SELECT zero_token_docs FROM ic) AS zero_token_docs"""))
 
@@ -4088,7 +4043,7 @@ object TextQueries {
     // signal separates when present. At 100 TB: train is one
     // vocab-sized shuffle, scoring rides the corpus scan map-side.
     (s, d) => {
-      val wh = "/root/repo/target/graft_nb/q192"
+      val wh = s"${Catalog.root}/graft_nb/q192"
       val nb = graft.ops.NaiveBayes
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
@@ -4097,17 +4052,12 @@ object TextQueries {
       // rule): the gated content is the PREDICTION against the
       // persisted model — the model is deterministic per input, so
       // repeat passes charge scoring, not a re-train
-      val marker = s"$wh/fixture"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(d) ||
-        graft.etl.Load.readTable(s, s"$wh/weights").isEmpty
-      if (fresh) {
+      Catalog.buildOnce(s, s"$wh/fixture", d)(
+          graft.etl.Load.readTable(s, s"$wh/weights").isEmpty) {
         nb.trainMulti(s,
           docs.filter(col("doc_id") % 3 =!= 0)
             .select(col("tokens"), col("lang").as("label")),
           wh, vocabCap = 512)
-        import s.implicits._
-        Seq(d).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       nb.scoreMulti(s, docs, wh)
         .groupBy(col("lang"), col("pred_label").as("pred_lang"))
@@ -4118,15 +4068,15 @@ object TextQueries {
           col("sum_best_micro"), col("sum_margin_micro"))
         .orderBy(col("lang"), col("pred_lang"))
     },
-    Some("""WITH d AS (SELECT doc_id, lang, text FROM documents),
+    Some(raw"""WITH d AS (SELECT doc_id, lang, text FROM documents),
         toks AS (SELECT doc_id,
             unnest(list_transform(range(1, greatest(length(text) - 1, 1)),
               i -> substr(text, i, 3))) AS token
           FROM d),
         w AS (SELECT token, label, weight_micro FROM read_parquet(
-          '/root/repo/target/graft_nb/q192/weights/*.parquet')),
+          '${Catalog.root}/graft_nb/q192/weights/*.parquet')),
         m AS (SELECT label, prior_micro FROM read_parquet(
-          '/root/repo/target/graft_nb/q192/meta/*.parquet')),
+          '${Catalog.root}/graft_nb/q192/meta/*.parquet')),
         hits AS (SELECT t.doc_id, w.label,
             CAST(sum(w.weight_micro) AS BIGINT) AS s
           FROM toks t JOIN w ON w.token = t.token
@@ -4163,17 +4113,17 @@ object TextQueries {
     // At 100 TB the doc-keyed exchange carries the rare term's
     // candidate set, not the stopwords' corpus-sized lists.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q173"
+      val wh = s"${Catalog.root}/graft_invidx/q173"
       graft.ops.InvertedIndex.build(s,
         Tables.documents(s, d).select(col("doc_id"), col("text")), wh)
       graft.ops.InvertedIndex.maxScoreSearch(s, wh,
         Seq("dup", "scan", "merge"), 10)
     },
-    Some("""WITH p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
-          '/root/repo/target/graft_invidx/q173/postings/*/*/*.parquet')),
+    Some(raw"""WITH p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
+          '${Catalog.root}/graft_invidx/q173/postings/*/*/*.parquet')),
         c AS (SELECT n_docs, CAST(sum_dl AS DOUBLE) / n_docs AS avgdl
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q173/corpus/*.parquet')),
+            '${Catalog.root}/graft_invidx/q173/corpus/*.parquet')),
         q AS (SELECT p.*, c.n_docs, c.avgdl FROM p, c
           WHERE term IN ('dup', 'scan', 'merge')),
         s AS (SELECT doc_id, tf, dl, n_docs, avgdl,
@@ -4577,7 +4527,7 @@ object TextQueries {
     // the batch from the same persisted index parquet with a VALUES
     // query table.
     (s, d) => {
-      val wh = "/root/repo/target/graft_invidx/q179"
+      val wh = s"${Catalog.root}/graft_invidx/q179"
       graft.ops.InvertedIndex.build(s,
         Tables.documents(s, d).select(col("doc_id"), col("text")), wh)
       import s.implicits._
@@ -4587,15 +4537,15 @@ object TextQueries {
         (3L, "spark")).toDF("query_id", "term")
       graft.ops.InvertedIndex.searchBatch(s, wh, queries, 5)
     },
-    Some("""WITH qt (query_id, term) AS (VALUES
+    Some(raw"""WITH qt (query_id, term) AS (VALUES
           (1, 'dup'), (1, 'scan'),
           (2, 'merge'), (2, 'scan'), (2, 'query'),
           (3, 'spark')),
         p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
-          '/root/repo/target/graft_invidx/q179/postings/*/*/*.parquet')),
+          '${Catalog.root}/graft_invidx/q179/postings/*/*/*.parquet')),
         c AS (SELECT n_docs, CAST(sum_dl AS DOUBLE) / n_docs AS avgdl
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q179/corpus/*.parquet')),
+            '${Catalog.root}/graft_invidx/q179/corpus/*.parquet')),
         q AS (SELECT p.*, c.n_docs, c.avgdl FROM p, c
           WHERE term IN (SELECT DISTINCT term FROM qt)),
         s AS (SELECT doc_id, term, tf, dl, n_docs, avgdl,
@@ -4801,14 +4751,10 @@ object TextQueries {
             .otherwise(lit("")),
           when(col("doc_id") % 2 === 0, lit(" Café SEÑOR№"))
             .otherwise(lit(""))).as("text"))
-      val marker = NbWarehouse + "/q209_fixture"
-      val tag = s"$d|r14"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(tag) ||
-        scala.util.Try(s.read.parquet(s"$bpDir/merges").schema).isFailure ||
-        graft.etl.Load.readTable(s, s"$nbDir/weights").isEmpty ||
-        graft.etl.Load.readTable(s, s"$dsDir/model").isEmpty
-      if (fresh) {
+      Catalog.buildOnce(s, NbWarehouse + "/q209_fixture", s"$d|r14")(
+          scala.util.Try(s.read.parquet(s"$bpDir/merges").schema).isFailure ||
+          graft.etl.Load.readTable(s, s"$nbDir/weights").isEmpty ||
+          graft.etl.Load.readTable(s, s"$dsDir/model").isEmpty) {
         graft.ops.NaiveBayes.train(s,
           raw.filter(col("doc_id") % 3 =!= 0)
             .select(col("text"), (col("lang") === "en").as("label")),
@@ -4819,8 +4765,6 @@ object TextQueries {
         val merges = graft.ops.Bpe.train(s,
           raw.filter(col("doc_id") % 3 =!= 0), numMerges = 24, az = az)
         graft.ops.Bpe.saveMerges(s, merges, s"$bpDir/merges")
-        import s.implicits._
-        Seq(tag).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       val ranked = graft.ops.Bpe.loadMerges(s, s"$bpDir/merges")
       val held = raw.filter(col("doc_id") % 3 === 0)
@@ -4845,7 +4789,7 @@ object TextQueries {
           concat_ws(" ", slice(col("tokens"), 1, 12)).as("toks_head"))
       scored.join(bp, Seq("doc_id")).orderBy(col("doc_id"))
     },
-    Some("""WITH RECURSIVE raw AS (SELECT doc_id, lang,
+    Some(raw"""WITH RECURSIVE raw AS (SELECT doc_id, lang,
           'Привет «' || text || '» №' || doc_id
           || CASE WHEN doc_id % 3 = 0 THEN ' МОСКВА москва' ELSE '' END
           || CASE WHEN doc_id % 5 = 0 THEN ' Ελλάδα καφέ' ELSE '' END
@@ -4857,9 +4801,9 @@ object TextQueries {
             '[^\p{L}\p{Nd}]+'), x -> x <> '') AS toks
           FROM raw WHERE doc_id % 3 = 0),
         w AS (SELECT token, weight_micro FROM read_parquet(
-          '/root/repo/target/graft_nb/q209/weights/*.parquet')),
+          '${Catalog.root}/graft_nb/q209/weights/*.parquet')),
         m AS (SELECT prior_micro FROM read_parquet(
-          '/root/repo/target/graft_nb/q209/meta/*.parquet')),
+          '${Catalog.root}/graft_nb/q209/meta/*.parquet')),
         tk AS (SELECT doc_id, unnest(toks) AS token FROM tok),
         j AS (SELECT tk.doc_id, w.weight_micro
           FROM tk LEFT JOIN w USING (token)),
@@ -4869,7 +4813,7 @@ object TextQueries {
             coalesce(sum(weight_micro), 0) AS wsum
           FROM j GROUP BY doc_id),
         dm AS (SELECT bucket, lr_micro FROM read_parquet(
-          '/root/repo/target/graft_dsir/q209/model/*.parquet')),
+          '${Catalog.root}/graft_dsir/q209/model/*.parquet')),
         fe AS (SELECT doc_id, list_concat(toks,
             CASE WHEN len(toks) >= 2 THEN list_transform(
                 generate_series(1, len(toks) - 1),
@@ -4884,7 +4828,7 @@ object TextQueries {
         da AS (SELECT doc_id, sum(dm.lr_micro) AS wsum2
           FROM bb JOIN dm USING (bucket) GROUP BY doc_id),
         mg AS (SELECT rank, left_sym, right_sym FROM read_parquet(
-          '/root/repo/target/graft_bpe/q209/merges/*.parquet')),
+          '${Catalog.root}/graft_bpe/q209/merges/*.parquet')),
         w0 AS (SELECT DISTINCT word FROM
           (SELECT unnest(toks) AS word FROM tok)),
         seg(word, s, r) AS (
@@ -4955,7 +4899,7 @@ object TextQueries {
     // aggregates (never a corpus scan); a release read is the same
     // partition-pruned as-of read any reader pays.
     (s, d) => {
-      val root = "/root/repo/target/graft_release/q210"
+      val root = s"${Catalog.root}/graft_release/q210"
       val (cw, ix, vw, mf) =
         (s"$root/corpus", s"$root/invidx", s"$root/adc", s"$root/releases")
       val docs = Tables.documents(s, d)
@@ -4966,12 +4910,8 @@ object TextQueries {
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val terms = Seq("spark", "query", "merge")
       val rel = graft.ops.Release
-      val marker = s"$root/fixture"
-      val tag = s"$d|r14rel"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(tag) ||
-        scala.util.Try(rel.list(s, mf).count()).getOrElse(0L) != 2L
-      if (fresh) {
+      Catalog.buildOnce(s, s"$root/fixture", s"$d|r14rel")(
+          scala.util.Try(rel.list(s, mf).count()).getOrElse(0L) != 2L) {
         val hp = new org.apache.hadoop.fs.Path(root)
         hp.getFileSystem(s.sparkContext.hadoopConfiguration)
           .delete(hp, true)
@@ -5002,8 +4942,6 @@ object TextQueries {
         graft.ops.CorpusIngest.delete(s, cw, victims)
         graft.ops.AdcIngest.delete(s, vw,
           e.filter(col("vec_id") % 31 === 7).select(col("vec_id")))
-        import s.implicits._
-        Seq(tag).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       // the frozen models a release cites must still fingerprint as
       // recorded — in-path, both releases
@@ -5029,31 +4967,31 @@ object TextQueries {
           "nb_rows", "nb_micro")
         .orderBy(col("release"))
     },
-    Some("""WITH m AS (SELECT * FROM read_parquet(
-          '/root/repo/target/graft_release/q210/releases/*.parquet')),
+    Some(raw"""WITH m AS (SELECT * FROM read_parquet(
+          '${Catalog.root}/graft_release/q210/releases/*.parquet')),
         cdel AS (SELECT del_epoch FROM read_parquet(
-          '/root/repo/target/graft_release/q210/corpus/delmeta/*.parquet')),
+          '${Catalog.root}/graft_release/q210/corpus/delmeta/*.parquet')),
         ctomb AS (SELECT DISTINCT doc_id FROM read_parquet(
-            '/root/repo/target/graft_release/q210/corpus/tombstones/*/*.parquet',
+            '${Catalog.root}/graft_release/q210/corpus/tombstones/*/*.parquet',
             hive_partitioning = true)
           WHERE epoch <= (SELECT del_epoch FROM cdel)),
         corp AS (SELECT CAST(batch AS BIGINT) AS b, doc_id, n_tokens
           FROM read_parquet(
-            '/root/repo/target/graft_release/q210/corpus/corpus/*/*.parquet',
+            '${Catalog.root}/graft_release/q210/corpus/corpus/*/*.parquet',
             hive_partitioning = true)
           WHERE doc_id NOT IN (SELECT doc_id FROM ctomb)),
         ca AS (SELECT m.release, CAST(count(*) AS BIGINT) AS corpus_rows,
             CAST(sum(c.n_tokens) AS BIGINT) AS corpus_tokens
           FROM m JOIN corp c ON c.b <= m.corpus_batch GROUP BY m.release),
         ic AS (SELECT del_epoch FROM read_parquet(
-          '/root/repo/target/graft_release/q210/invidx/corpus/*.parquet')),
+          '${Catalog.root}/graft_release/q210/invidx/corpus/*.parquet')),
         itomb AS (SELECT DISTINCT doc_id FROM read_parquet(
-            '/root/repo/target/graft_release/q210/invidx/tombstones/*/*.parquet',
+            '${Catalog.root}/graft_release/q210/invidx/tombstones/*/*.parquet',
             hive_partitioning = true)
           WHERE epoch <= (SELECT del_epoch FROM ic)),
         sdocs AS (SELECT CAST(batch AS BIGINT) AS b, doc_id, dl
           FROM read_parquet(
-            '/root/repo/target/graft_release/q210/invidx/docs/*/*.parquet',
+            '${Catalog.root}/graft_release/q210/invidx/docs/*/*.parquet',
             hive_partitioning = true)
           WHERE doc_id NOT IN (SELECT doc_id FROM itomb)),
         g AS (SELECT m.release, CAST(count(*) AS BIGINT) AS n_docs,
@@ -5061,7 +4999,7 @@ object TextQueries {
           FROM m JOIN sdocs d ON d.b <= m.text_batch GROUP BY m.release),
         post AS (SELECT m.release, p.term, p.doc_id, p.tf, p.dl
           FROM m JOIN read_parquet(
-            '/root/repo/target/graft_release/q210/invidx/postings/*/*/*.parquet',
+            '${Catalog.root}/graft_release/q210/invidx/postings/*/*/*.parquet',
             hive_partitioning = true) p
             ON CAST(p.batch AS BIGINT) <= m.text_batch
           WHERE p.term IN ('spark', 'query', 'merge')
@@ -5084,14 +5022,14 @@ object TextQueries {
             CAST(sum(bm) AS BIGINT) AS text_micro
           FROM top WHERE rn <= 20 GROUP BY release),
         vmeta AS (SELECT del_epoch FROM read_parquet(
-          '/root/repo/target/graft_release/q210/adc/meta/*.parquet')),
+          '${Catalog.root}/graft_release/q210/adc/meta/*.parquet')),
         vtomb AS (SELECT DISTINCT vec_id FROM read_parquet(
-            '/root/repo/target/graft_release/q210/adc/tombstones/*/*.parquet',
+            '${Catalog.root}/graft_release/q210/adc/tombstones/*/*.parquet',
             hive_partitioning = true)
           WHERE epoch <= (SELECT del_epoch FROM vmeta)),
         vrows AS (SELECT CAST(batch AS BIGINT) AS b, vec_id, cluster_id
           FROM read_parquet(
-            '/root/repo/target/graft_release/q210/adc/index/*/*.parquet',
+            '${Catalog.root}/graft_release/q210/adc/index/*/*.parquet',
             hive_partitioning = true)
           WHERE vec_id NOT IN (SELECT vec_id FROM vtomb)),
         va AS (SELECT m.release, CAST(count(*) AS BIGINT) AS vec_rows,
@@ -5100,7 +5038,7 @@ object TextQueries {
         nb AS (SELECT CAST(count(*) AS BIGINT) AS nb_rows,
             CAST(sum(weight_micro) AS BIGINT) AS nb_micro
           FROM read_parquet(
-            '/root/repo/target/graft_release/q210/corpus/nb/weights/*.parquet'))
+            '${Catalog.root}/graft_release/q210/corpus/nb/weights/*.parquet'))
       SELECT m.release, m.corpus_batch, ca.corpus_rows, ca.corpus_tokens,
         m.text_batch, ta.text_hits, ta.text_micro,
         m.vec_batch, m.vec_model_epoch, va.vec_rows, va.vec_cid_sum,

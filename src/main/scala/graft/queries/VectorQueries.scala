@@ -30,12 +30,12 @@ object VectorQueries {
     * has exited. target/ is build-output space (gitignored); each run
     * replaces its model table.
     */
-  private val CentroidWh = "/root/repo/target/graft_centroids"
+  private val CentroidWh = s"${Catalog.root}/graft_centroids"
 
   /** Warehouse root for trained PQ codebooks (q163 — same oracle
     * lifetime rationale as [[CentroidWh]]).
     */
-  private val PqWh = "/root/repo/target/graft_pq"
+  private val PqWh = s"${Catalog.root}/graft_pq"
 
   /** Codegen'd native dot product (graft.functions.VecDot) — the HOF
     * form `aggregate(zip_with(...))` is interpreted and dominated the
@@ -457,7 +457,7 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_centroids/q141/*.parquet')),
+            '${Catalog.root}/graft_centroids/q141/*.parquet')),
         sim AS (SELECT e.vec_id, e.embedding, e.nrm, c.cid,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY ${duckDot("e.embedding", "c.ce")} / (e.nrm * c.cn) DESC,
@@ -538,7 +538,7 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_centroids/q148/*.parquet')),
+            '${Catalog.root}/graft_centroids/q148/*.parquet')),
         sim AS (SELECT e.vec_id, e.embedding, e.nrm, c.cid,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY ${duckDot("e.embedding", "c.ce")} / (e.nrm * c.cn) DESC,
@@ -610,7 +610,7 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_centroids/q150/*.parquet')),
+            '${Catalog.root}/graft_centroids/q150/*.parquet')),
         sim AS (SELECT e.vec_id, e.embedding, e.nrm, c.cid,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY ${duckDot("e.embedding", "c.ce")} / (e.nrm * c.cn) DESC,
@@ -710,7 +710,7 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_centroids/q156/*.parquet')),
+            '${Catalog.root}/graft_centroids/q156/*.parquet')),
         sim AS (SELECT e.vec_id, c.cid,
           ${duckDot("e.embedding", "c.ce")} / (e.nrm * c.cn) AS cos_val,
           row_number() OVER (PARTITION BY e.vec_id
@@ -784,9 +784,9 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_centroids/q163/*.parquet')),
+            '${Catalog.root}/graft_centroids/q163/*.parquet')),
         cb AS (SELECT sub, code_id, cw FROM read_parquet(
-          '/root/repo/target/graft_pq/q163/*.parquet')),
+          '${Catalog.root}/graft_pq/q163/*.parquet')),
         sim AS (SELECT e.vec_id, e.embedding, e.nrm, c.cid,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY ${duckDot("e.embedding", "c.ce")} / (e.nrm * c.cn) DESC,
@@ -906,9 +906,9 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_centroids/q170/*.parquet')),
+            '${Catalog.root}/graft_centroids/q170/*.parquet')),
         cb AS (SELECT sub, code_id, cw FROM read_parquet(
-          '/root/repo/target/graft_pq/q170/*.parquet')),
+          '${Catalog.root}/graft_pq/q170/*.parquet')),
         sim AS (SELECT e.vec_id, e.embedding, e.nrm, c.cid,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY ${duckDot("e.embedding", "c.ce")} / (e.nrm * c.cn) DESC,
@@ -1123,7 +1123,7 @@ object VectorQueries {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           norm(col("embedding")).as("nrm"))
-      val wh = "/root/repo/target/graft_adc/q172"
+      val wh = s"${Catalog.root}/graft_adc/q172"
       // Bootstrap (model train + batch=0 encode) ONCE per fixture
       // input (q168's marker pattern); every later pass exercises the
       // PRODUCTION lifecycle this gate exists for — rollback to
@@ -1131,15 +1131,10 @@ object VectorQueries {
       // refusal — so the bench measures the O(batch) ingest, not the
       // train. Bootstrap fully wipes the dir, so a marker mismatch
       // can never resurrect a stale generation.
-      val marker = s"$wh/fixture"
-      val needBootstrap = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(d) ||
-        scala.util.Try(graft.ops.AdcIngest.rollback(s, wh, 0L)).isFailure
-      if (needBootstrap) {
+      Catalog.buildOnce(s, s"$wh/fixture", d)(
+          scala.util.Try(graft.ops.AdcIngest.rollback(s, wh, 0L)).isFailure) {
         graft.ops.AdcIngest.bootstrap(s,
           e.filter(col("vec_id") % 5 =!= 2), wh, k = 16, m = 8, ks = 16)
-        import s.implicits._
-        Seq(d).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       require(graft.ops.AdcIngest.append(s,
         e.filter(col("vec_id") % 5 === 2), wh, 1L), "batch 1 must land")
@@ -1170,9 +1165,9 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_adc/q172/centroids/*.parquet')),
+            '${Catalog.root}/graft_adc/q172/centroids/*.parquet')),
         cb AS (SELECT sub, code_id, cw FROM read_parquet(
-          '/root/repo/target/graft_adc/q172/codebooks/*.parquet')),
+          '${Catalog.root}/graft_adc/q172/codebooks/*.parquet')),
         sim AS (SELECT e.vec_id, e.embedding, e.nrm, c.cid,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY ${duckDot("e.embedding", "c.ce")} / (e.nrm * c.cn) DESC,
@@ -1284,13 +1279,8 @@ object VectorQueries {
             .otherwise(col("embedding")).as("embedding"))
         .withColumn("nrm", norm(col("embedding")))
         .withColumn("gen", pmod(col("vec_id"), lit(3L)))
-      val wh = "/root/repo/target/graft_adc/q204"
+      val wh = s"${Catalog.root}/graft_adc/q204"
       val ai = graft.ops.AdcIngest
-      val marker = s"$wh/fixture"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(d) ||
-        scala.util.Try(ai.lastBatch(s, wh)).getOrElse(-1L) != 2L ||
-        ai.modelEpoch(s, wh) != 1L
       // recall@k of the warehouse's ADC serving against exact cosine
       // over the live universe, under the models CURRENTLY persisted
       // at wh — measured pre- and post-retrain with the same queries
@@ -1321,7 +1311,9 @@ object VectorQueries {
           Seq("query_id", "neighbor_id"))
           .agg(coalesce(sum(lit(1000000L / k)), lit(0L))).head().getLong(0)
       }
-      if (fresh) {
+      Catalog.buildOnce(s, s"$wh/fixture", d)(
+          scala.util.Try(ai.lastBatch(s, wh)).getOrElse(-1L) != 2L ||
+          ai.modelEpoch(s, wh) != 1L) {
         ai.bootstrap(s, uni.filter(col("gen") === 0)
           .select(col("vec_id"), col("embedding")), wh,
           k = 16, m = 8, ks = 16)
@@ -1345,8 +1337,6 @@ object VectorQueries {
           "the high-water mark must survive and the model epoch advance")
         require(scala.util.Try(ai.readAsOf(s, wh, 1L)).isFailure,
           "a cross-epoch as-of cut must be refused after retrain")
-        import s.implicits._
-        Seq(d).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       // served output every pass: post-retrain ADC top-3 for fixed
       // drifted-wave queries — the oracle re-derives it from the
@@ -1382,9 +1372,9 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_adc/q204/centroids/*.parquet')),
+            '${Catalog.root}/graft_adc/q204/centroids/*.parquet')),
         cb AS (SELECT sub, code_id, cw FROM read_parquet(
-          '/root/repo/target/graft_adc/q204/codebooks/*.parquet')),
+          '${Catalog.root}/graft_adc/q204/codebooks/*.parquet')),
         sim AS (SELECT e.vec_id, e.embedding, e.nrm, c.cid,
           row_number() OVER (PARTITION BY e.vec_id
             ORDER BY ${duckDot("e.embedding", "c.ce")} / (e.nrm * c.cn) DESC,
@@ -1538,7 +1528,7 @@ object VectorQueries {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           norm(col("embedding")).as("nrm"))
-      val wh = "/root/repo/target/graft_adc/q180"
+      val wh = s"${Catalog.root}/graft_adc/q180"
       val ai = graft.ops.AdcIngest
       ai.bootstrap(s, e.filter(col("vec_id") % 4 === 1), wh,
         k = 16, m = 8, ks = 16)
@@ -1582,11 +1572,11 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_adc/q180/centroids/*.parquet')),
+            '${Catalog.root}/graft_adc/q180/centroids/*.parquet')),
         cb AS (SELECT sub, code_id, cw FROM read_parquet(
-          '/root/repo/target/graft_adc/q180/codebooks/*.parquet')),
+          '${Catalog.root}/graft_adc/q180/codebooks/*.parquet')),
         idx AS (SELECT vec_id, cluster_id, codes, vn FROM read_parquet(
-          '/root/repo/target/graft_adc/q180/index/*/*.parquet')),
+          '${Catalog.root}/graft_adc/q180/index/*/*.parquet')),
         q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
               FROM e WHERE vec_id < 4),
         probes AS (SELECT query_id, qe, qn, cluster_id FROM (
@@ -1650,7 +1640,7 @@ object VectorQueries {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           norm(col("embedding")).as("nrm"))
-      val wh = "/root/repo/target/graft_adc/q191"
+      val wh = s"${Catalog.root}/graft_adc/q191"
       val ai = graft.ops.AdcIngest
       ai.bootstrap(s, e.filter(col("vec_id") % 20 < 16), wh,
         k = 16, m = 8, ks = 16)
@@ -1704,11 +1694,11 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_adc/q191/centroids/*.parquet')),
+            '${Catalog.root}/graft_adc/q191/centroids/*.parquet')),
         cb AS (SELECT sub, code_id, cw FROM read_parquet(
-          '/root/repo/target/graft_adc/q191/codebooks/*.parquet')),
+          '${Catalog.root}/graft_adc/q191/codebooks/*.parquet')),
         idx AS (SELECT vec_id, cluster_id, codes, vn FROM read_parquet(
-          '/root/repo/target/graft_adc/q191/index/*/*.parquet')),
+          '${Catalog.root}/graft_adc/q191/index/*/*.parquet')),
         q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
               FROM e WHERE vec_id < 4),
         probes AS (SELECT query_id, qe, qn, cluster_id FROM (
@@ -1772,7 +1762,7 @@ object VectorQueries {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           norm(col("embedding")).as("nrm"))
-      val wh = "/root/repo/target/graft_adc/q198"
+      val wh = s"${Catalog.root}/graft_adc/q198"
       val ai = graft.ops.AdcIngest
       ai.bootstrap(s, e.filter(col("vec_id") % 5 =!= 0), wh,
         k = 16, m = 8, ks = 16)
@@ -1816,17 +1806,17 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_adc/q198/centroids/*.parquet')),
+            '${Catalog.root}/graft_adc/q198/centroids/*.parquet')),
         cb AS (SELECT sub, code_id, cw FROM read_parquet(
-          '/root/repo/target/graft_adc/q198/codebooks/*.parquet')),
+          '${Catalog.root}/graft_adc/q198/codebooks/*.parquet')),
         m AS (SELECT del_epoch FROM read_parquet(
-          '/root/repo/target/graft_adc/q198/meta/*.parquet')),
+          '${Catalog.root}/graft_adc/q198/meta/*.parquet')),
         tomb AS (SELECT DISTINCT t.vec_id FROM read_parquet(
-            '/root/repo/target/graft_adc/q198/tombstones/*/*.parquet',
+            '${Catalog.root}/graft_adc/q198/tombstones/*/*.parquet',
             hive_partitioning = true) t, m
           WHERE t.epoch <= m.del_epoch),
         idx AS (SELECT vec_id, cluster_id, codes, vn FROM read_parquet(
-            '/root/repo/target/graft_adc/q198/index/*/*.parquet')
+            '${Catalog.root}/graft_adc/q198/index/*/*.parquet')
           WHERE vec_id NOT IN (SELECT vec_id FROM tomb)),
         q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
               FROM e WHERE vec_id < 4),
@@ -1893,7 +1883,7 @@ object VectorQueries {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), col("label"),
           norm(col("embedding")).as("nrm"))
-      val wh = "/root/repo/target/graft_adc/q201"
+      val wh = s"${Catalog.root}/graft_adc/q201"
       val ai = graft.ops.AdcIngest
       ai.bootstrap(s,
         e.filter(col("vec_id") % 5 =!= 0)
@@ -1929,11 +1919,11 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_adc/q201/centroids/*.parquet')),
+            '${Catalog.root}/graft_adc/q201/centroids/*.parquet')),
         cb AS (SELECT sub, code_id, cw FROM read_parquet(
-          '/root/repo/target/graft_adc/q201/codebooks/*.parquet')),
+          '${Catalog.root}/graft_adc/q201/codebooks/*.parquet')),
         idx AS (SELECT vec_id, cluster_id, codes, vn FROM read_parquet(
-            '/root/repo/target/graft_adc/q201/index/*/*.parquet')
+            '${Catalog.root}/graft_adc/q201/index/*/*.parquet')
           WHERE label = 2),
         q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
               FROM e WHERE vec_id < 4),
@@ -2021,16 +2011,11 @@ object VectorQueries {
                 when(k.cast(LongType) === pmod(col("vec_id"), lit(8L)),
                   lit(0.05)).otherwise(lit(0.0))).cast(FloatType)))
             .otherwise(col("embedding")).as("embedding"))
-      val wh = "/root/repo/target/graft_adc/q193"
+      val wh = s"${Catalog.root}/graft_adc/q193"
       val ai = graft.ops.AdcIngest
-      val marker = s"$wh/fixture"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(d) ||
-        scala.util.Try(ai.index(s, wh).schema).isFailure
-      if (fresh) {
+      Catalog.buildOnce(s, s"$wh/fixture", d)(
+          scala.util.Try(ai.index(s, wh).schema).isFailure) {
         ai.bootstrap(s, train, wh, k = 16, m = 8, ks = 16)
-        import s.implicits._
-        Seq(d).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       val cdf = {
         import s.implicits._
@@ -2089,11 +2074,11 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_adc/q193/centroids/*.parquet')),
+            '${Catalog.root}/graft_adc/q193/centroids/*.parquet')),
         cb AS (SELECT sub, code_id, cw FROM read_parquet(
-          '/root/repo/target/graft_adc/q193/codebooks/*.parquet')),
+          '${Catalog.root}/graft_adc/q193/codebooks/*.parquet')),
         idx AS (SELECT vec_id, cluster_id, codes, vn FROM read_parquet(
-          '/root/repo/target/graft_adc/q193/index/*/*.parquet')),
+          '${Catalog.root}/graft_adc/q193/index/*/*.parquet')),
         q AS (SELECT eval_id AS query_id, pe AS qe,
             sqrt(${duckDot("pe", "pe")}) AS qn FROM ev),
         probes AS (SELECT query_id, qe, qn, cluster_id FROM (
@@ -2162,21 +2147,16 @@ object VectorQueries {
             .otherwise(col("embedding")).as("embedding"))
         .withColumn("nrm", norm(col("embedding")))
         .withColumn("gen", pmod(col("vec_id"), lit(3L)))
-      val wh = "/root/repo/target/graft_adc/q194"
+      val wh = s"${Catalog.root}/graft_adc/q194"
       val ai = graft.ops.AdcIngest
-      val marker = s"$wh/fixture"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(d) ||
-        scala.util.Try(ai.lastBatch(s, wh)).getOrElse(-1L) != 2L
-      if (fresh) {
+      Catalog.buildOnce(s, s"$wh/fixture", d)(
+          scala.util.Try(ai.lastBatch(s, wh)).getOrElse(-1L) != 2L) {
         ai.bootstrap(s, uni.filter(col("gen") === 0)
           .select(col("vec_id"), col("embedding")), wh, k = 16, m = 8, ks = 16)
         ai.append(s, uni.filter(col("gen") === 1)
           .select(col("vec_id"), col("embedding")), wh, 1L)
         ai.append(s, uni.filter(col("gen") === 2)
           .select(col("vec_id"), col("embedding")), wh, 2L)
-        import s.implicits._
-        Seq(d).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       val cdf = {
         import s.implicits._
@@ -2249,12 +2229,12 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_adc/q194/centroids/*.parquet')),
+            '${Catalog.root}/graft_adc/q194/centroids/*.parquet')),
         cb AS (SELECT sub, code_id, cw FROM read_parquet(
-          '/root/repo/target/graft_adc/q194/codebooks/*.parquet')),
+          '${Catalog.root}/graft_adc/q194/codebooks/*.parquet')),
         idx AS (SELECT vec_id, cluster_id, codes, vn, CAST(batch AS BIGINT) AS batch
           FROM read_parquet(
-            '/root/repo/target/graft_adc/q194/index/*/*.parquet',
+            '${Catalog.root}/graft_adc/q194/index/*/*.parquet',
             hive_partitioning = true)),
         probes AS (SELECT query_id, qe, qn, cluster_id FROM (
             SELECT q.query_id, q.qe, q.qn, c.cid AS cluster_id,
@@ -2356,16 +2336,11 @@ object VectorQueries {
       // work is the cluster-pruned index probe plus ONE embedding
       // fetch of the nq×8 window; the MMR steps below touch nq×8
       // rows regardless of corpus size.
-      val wh = "/root/repo/target/graft_adc/q181"
+      val wh = s"${Catalog.root}/graft_adc/q181"
       val ai = graft.ops.AdcIngest
-      val marker = s"$wh/fixture"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(d) ||
-        scala.util.Try(ai.index(s, wh).schema).isFailure
-      if (fresh) {
+      Catalog.buildOnce(s, s"$wh/fixture", d)(
+          scala.util.Try(ai.index(s, wh).schema).isFailure) {
         ai.bootstrap(s, e, wh, k = 16, m = 8, ks = 16)
-        import s.implicits._
-        Seq(d).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       val cdf = {
         import s.implicits._
@@ -2445,11 +2420,11 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_adc/q181/centroids/*.parquet')),
+            '${Catalog.root}/graft_adc/q181/centroids/*.parquet')),
         cb AS (SELECT sub, code_id, cw FROM read_parquet(
-          '/root/repo/target/graft_adc/q181/codebooks/*.parquet')),
+          '${Catalog.root}/graft_adc/q181/codebooks/*.parquet')),
         idx AS (SELECT vec_id, cluster_id, codes, vn FROM read_parquet(
-          '/root/repo/target/graft_adc/q181/index/*/*.parquet')),
+          '${Catalog.root}/graft_adc/q181/index/*/*.parquet')),
         probes AS (SELECT query_id, qe, qn, cluster_id FROM (
             SELECT q.query_id, q.qe, q.qn, c.cid AS cluster_id,
               row_number() OVER (PARTITION BY q.query_id
@@ -2645,8 +2620,8 @@ object VectorQueries {
     // each side is the index-accelerated plan it was gated with
     // individually; fusion moves 2k rank rows.
     (s, d) => {
-      val whIx = "/root/repo/target/graft_invidx/q184"
-      val whAdc = "/root/repo/target/graft_adc/q184"
+      val whIx = s"${Catalog.root}/graft_invidx/q184"
+      val whAdc = s"${Catalog.root}/graft_adc/q184"
       val ix = graft.ops.InvertedIndex
       val ai = graft.ops.AdcIngest
       val e = Tables.embeddings(s, d)
@@ -2661,22 +2636,17 @@ object VectorQueries {
       // driver's cross-SF sequence) can never serve a stale
       // generation; a damaged tree (schema probe fails) also forces
       // the rebuild rather than a confusing downstream read error.
-      val marker = s"$whAdc/fixture"
-      val fresh = !scala.util.Try(s.read.parquet(marker).head()
-          .getString(0)).toOption.contains(d) ||
-        scala.util.Try {
-          s.read.parquet(s"$whIx/postings").schema
-          ai.index(s, whAdc).schema
-        }.isFailure
-      if (fresh) {
+      Catalog.buildOnce(s, s"$whAdc/fixture", d)(
+          scala.util.Try {
+            s.read.parquet(s"$whIx/postings").schema
+            ai.index(s, whAdc).schema
+          }.isFailure) {
         ix.build(s,
           Tables.documents(s, d).select(col("doc_id"), col("text")), whIx)
         ai.bootstrap(s, e.filter(col("vec_id") % 3 =!= 0), whAdc,
           k = 16, m = 8, ks = 16)
         require(ai.append(s, e.filter(col("vec_id") % 3 === 0), whAdc, 1L),
           "dense batch 1 must land")
-        import s.implicits._
-        Seq(d).toDF("sf_dir").write.mode("overwrite").parquet(marker)
       }
       val lex = ix.search(s, whIx, Seq("dup", "scan", "merge"), 20)
         // rank over the ≤20 search results, ordered explicitly then
@@ -2710,10 +2680,10 @@ object VectorQueries {
         .limit(15)
     },
     Some(s"""WITH p AS (SELECT term, doc_id, tf, dl FROM read_parquet(
-          '/root/repo/target/graft_invidx/q184/postings/*/*/*.parquet')),
+          '${Catalog.root}/graft_invidx/q184/postings/*/*/*.parquet')),
         c AS (SELECT n_docs, CAST(sum_dl AS DOUBLE) / n_docs AS avgdl
           FROM read_parquet(
-            '/root/repo/target/graft_invidx/q184/corpus/*.parquet')),
+            '${Catalog.root}/graft_invidx/q184/corpus/*.parquet')),
         lq AS (SELECT p.*, c.n_docs, c.avgdl FROM p, c
           WHERE term IN ('dup', 'scan', 'merge')),
         ls AS (SELECT doc_id, tf, dl, n_docs, avgdl,
@@ -2735,11 +2705,11 @@ object VectorQueries {
         cents AS (SELECT CAST(cluster_id AS BIGINT) AS cid, embedding AS ce,
             sqrt(${duckDot("embedding", "embedding")}) AS cn
           FROM read_parquet(
-            '/root/repo/target/graft_adc/q184/centroids/*.parquet')),
+            '${Catalog.root}/graft_adc/q184/centroids/*.parquet')),
         cb AS (SELECT sub, code_id, cw FROM read_parquet(
-          '/root/repo/target/graft_adc/q184/codebooks/*.parquet')),
+          '${Catalog.root}/graft_adc/q184/codebooks/*.parquet')),
         idx AS (SELECT vec_id, cluster_id, codes, vn FROM read_parquet(
-          '/root/repo/target/graft_adc/q184/index/*/*.parquet')),
+          '${Catalog.root}/graft_adc/q184/index/*/*.parquet')),
         q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
               FROM e WHERE vec_id = 0),
         probes AS (SELECT query_id, qe, qn, cluster_id FROM (

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.ops.CorpusIngest
+import graft.queries.Catalog
 import graft.tools.PlanAudit
 
 /** The catalog-wide checks, read from ONE pass over the catalog in name
@@ -161,6 +162,13 @@ class CatalogSpec extends SparkSpec {
     val unchecked = reading -- fixedPathQueries
     assert(reading.nonEmpty && unchecked.isEmpty,
       s"not in the re-run set: ${unchecked.toSeq.sorted}")
+    // every target/ warehouse an oracle reads sits under the one root
+    val outside = SparkEntry.oracleSql.toSeq.flatMap { case (name, sql) =>
+      "'([^']*/target/graft_[^']*)'".r.findAllMatchIn(sql).map(_.group(1))
+        .filterNot(_.startsWith(Catalog.root + "/")).map(p => s"$name: $p")
+    }
+    assert(outside.isEmpty, s"not under ${Catalog.root}:\n" +
+      outside.sorted.mkString("\n"))
   }
 
   test("every fixed-path query is re-entrant in-session, no manual cleanup") {
